@@ -1,23 +1,24 @@
 #!/usr/bin/env python3
-"""The repository benchmark: the SBOM pipeline timed end to end and by layer.
+"""The repository benchmark: the SBOM pipeline and the query registry, timed
+end to end and by layer.
 
 Usage (from the repository root)::
 
-    python3 perfbench/run.py --workload sbom_merge --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload sbom_merge --seed 1 --seconds 15 --trace 0
 
-Each run generates its workload's corpus from ``--seed`` into a private
-directory under ``.perfbench_runs/``, starts a ``local[N]`` Spark session
-(``N`` = usable CPUs) and a loopback ClickHouse endpoint, and runs a closed
-loop of pipeline passes: one client starts the next pass only after the
-previous one has finished.  The first passes warm the JVM and are thrown
-away; the timed passes follow for ``--seconds`` seconds of pass time.
-Every pass's outputs are checked against a pure-Python oracle, outside the
-timings.
+Each run generates its workload's inputs from ``--seed`` into a private
+directory under ``.perfbench_runs/`` (an SBOM corpus, or the tables the
+registry queries read), starts a ``local[N]`` Spark session (``N`` = usable
+CPUs) and a loopback ClickHouse endpoint, and runs a closed loop of passes:
+one client starts the next pass only after the previous one has finished.
+The first passes warm the JVM and are thrown away; the timed passes follow
+for ``--seconds`` seconds of pass time.  Every pass's outputs are checked
+against an oracle (pure Python for the SBOM pipeline, DuckDB for the
+queries), outside the timings.
 
-``--trace 0`` prints the end-to-end metrics; ``--trace 1`` adds one
-instrumented pass and one traced pass and prints the per-layer metrics.
-The last line of standard output is one JSON object:
-``{"correct", "attempted", "failed", "metrics"}``.
+``--trace 0`` prints the end-to-end metrics; ``--trace 1`` adds traced
+passes and prints the per-layer metrics.  The last line of standard output
+is one JSON object: ``{"correct", "attempted", "failed", "metrics"}``.
 """
 
 from __future__ import annotations
@@ -33,20 +34,18 @@ import time
 import traceback
 import uuid
 
+import tables
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 RUNS_DIR = os.path.join(ROOT, ".perfbench_runs")
 
-WARMUP_PASSES = 2  # with the C1-only JIT, passes level off after the first (see README)
 MIN_TIMED_PASSES = 3
-PREFIX_ROUNDS = 3  # the traced pass times each pipeline prefix this often
-DRIVER_MEMORY = "2g"
 
 END_TO_END = {
     "setup_s": "s",
     "pass_s": "s",
     "input_mb_per_s": "MB/s",
-    "lake_bytes_per_row": "B",
 }
 PER_LAYER = {
     "session.import_s": "s",
@@ -77,14 +76,25 @@ PER_LAYER = {
     "io.sinks.lake_write_s": "s",
     "io.sinks.lake_files": "count",
     "io.sinks.lake_bytes": "B",
+    "io.sinks.lake_bytes_per_row": "B",
     "io.clickhouse.insert_s": "s",
     "io.clickhouse.requests": "count",
     "io.clickhouse.bytes_posted": "B",
     "io.clickhouse.rows_acked": "count",
     "io.clickhouse.failed_requests": "count",
+    "queries.builder_s": "s",
+    "queries.exec_s": "s",
+    "queries.plan_s": "s",
+    "queries.builder_jobs": "count",
+    "queries.exec_jobs": "count",
+    "queries.shuffle_bytes": "B",
+    "queries.spill_bytes": "B",
+    "queries.persistent_rdds": "count",
+    **{f"queries.{q}.{part}": "s" for q in sorted(tables.QUERIES) for part in ("builder_s", "exec_s")},
     "trace.pass_s": "s",
     "trace.overhead_s": "s",
 }
+WORKLOADS = ["sbom_merge", "registry_headline", "sbom_normal"]
 
 
 def process_age() -> float:
@@ -103,23 +113,23 @@ def program_present() -> bool:
 
 
 def configure_env(run_dir: str) -> None:
-    """Keep every file Spark and Python write inside the run directory, and
-    fix the JVM settings the timings depend on.
+    """Keep every file Spark and Python write inside the run directory.
 
-    ``TieredStopAtLevel=1`` stops the JIT at its first compiler: passes are
-    then steady from the second pass on.  With the default two-level JIT,
-    passes kept getting faster in steps until the 8th-10th pass, at a
-    different pass in each run, which is more warm-up than a run can afford.
+    The JVM keeps its default JIT and the library's default heap; the only
+    JVM option is ``-XX:-UsePerfData``, which stops it writing its
+    performance-counter file outside the run directory.
     """
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ.update(
         TMPDIR=tmp,
-        JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -XX:TieredStopAtLevel=1",
+        JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
         SPARK_LOCAL_DIRS=os.path.join(run_dir, "spark-local"),
         SPARK_GRAFT_CPUS=str(usable_cpus()),
-        SPARK_DRIVER_MEMORY=DRIVER_MEMORY,
+        # Spark's Python workers (UDFs, Python data sources) import the engine too.
+        PYTHONPATH=os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")])),
     )
+    os.environ.pop("SPARK_DRIVER_MEMORY", None)
 
 
 def setup_session():
@@ -132,6 +142,7 @@ def setup_session():
     import clickbom_spark.engine  # noqa: F401
     import clickbom_spark.io.clickhouse  # noqa: F401
     import clickbom_spark.io.sinks  # noqa: F401
+    import clickbom_spark.queries  # noqa: F401
     from clickbom_spark.session import get_spark
 
     if not os.path.abspath(clickbom_spark.__file__).startswith(ROOT + os.sep):
@@ -180,49 +191,37 @@ def stop_session(spark) -> None:
 class Loop:
     """The closed loop: runs passes, checks each one, keeps the tallies."""
 
-    def __init__(self, spark, workload, clickhouse, run_dir: str):
+    def __init__(self, spark, workload, run_dir: str):
         self.spark = spark
         self.workload = workload
-        self.clickhouse = clickhouse
         self.out_dir = os.path.join(run_dir, "out")
         self.attempted = 0
         self.failed = 0
-        self.lake_bytes_per_row: list[float] = []
-        self.last_lake = (0, 0)
         self.check_s = 0.0
-
-    def check(self, out: str) -> None:
-        from workloads import CheckFailed
-
-        try:
-            self.last_lake = self.workload.check(out, self.clickhouse)
-            self.lake_bytes_per_row.append(self.last_lake[1] / len(self.workload.rows))
-        except CheckFailed as e:
-            print(f"output check failed: {e}", file=sys.stderr)
-            self.failed += 1
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
 
     def run(self, body=None) -> float | None:
         """One pass and its check; the pass's wall time, or None if it
-        raised.  ``body(out)`` replaces the plain untraced pass."""
+        raised or its output was wrong.  ``body(out)`` replaces the plain
+        untraced pass."""
+        from workloads import CheckFailed
+
         self.attempted += 1
         out = os.path.join(self.out_dir, f"pass-{self.attempted}")
         start = time.perf_counter()
         try:
-            if body is None:
-                self.workload.run_pass(self.spark, out, self.clickhouse.url)
-            else:
-                body(out)
+            (body or (lambda o: self.workload.run_pass(self.spark, o)))(out)
+            seconds = time.perf_counter() - start
+            self.workload.check(out)
+            self.check_s += time.perf_counter() - start - seconds
+            return seconds
+        except CheckFailed as e:
+            print(f"output check failed: {e}", file=sys.stderr)
         except Exception:
             traceback.print_exc()
-            self.failed += 1
+        finally:
             shutil.rmtree(out, ignore_errors=True)
-            return None
-        seconds = time.perf_counter() - start
-        self.check(out)
-        self.check_s += time.perf_counter() - start - seconds
-        return seconds
+        self.failed += 1
+        return None
 
     def timed(self, seconds: float) -> list[float]:
         """Passes until they add up to ``seconds`` (at least
@@ -237,131 +236,54 @@ class Loop:
         return times
 
 
-def traced_metrics(loop: Loop, pass_s: float) -> dict[str, float]:
-    """One instrumented untraced pass (plan build time, jobs, scans) and one
-    traced pass (self time per layer, per-call counts, sinks on a persisted
-    input)."""
+def make_workload(name: str, root: str, seed: int, clickhouse):
     import workloads
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-    from spark_stats import SparkStats
 
-    from clickbom_spark.io import sinks
-    from clickbom_spark.ops import merge as M
-    from clickbom_spark.ops import normalize as N
+    if name == "registry_headline":
+        from registry import RegistryHeadline
 
-    spark, wl, ch = loop.spark, loop.workload, loop.clickhouse
-    stats = SparkStats(spark)
-    m = dict.fromkeys(PER_LAYER, 0.0)
-
-    def instrumented(out: str) -> None:
-        with stats.call("pass") as whole:
-            t = time.perf_counter()
-            comps = wl.build(spark)
-            m["engine.build_s"] = time.perf_counter() - t
-            wl.write(comps, out, ch.url)
-        m["engine.jobs"] = whole.jobs
-        m["engine.scan_passes"] = whole.scan_stages
-
-    def traced(out: str) -> None:
-        start = time.perf_counter()
-        steps = wl.prefixes(spark)
-        seconds: dict[str, list[float]] = {name: [] for name, _ in steps}
-        calls = {}
-        for _ in range(PREFIX_ROUNDS):
-            for name, df in steps:
-                with stats.call(name) as calls[name]:
-                    df.write.format("noop").mode("overwrite").save()
-                seconds[name].append(calls[name].seconds)
-        cumulative = 0.0
-        for name, _ in steps:
-            m[name] = statistics.median(seconds[name]) - cumulative
-            cumulative += m[name]
-        m["ops.normalize.read_tasks"] = calls["ops.normalize.read_s"].scan_tasks
-        if "ops.merge.dedup_s" in calls:
-            m["ops.merge.shuffle_bytes"] = calls["ops.merge.dedup_s"].shuffle_bytes
-            m["ops.merge.spill_bytes"] = calls["ops.merge.dedup_s"].spill_bytes
-        frames = dict(steps)
-        needs_map = F.col("license").isin("unknown", "", "null")
-        with stats.call("counts"):
-            raw = N.read_sboms(spark, wl.corpus.path)
-            docs = raw.agg(F.count(F.lit(1)), F.count("_corrupt_record"), F.count("bomFormat")).first()
-            m["ops.normalize.docs_read"] = docs[0]
-            m["ops.normalize.docs_malformed"] = docs[1]
-            m["ops.merge.docs_kept"] = steps[1][1].count()
-            exploded = frames["ops.components.explode_s"]
-            m["ops.components.rows"] = m["ops.merge.rows_in"] = exploded.count()
-            pre_map = frames.get("ops.merge.dedup_s", exploded)
-            m["ops.merge.rows_out"] = pre_map.count()
-            unknown_before = pre_map.where(needs_map).count()
-            final = steps[-1][1].persist(StorageLevel.MEMORY_AND_DISK)
-            final.count()
-            m["ops.components.licenses_patched"] = unknown_before - final.where(needs_map).count()
-        m["ops.merge.dedup_keep_ratio"] = m["ops.merge.rows_out"] / max(1, m["ops.merge.rows_in"])
-        try:
-            if wl.merged_doc:
-                with stats.call("ops.merge.assemble_s") as s:
-                    doc = M.assemble_merged_doc(final, serial_number=workloads.SERIAL, timestamp=workloads.TIMESTAMP)
-                    sinks.write_sbom_document(doc, os.path.join(out, "merged"))
-                m["ops.merge.assemble_s"] = s.seconds
-            with stats.call("io.sinks.lake_write_s") as s:
-                sinks.write_components_lake(final, os.path.join(out, "lake"))
-            m["io.sinks.lake_write_s"] = s.seconds
-            before = ch.snapshot()
-            with stats.call("io.clickhouse.insert_s") as s:
-                sink = wl.sink(ch.url)
-                sink.setup(truncate_table=True)
-                sink.insert_components(final)
-            m["io.clickhouse.insert_s"] = s.seconds
-            after = ch.snapshot()
-        finally:
-            final.unpersist(blocking=True)
-        m["trace.pass_s"] = time.perf_counter() - start
-        for field in ("requests", "bytes_posted", "rows_acked", "failed_requests"):
-            m[f"io.clickhouse.{field}"] = getattr(after, field) - getattr(before, field)
-
-    loop.run(instrumented)
-    loop.run(traced)
-    m["io.sinks.lake_files"], m["io.sinks.lake_bytes"] = loop.last_lake
-    m["trace.overhead_s"] = m["trace.pass_s"] - pass_s
-    return m
+        return RegistryHeadline(root, seed)
+    return workloads.SBOM_WORKLOADS[name](root, seed, clickhouse)
 
 
 def run(args, run_dir: str) -> int:
     configure_env(run_dir)
     spark, imported, ready = setup_session()
-    import workloads
     from loopback import LoopbackClickHouse
+    from spark_stats import SparkStats
 
     phases = {"setup": ready}
     try:
-        t = time.perf_counter()
-        wl = workloads.WORKLOADS[args.workload](os.path.join(run_dir, "data"), args.seed)
-        phases["inputs"] = time.perf_counter() - t
         clickhouse = LoopbackClickHouse(usable_cpus()).start()
         try:
-            loop = Loop(spark, wl, clickhouse, run_dir)
             t = time.perf_counter()
-            warmup = [loop.run() for _ in range(WARMUP_PASSES)]
+            wl = make_workload(args.workload, os.path.join(run_dir, "data"), args.seed, clickhouse)
+            phases["inputs"] = time.perf_counter() - t
+            loop = Loop(spark, wl, run_dir)
+            t = time.perf_counter()
+            warmup = [loop.run() for _ in range(wl.warmup_passes)]
             phases["warm-up"] = time.perf_counter() - t
             t = time.perf_counter()
             times = loop.timed(args.seconds)
             phases["timed"] = time.perf_counter() - t
-            if not times or not loop.lake_bytes_per_row:
-                print("perfbench: no pass completed with a lake to measure", file=sys.stderr)
+            if not times:
+                print("perfbench: no pass completed", file=sys.stderr)
                 return 1
             pass_s = statistics.median(times)
             if args.trace:
-                metrics = traced_metrics(loop, pass_s)
+                t = time.perf_counter()
+                metrics = dict.fromkeys(PER_LAYER, 0.0)
+                metrics.update(wl.trace(loop, SparkStats(spark)))
                 metrics.update(
                     {
                         "session.import_s": imported,
                         "session.start_s": ready - imported,
                         "session.warmup_s": sum(w for w in warmup if w is not None),
                         "session.jvm_peak_rss_mb": jvm_peak_rss_mb(),
+                        "trace.overhead_s": metrics["trace.pass_s"] - pass_s,
                     }
                 )
-                units = PER_LAYER
+                phases["traced"] = time.perf_counter() - t
         finally:
             clickhouse.close()
     finally:
@@ -369,16 +291,13 @@ def run(args, run_dir: str) -> int:
         stop_session(spark)
         phases["stop"] = time.perf_counter() - t
     phases["checks"] = loop.check_s
-    if not args.trace:
-        metrics = {
-            "setup_s": ready,
-            "pass_s": pass_s,
-            "input_mb_per_s": wl.corpus.input_bytes / 1e6 / pass_s,
-            "lake_bytes_per_row": statistics.median(loop.lake_bytes_per_row),
-        }
-        units = END_TO_END
-        print(f"warm-up {warmup}; timed {times}", file=sys.stderr)
+    print(f"warm-up {warmup}; timed {times}", file=sys.stderr)
     print("wall by phase: " + ", ".join(f"{k} {v:.1f} s" for k, v in phases.items()), file=sys.stderr)
+    if args.trace:
+        units = PER_LAYER
+    else:
+        units = END_TO_END
+        metrics = {"setup_s": ready, "pass_s": pass_s, "input_mb_per_s": wl.input_bytes / 1e6 / pass_s}
     result = {
         "correct": loop.failed == 0,
         "attempted": loop.attempted,
@@ -391,7 +310,7 @@ def run(args, run_dir: str) -> int:
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    p.add_argument("--workload", choices=["sbom_merge", "sbom_normal"], required=True)
+    p.add_argument("--workload", choices=WORKLOADS, required=True)
     p.add_argument("--seed", type=int, default=0)
     p.add_argument("--seconds", type=float, default=16.0)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)

@@ -24,6 +24,7 @@ sys.path[:0] = [HERE, ROOT]
 import corpus  # noqa: E402
 import oracle  # noqa: E402
 import run  # noqa: E402
+import tables  # noqa: E402
 import workloads  # noqa: E402
 from loopback import LoopbackClickHouse  # noqa: E402
 
@@ -59,8 +60,9 @@ def spark():
     [
         lambda root, seed: corpus.write_merge_corpus(root, seed, files=60, comps_per_file=10),
         lambda root, seed: corpus.write_normal_corpus(root, seed, docs=2, packages_per_doc=200),
+        lambda root, seed: tables.write_tables(root, seed),
     ],
-    ids=["merge", "normal"],
+    ids=["merge", "normal", "tables"],
 )
 def test_same_seed_same_corpus(tmp_path, write):
     write(str(tmp_path / "a"), 5)
@@ -114,24 +116,24 @@ def test_oracle_matches_normal_pipeline_on_fixtures(spark):
     assert _rows(got) == Counter(expected)
 
 
-@pytest.mark.parametrize(
-    "make",
-    [
-        lambda root: workloads.SbomMerge(root, 3, files=80, components=12),
-        lambda root: workloads.SbomNormal(root, 3, docs=2, packages=300),
-    ],
-    ids=["sbom_merge", "sbom_normal"],
-)
-def test_oracle_matches_engine_on_generated_corpus(spark, tmp_path, make):
+_SMALL = {
+    "sbom_merge": lambda root, ch: workloads.SbomMerge(root, 3, ch, files=80, components=12),
+    "sbom_normal": lambda root, ch: workloads.SbomNormal(root, 3, ch, docs=2, packages=300),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SMALL))
+def test_oracle_matches_engine_on_generated_corpus(spark, tmp_path, name):
     """The oracle agrees with the engine, every sink passes the check, and
     the check catches a lake that lost a file."""
-    wl = make(str(tmp_path / "data"))
-    assert _rows(wl.build(spark)) == Counter(wl.rows)
-    out = str(tmp_path / "out")
     ch = LoopbackClickHouse(2).start()
     try:
-        wl.run_pass(spark, out, ch.url)
-        files, size = wl.check(out, ch)
+        wl = _SMALL[name](str(tmp_path / "data"), ch)
+        assert _rows(wl.build(spark)) == Counter(wl.rows)
+        out = str(tmp_path / "out")
+        wl.run_pass(spark, out)
+        wl.check(out)
+        files, size = wl.last_lake
         assert files > 0 and size > 0
         assert ch.snapshot().rows_acked == len(wl.rows)
         victim = next(
@@ -139,9 +141,37 @@ def test_oracle_matches_engine_on_generated_corpus(spark, tmp_path, make):
         )
         os.remove(victim)
         with pytest.raises(workloads.CheckFailed):
-            wl.check(out, ch)
+            wl.check(out)
     finally:
         ch.close()
+
+
+@pytest.mark.parametrize("name", sorted(_SMALL))
+def test_traced_prefixes_build_the_engines_plan(spark, tmp_path, name):
+    """The last traced prefix is the plan the untraced pass runs, and the
+    comparison is strict enough to notice a missing stage."""
+    wl = _SMALL[name](str(tmp_path / "data"), None)
+    steps = wl.prefixes(spark)
+    built = workloads.plan_shape(wl.build(spark))
+    assert workloads.plan_shape(steps[-1][1]) == built
+    assert workloads.plan_shape(steps[-2][1]) != built
+
+
+def test_registry_matches_its_oracles_on_generated_tables(spark, tmp_path):
+    """Every headline query of the registry workload has a non-empty answer
+    on the generated tables, equal to its DuckDB oracle; the check catches
+    a result that lost a row."""
+    from registry import RegistryHeadline
+
+    wl = RegistryHeadline(str(tmp_path / "tables"), 3)
+    assert sorted(wl.expected) == sorted(tables.QUERIES)
+    assert all(len(frame) > 0 for frame in wl.expected.values())
+    wl.run_pass(spark, str(tmp_path / "out"))
+    wl.check(str(tmp_path / "out"))
+    columns, rows = wl.results["q_minhash_lsh_dedup"]
+    wl.results["q_minhash_lsh_dedup"] = (columns, rows[1:])
+    with pytest.raises(workloads.CheckFailed):
+        wl.check(str(tmp_path / "out"))
 
 
 def test_loopback_answers_probes_and_bounds_connections():
@@ -190,15 +220,18 @@ def test_benchmark_json_matches_the_runner():
         spec = json.load(f)
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == run.END_TO_END
     assert {m["name"]: m["unit"] for m in spec["per_layer"]} == run.PER_LAYER
-    assert {w["name"] for w in spec["workloads"]} == {"sbom_merge", "sbom_normal"}
+    assert {w["name"] for w in spec["workloads"]} == {"sbom_merge", "registry_headline"}
+    assert {w["name"] for w in spec["workloads"]} <= set(run.WORKLOADS)
     for name in [*run.END_TO_END, *run.PER_LAYER]:
         assert METRIC_NAME.fullmatch(name)
 
 
-@pytest.mark.parametrize("trace", [0, 1])
-def test_cli_emits_every_metric(trace):
+@pytest.mark.parametrize(
+    "workload,trace", [("sbom_merge", 0), ("sbom_merge", 1), ("registry_headline", 1)]
+)
+def test_cli_emits_every_metric(workload, trace):
     done = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", "sbom_merge", "--seed", "2", "--seconds", "1",
+        [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", "2", "--seconds", "1",
          "--trace", str(trace)],
         cwd=ROOT, capture_output=True, text=True, timeout=300,
     )
@@ -208,8 +241,13 @@ def test_cli_emits_every_metric(trace):
     assert result["correct"] is True and result["failed"] == 0 and result["attempted"] >= 1
     units = run.PER_LAYER if trace else run.END_TO_END
     assert {k: v["unit"] for k, v in result["metrics"].items()} == units
-    if trace:
-        m = {k: v["value"] for k, v in result["metrics"].items()}
+    m = {k: v["value"] for k, v in result["metrics"].items()}
+    if not trace:
+        assert all(v > 0 for v in m.values())
+    elif workload == "registry_headline":
+        assert m["queries.builder_jobs"] > 0 and m["queries.exec_jobs"] > 0 and m["queries.plan_s"] > 0
+        assert all(m[f"queries.{q}.exec_s"] > 0 for q in tables.QUERIES)
+    elif trace:
         assert m["ops.normalize.docs_malformed"] > 0
         assert m["io.clickhouse.failed_requests"] == 0
         assert m["io.clickhouse.rows_acked"] == m["ops.merge.rows_out"] > 0

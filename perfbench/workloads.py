@@ -1,5 +1,5 @@
-"""The benchmark's workloads: one untraced pass, its output check, and the
-traced pass that splits it by layer.
+"""The SBOM workloads: one untraced pass, its output check, and the traced
+passes that split it by layer.
 
 A pass builds the engine's plan from the generated corpus and writes every
 sink the workload has.  Each pass writes into its own output directory and
@@ -12,11 +12,15 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
+import statistics
+import time
 
 import corpus
 import oracle
 import pyarrow as pa
 import pyarrow.dataset as ds
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from clickbom_spark import engine
@@ -34,8 +38,12 @@ _LAKE_PARTITIONING = ds.partitioning(pa.schema([("source", pa.string())]), flavo
 
 # Corpus sizes: each pass must be long enough to time steadily and short
 # enough for warm-up plus several timed passes to fit one run.
-MERGE_FILES, MERGE_COMPONENTS = 250, 40
-NORMAL_DOCS, NORMAL_PACKAGES = 8, 3000
+MERGE_FILES, MERGE_COMPONENTS = 400, 40
+NORMAL_DOCS, NORMAL_PACKAGES = 8, 12000
+PREFIX_ROUNDS = 3  # the traced pass times each pipeline prefix this often
+# Expression ids, and the numbered names Catalyst gives common
+# subexpressions and lambda variables.
+_EXPR_ID = re.compile(r"#\d+L?|(?<=_common_expr_)\d+|(?<=\bx_)\d+")
 
 
 class CheckFailed(Exception):
@@ -57,6 +65,12 @@ def _same_rows(got: pa.Table, expected: pa.Table) -> bool:
     return got.num_rows == expected.num_rows and all(got.column(c).equals(expected.column(c)) for c in _COLUMNS)
 
 
+def plan_shape(df) -> str:
+    """The optimized logical plan without its expression ids, so that two
+    separately built copies of one pipeline compare equal."""
+    return _EXPR_ID.sub("#", df._jdf.queryExecution().optimizedPlan().toString())
+
+
 def _lake_table(rows: list[tuple]) -> pa.Table:
     columns = list(zip(*rows)) or [()] * len(_COLUMNS)
     return _sorted(pa.Table.from_arrays([pa.array(c, pa.string()) for c in columns], names=_COLUMNS))
@@ -67,11 +81,15 @@ class Workload:
 
     name: str
     merged_doc = False
+    warmup_passes = 3  # the JIT's big steps are over after the third pass (see README)
 
-    def __init__(self, corpus_: corpus.Corpus, rows: list[tuple], table: str):
+    def __init__(self, corpus_: corpus.Corpus, rows: list[tuple], table: str, clickhouse):
         self.corpus = corpus_
+        self.input_bytes = corpus_.input_bytes
         self.rows = rows
         self.table = table
+        self.clickhouse = clickhouse
+        self.last_lake = (0, 0)
         self.expected_lake = _lake_table(rows)
         self.expected_ch = sorted(r[:4] for r in rows)
         self.expected_doc = oracle.merged_doc_components(rows) if self.merged_doc else None
@@ -93,13 +111,13 @@ class Workload:
         ch.setup(truncate_table=True)
         ch.insert_components(comps)
 
-    def run_pass(self, spark, out: str, url: str) -> None:
-        self.write(self.build(spark), out, url)
+    def run_pass(self, spark, out: str) -> None:
+        self.write(self.build(spark), out, self.clickhouse.url)
 
     # -- the output check -------------------------------------------------
-    def check(self, out: str, clickhouse) -> tuple[int, int]:
+    def check(self, out: str) -> None:
         """Raise CheckFailed unless every sink holds exactly the oracle's
-        rows; return the lake's (files, bytes)."""
+        rows; record the lake's (files, bytes) in ``last_lake``."""
         if self.merged_doc:
             parts = glob.glob(os.path.join(out, "merged", "part-*.json"))
             _expect(len(parts) == 1, f"merged document: {len(parts)} part files")
@@ -123,15 +141,100 @@ class Workload:
             _same_rows(got, self.expected_lake),
             f"lake rows differ from the oracle ({got.num_rows} vs {len(self.rows)})",
         )
-        ch_rows = sorted(clickhouse.rows(DATABASE, self.table))
+        ch_rows = sorted(self.clickhouse.rows(DATABASE, self.table))
         _expect(ch_rows == self.expected_ch, f"ClickHouse rows differ ({len(ch_rows)} vs {len(self.rows)})")
-        return len(files), sum(os.path.getsize(f) for f in files)
+        self.last_lake = (len(files), sum(os.path.getsize(f) for f in files))
 
     # -- the traced pass --------------------------------------------------
     def prefixes(self, spark) -> list[tuple[str, object]]:
         """``[(layer metric, DataFrame)]``: the pipeline cut after each
-        public function, in order; each prefix contains the one before."""
+        public function, in order; each prefix contains the one before.
+        The last prefix must be the plan ``build()`` makes; ``trace`` checks
+        that it is."""
         raise NotImplementedError
+
+    def trace(self, loop, stats) -> dict[str, float]:
+        """One instrumented untraced pass (plan build time, jobs, scans) and
+        one traced pass (self time per layer, per-call counts, sinks on a
+        persisted input)."""
+        spark, ch = loop.spark, self.clickhouse
+        m: dict[str, float] = {}
+
+        def instrumented(out: str) -> None:
+            with stats.call("pass") as whole:
+                t = time.perf_counter()
+                comps = self.build(spark)
+                m["engine.build_s"] = time.perf_counter() - t
+                self.write(comps, out, ch.url)
+            m["engine.jobs"] = whole.jobs
+            m["engine.scan_passes"] = whole.scan_stages
+
+        def traced(out: str) -> None:
+            start = time.perf_counter()
+            steps = self.prefixes(spark)
+            _expect(
+                plan_shape(steps[-1][1]) == plan_shape(self.build(spark)),
+                "the traced prefixes no longer build the engine's plan; update prefixes()",
+            )
+            seconds: dict[str, list[float]] = {name: [] for name, _ in steps}
+            calls = {}
+            for _ in range(PREFIX_ROUNDS):
+                for name, df in steps:
+                    with stats.call(name) as calls[name]:
+                        df.write.format("noop").mode("overwrite").save()
+                    seconds[name].append(calls[name].seconds)
+            cumulative = 0.0
+            for name, _ in steps:
+                m[name] = statistics.median(seconds[name]) - cumulative
+                cumulative += m[name]
+            m["ops.normalize.read_tasks"] = calls["ops.normalize.read_s"].scan_tasks
+            if "ops.merge.dedup_s" in calls:
+                m["ops.merge.shuffle_bytes"] = calls["ops.merge.dedup_s"].shuffle_bytes
+                m["ops.merge.spill_bytes"] = calls["ops.merge.dedup_s"].spill_bytes
+            frames = dict(steps)
+            needs_map = F.col("license").isin("unknown", "", "null")
+            with stats.call("counts"):
+                raw = N.read_sboms(spark, self.corpus.path)
+                docs = raw.agg(F.count(F.lit(1)), F.count("_corrupt_record"), F.count("bomFormat")).first()
+                m["ops.normalize.docs_read"] = docs[0]
+                m["ops.normalize.docs_malformed"] = docs[1]
+                m["ops.merge.docs_kept"] = steps[1][1].count()
+                exploded = frames["ops.components.explode_s"]
+                m["ops.components.rows"] = m["ops.merge.rows_in"] = exploded.count()
+                pre_map = frames.get("ops.merge.dedup_s", exploded)
+                m["ops.merge.rows_out"] = pre_map.count()
+                unknown_before = pre_map.where(needs_map).count()
+                final = steps[-1][1].persist(StorageLevel.MEMORY_AND_DISK)
+                final.count()
+                m["ops.components.licenses_patched"] = unknown_before - final.where(needs_map).count()
+            m["ops.merge.dedup_keep_ratio"] = m["ops.merge.rows_out"] / max(1, m["ops.merge.rows_in"])
+            try:
+                if self.merged_doc:
+                    with stats.call("ops.merge.assemble_s") as s:
+                        doc = M.assemble_merged_doc(final, serial_number=SERIAL, timestamp=TIMESTAMP)
+                        sinks.write_sbom_document(doc, os.path.join(out, "merged"))
+                    m["ops.merge.assemble_s"] = s.seconds
+                with stats.call("io.sinks.lake_write_s") as s:
+                    sinks.write_components_lake(final, os.path.join(out, "lake"))
+                m["io.sinks.lake_write_s"] = s.seconds
+                before = ch.snapshot()
+                with stats.call("io.clickhouse.insert_s") as s:
+                    sink = self.sink(ch.url)
+                    sink.setup(truncate_table=True)
+                    sink.insert_components(final)
+                m["io.clickhouse.insert_s"] = s.seconds
+                after = ch.snapshot()
+            finally:
+                final.unpersist(blocking=True)
+            m["trace.pass_s"] = time.perf_counter() - start
+            for field in ("requests", "bytes_posted", "rows_acked", "failed_requests"):
+                m[f"io.clickhouse.{field}"] = getattr(after, field) - getattr(before, field)
+
+        loop.run(instrumented)
+        loop.run(traced)
+        m["io.sinks.lake_files"], m["io.sinks.lake_bytes"] = self.last_lake
+        m["io.sinks.lake_bytes_per_row"] = self.last_lake[1] / len(self.rows)
+        return m
 
 
 class SbomMerge(Workload):
@@ -140,12 +243,12 @@ class SbomMerge(Workload):
     name = "sbom_merge"
     merged_doc = True
 
-    def __init__(self, root: str, seed: int, files: int = MERGE_FILES, components: int = MERGE_COMPONENTS):
+    def __init__(self, root: str, seed: int, clickhouse, files: int = MERGE_FILES, components: int = MERGE_COMPONENTS):
         c = corpus.write_merge_corpus(root, seed, files, components)
         with open(c.mappings_path) as f:
             mappings = json.load(f)
         rows = oracle.merge_rows(c.path, corpus.INCLUDE_PATTERNS, corpus.EXCLUDE_PATTERNS, corpus.OUTPUT_KEY, mappings)
-        super().__init__(c, rows, M.derive_table_name(corpus.OUTPUT_KEY, merged=True))
+        super().__init__(c, rows, M.derive_table_name(corpus.OUTPUT_KEY, merged=True), clickhouse)
         self.cfg = engine.PipelineConfig(
             merge=True,
             include_patterns=corpus.INCLUDE_PATTERNS,
@@ -178,12 +281,12 @@ class SbomNormal(Workload):
 
     name = "sbom_normal"
 
-    def __init__(self, root: str, seed: int, docs: int = NORMAL_DOCS, packages: int = NORMAL_PACKAGES):
+    def __init__(self, root: str, seed: int, clickhouse, docs: int = NORMAL_DOCS, packages: int = NORMAL_PACKAGES):
         c = corpus.write_normal_corpus(root, seed, docs, packages)
         with open(c.mappings_path) as f:
             mappings = json.load(f)
         rows = oracle.normal_rows(c.path, corpus.REPOSITORY, mappings)
-        super().__init__(c, rows, M.derive_table_name(corpus.REPOSITORY))
+        super().__init__(c, rows, M.derive_table_name(corpus.REPOSITORY), clickhouse)
         self.cfg = engine.PipelineConfig(
             sbom_format=N.FORMAT_CYCLONEDX,
             sbom_source="github",
@@ -213,4 +316,4 @@ class SbomNormal(Workload):
         ]
 
 
-WORKLOADS = {w.name: w for w in (SbomMerge, SbomNormal)}
+SBOM_WORKLOADS = {w.name: w for w in (SbomMerge, SbomNormal)}
