@@ -22,7 +22,7 @@ def entry(spark: SparkSession) -> DataFrame:
     return REGISTRY["q1_pricing_summary"].fn(spark, "/root/testdata/sf0.001")
 
 
-def _status_rank() -> dict[str, int]:
+def _status_rank() -> dict[str, tuple[int, int]]:
     """Per-query verification status from committed CORRECTNESS_r*.json.
 
     The driver walks ``queries()`` in insertion order under a count
@@ -55,16 +55,6 @@ def _status_rank() -> dict[str, int]:
         has_oracle = REGISTRY[name].oracle is not None
         if e is None:
             ranks[name] = (1, 0)  # never checked
-        elif name in _REVERIFY_TOUCHED:
-            # Queries whose implementation was REWRITTEN in the last
-            # two optimization rounds (r14/r15) but whose oracle row
-            # predates the rewrite: the staleness rotation would not
-            # reach them for several rounds (they were recently green),
-            # so their semantic-equivalence arguments would stay
-            # uncertified.  Rank them right behind true failures /
-            # never-checked so this round's budget certifies the
-            # rewrites (VERDICT r14 item 2).
-            ranks[name] = (1, 1)
         elif e.get("err") == "no_oracle" and not has_oracle:
             # Deliberately oracle-less (pytest-law-pinned, not broken):
             # park BEHIND the green tier so these don't eat a budget
@@ -81,68 +71,11 @@ def _status_rank() -> dict[str, int]:
     return ranks
 
 
-# ROUND-14 NOTE: ALL NINE staged waves are ACTIVATED (r6 wave of 30
-# + r7 wave of 14 + r8..r13 waves of 23 each + r14 wave of 27) plus
-# the three r12 late-round clause round-trips; registry = 391.  The
-# r14 wave carries the four round-13 additions (QUALIFY, quantileGK,
-# snowflake-ID, ALTER-migration round-trips — VERDICT r12 #8).  The
-# 27 never-driver-checked r14 names rank first; the remaining ~23
-# budget slots rotate through the STALEST greens — the 14 r6-stale
-# queries clear THIS round and rotation moves into the r7 cohort.
-#
-# staged_r15.py (round 15) .. staged_r20.py (round 20) hold the
-# remaining waves, one per round, ALL built and parity-proven
-# (tests/test_staged_r{N}_parity.py + `python
-# scripts/strict_parity.py --staged`).  Each activates with
-# REGISTRY.update(staged_rN.STAGED_RN) in queries/__init__.py,
-# newest-last; the disjointness guard in each parity file flags any
-# collision.
-
-# Queries rewritten by the r14/r15 optimization rounds whose driver
-# oracle row predates the rewrite (VERDICT r14 "Next round" item 2):
-# ranked just behind never-checked so the r15 budget re-greens every
-# semantic rewrite.  Grows as round 15 touches more queries.
-_REVERIFY_TOUCHED = {
-    # r14 semantic rewrites (minimum set named by the judge)
-    "q_window_rank_orders", "q_theta_join_event_pairs",
-    "q_triangle_count", "q_pagerank_parts", "q_minhash_lsh_dedup",
-    "q_lake_stream_serving",
-    # remaining r14-touched bench queries
-    "q_ngram_redundancy", "q_hll_distinct", "q_curation_pipeline",
-    "q_quantiles_weighted_by_group", "q_weighted_quantiles",
-    "q_bootstrap_ci", "q_cosine_topk",
-    # r15-touched (ADVICE fixes + non-bench hot-path sweep)
-    "q_cdc_apply", "q_shingle_novelty", "q_token_pmi",
-    "q_event_markov_matrix", "q_association_rules",
-    "q_edit_distance_join", "q_setsim_prefix_join",
-    "q_containment_join", "q_rfm_segments",
-}
-
-# Among never-checked queries, verify the highest-value operators
-# first (the budget may cut the tail): multimodal + layout (flagged in
-# round-1 review), streaming, then the flagship extension pipelines.
-_PRIORITY = [
-    "q_binary_metadata", "q_multimodal_features", "q_resize_media",
-    "q_video_frame_sample", "q_zorder_cluster", "q_partition_pruned_scan",
-    "q_dynamic_partition_pruning", "q_cohort_retention", "q_keep_latest_event",
-    "q_cdc_stream_compaction", "q_dedup_stream_watermark",
-    "q_theta_join_skewed", "q_sequence_packing", "q_curation_pipeline",
-    "q_pagerank_parts", "q_agg_state_merge", "q_neardup_keep_one",
-    "q_ivf_kmeans_ann", "q_scalar_quantization", "q_reachability_3hop",
-    "q_mixture_weights", "q_mixture_resample", "q_table_checksum",
-    "q_table_diff", "q_session_funnel", "q_stream_static_enrich",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
     rank = _status_rank()
-    prio = {n: i for i, n in enumerate(_PRIORITY)}
-    names = list(REGISTRY)
-    idx = {n: i for i, n in enumerate(names)}
-    ordered = sorted(
-        names, key=lambda n: (*rank[n], prio.get(n, len(_PRIORITY)), idx[n])
-    )
+    # sorted() is stable, so ties keep registry order
+    ordered = sorted(REGISTRY, key=lambda n: rank[n])
     return {name: REGISTRY[name].fn for name in ordered}
 
 

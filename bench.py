@@ -19,7 +19,7 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from clickbom_spark.queries import REGISTRY  # noqa: E402
-from clickbom_spark.session import get_spark  # noqa: E402
+from clickbom_spark.session import default_cpus, get_spark  # noqa: E402
 
 # The round-1 headline set, frozen: its total is reported alongside the
 # growing headline total so rounds stay directly comparable.
@@ -29,37 +29,6 @@ CORE13 = [
     "q9_nation_year_profit", "q_cosine_topk", "q_explode_words",
     "q_minhash_lsh_dedup", "q_theta_join_event_pairs",
     "q_tumbling_window_events", "q_window_rank_orders",
-]
-
-# Round-6 expansion, frozen from round 7 on: core13 plus the three
-# queries that gained baseline numbers in BENCH_r06 — so future rounds
-# compare the wider set without re-doing added-query accounting.
-CORE16 = CORE13 + [
-    "q_hll_distinct", "q_triangle_count", "q_weighted_quantiles",
-]
-
-# Round-11 expansion, frozen from round 11 on: core16 plus four
-# post-r6 heavyweights (VERDICT r10 "What's wrong" #2 — the expensive
-# new operators were tracked only in docs/SCALE.md, invisible to the
-# driver's BENCH file).  q_lake_stream_serving is additionally flagged
-# bench=True so the full headline set covers the lake serving path,
-# but it stays OUT of this frozen tier (its cost is dominated by lake
-# write amplification, noisier than the pure-query members).
-CORE20_R11 = CORE16 + [
-    "q_bootstrap_ci", "q_ngram_redundancy",
-    "q_quantiles_weighted_by_group", "q_scd2_intervals",
-]
-
-# BENCH_r10's ENTIRE headline set, frozen (VERDICT r11 "What's wrong"
-# #2: the top line changed meaning when the headline grew 20→25 in
-# r11, so r10→r11 read as a spurious 40% regression).  The
-# headline20_r10_min field is directly comparable to BENCH_r10's top
-# line (25.98 contended / 23.70 judge-quiet) without per-query
-# arithmetic.
-LEGACY20_R10 = CORE13 + [
-    "q_curation_pipeline", "q_hll_distinct", "q_pagerank_parts",
-    "q_sequence_packing", "q_theta_join_skewed", "q_triangle_count",
-    "q_weighted_quantiles",
 ]
 
 # Timed runs per headline query feeding the *_min metrics: one
@@ -99,7 +68,7 @@ def wait_for_quiet_host(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     # Round-10 lesson (VERDICT r10 "What's wrong" #1): BENCH_r10 was
     # captured at loadavg 2.5–6.4 and read +9.6% on unchanged code —
     # the old gate (threshold 10) passed contended runs that round 7
@@ -162,16 +131,13 @@ def main() -> None:
     # deflate the frozen metric (it would read as a speedup): report
     # null totals and flip the completeness flag instead.
     core13_complete = all(n in timings for n in CORE13)
-    core16_complete = all(n in timings for n in CORE16)
-    core20_r11_complete = all(n in timings for n in CORE20_R11)
-    legacy20_complete = all(n in timings for n in LEGACY20_R10)
     headline_complete = all(n in min_each for n in headline)
     out = {
         # Top line = min-of-5 across the whole headline set (stable
         # against host jitter); the single-pass total remains as
         # `headline_single_pass_total` for r1–r8 continuity.
         "metric": "headline_queries_min_total",
-        # same no-silent-deflation rule as core13/core16: a headline
+        # same no-silent-deflation rule as core13: a headline
         # member that errored must null the top line (a sum over the
         # survivors would read as a speedup), flagged by
         # headline_complete
@@ -192,31 +158,6 @@ def main() -> None:
             sum(min_each[n] for n in CORE13), 4
         ) if core13_complete else None,
         "core13_complete": core13_complete,
-        # frozen round-6 expansion (core13 + hll/triangle/weighted-q)
-        "core16_total": round(
-            sum(timings[n] for n in CORE16), 4
-        ) if core16_complete else None,
-        "core16_min": round(
-            sum(min_each[n] for n in CORE16), 4
-        ) if core16_complete else None,
-        "core16_complete": core16_complete,
-        # frozen round-11 expansion (core16 + bootstrap-CI /
-        # n-gram-redundancy / weighted-quantiles-per-group / SCD2)
-        "core20_r11_total": round(
-            sum(timings[n] for n in CORE20_R11), 4
-        ) if core20_r11_complete else None,
-        "core20_r11_min": round(
-            sum(min_each[n] for n in CORE20_R11), 4
-        ) if core20_r11_complete else None,
-        "core20_r11_complete": core20_r11_complete,
-        # BENCH_r10's full headline set (20 queries): this MIN total
-        # is the number to put next to BENCH_r10's top line (the
-        # headline grew 20→25 in r11, so the top lines of r10 and
-        # r11+ are not directly comparable; this field is)
-        "headline20_r10_min": round(
-            sum(min_each[n] for n in LEGACY20_R10), 4
-        ) if legacy20_complete else None,
-        "headline20_r10_complete": legacy20_complete,
         # host load context (1/5/15-min averages), recorded so
         # cross-round comparisons can spot machine-contention inflation
         # without re-running archived trees (the r4→r5 +26% drift was

@@ -16,6 +16,11 @@ makes value-hash comparisons bit-stable across engines.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -41,9 +46,15 @@ def query(
     description: str = "",
     bench: bool = False,
 ):
-    """Register a query implementation under ``name``."""
+    """Register a query implementation under ``name``.
+
+    Raises ``ValueError`` if ``name`` is already registered: a second
+    definition would silently replace the first.
+    """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} is already registered")
         REGISTRY[name] = QuerySpec(name, fn, oracle, description, bench)
         return fn
 
@@ -84,17 +95,31 @@ def epoch_us(col):
     )
 
 
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="clickbom_spark-")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def scratch_path(*parts: str) -> str:
+    """Path under this process's scratch root for query-side writes.
+
+    The root is a private directory under ``tempfile.gettempdir()``,
+    created on first use and removed when the process exits, so
+    concurrent runs never share a path.
+    """
+    return os.path.join(_scratch_root(), *parts)
+
+
 def load(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     from clickbom_spark.session import read_table
 
     return [read_table(spark, sf_dir, n) for n in names]
 
 
-# Import modules for their registration side effects.  Order matters:
-# the driver walks the registry in insertion order and may stop on a
-# budget, so modules whose queries lack a green CORRECTNESS row from the
-# previous round come first (never-checked, then erroring/hash-failed,
-# then the already-green wave).
+# Import modules for their registration side effects.  Callers walk the
+# registry in insertion order, so this list fixes the query order.
 from clickbom_spark.queries import formats  # noqa: E402,F401
 from clickbom_spark.queries import olap_ops  # noqa: E402,F401
 from clickbom_spark.queries import sql_surface  # noqa: E402,F401
@@ -114,133 +139,12 @@ from clickbom_spark.queries import curation  # noqa: E402,F401
 from clickbom_spark.queries import engine_ops  # noqa: E402,F401
 from clickbom_spark.queries import order_stats  # noqa: E402,F401
 from clickbom_spark.queries import dialect_r12  # noqa: E402,F401
-
-# Round-6 activation of the staged wave (30 queries, all
-# oracle-parity-green under tests/test_staged_parity.py before
-# promotion — see staged.py:1-16).  STAGED names are disjoint from the
-# organically registered set (guarded by test_staged_parity).
 from clickbom_spark.queries import staged  # noqa: E402,F401
-
-REGISTRY.update(staged.STAGED)
-
-# Round-7 activation of the second staged wave (14 queries, all
-# oracle-parity-green at sf0.001/sf0.01/sf0.1 under
-# tests/test_staged_r7_parity.py before promotion; disjointness from
-# the existing registry is guarded there too).
 from clickbom_spark.queries import staged_r7  # noqa: E402,F401
-
-REGISTRY.update(staged_r7.STAGED_R7)
-
-# Round-8 activation of the third staged wave (23 queries, all
-# oracle-parity-green at sf0.001/sf0.01 — and sf0.1 for the 21 whose
-# oracle is not O(n²) — under tests/test_staged_r8_parity.py before
-# promotion; disjointness from the existing registry is guarded there).
 from clickbom_spark.queries import staged_r8  # noqa: E402,F401
-
-REGISTRY.update(staged_r8.STAGED_R8)
-
-# Round-9 activation of the fourth staged wave (23 queries — dialect
-# round-trips for LIMIT n BY / FINAL / ARRAY JOIN / WITH TOTALS, the
-# parametric-aggregate family, LTTB, geohash, Spearman rank
-# correlation, bitmap algebra, branch merge conflicts, the streaming
-# matview chain — all oracle-parity-green at three scales under
-# tests/test_staged_r9_parity.py before promotion; disjointness from
-# the existing registry is guarded there).
 from clickbom_spark.queries import staged_r9  # noqa: E402,F401
-
-REGISTRY.update(staged_r9.STAGED_R9)
-
-# Round-10 activation of the fifth staged wave (23 queries — dialect
-# round-trips for SAMPLE / multi- and alias-less ARRAY JOIN / ASOF
-# JOIN / retention / -If combinators, SCD2 sink serving, column-level
-# branch merges, URL-canonicalization dedup, label propagation,
-# k-core peeling, KMV distinct sketch, paragraph dedup, token-budget
-# curation, MRR / NDCG@10, Benjamini–Hochberg FDR, seasonal
-# decomposition, winsorized mean, Poisson bootstrap CI — all
-# oracle-parity-green at three scales under
-# tests/test_staged_r10_parity.py before promotion; disjointness from
-# the existing registry is guarded there).
 from clickbom_spark.queries import staged_r10  # noqa: E402,F401
-
-REGISTRY.update(staged_r10.STAGED_R10)
-
-# Round-11 activation of the sixth staged wave (23 queries — dialect
-# round-trips for the dictGet family / LIMIT n WITH TIES (single- and
-# multi-key paths) / WITH FILL (int + date spines) / integer SAMPLE n
-# / a DDL-driven FINAL+SAMPLE+dictGet composition, windowFunnel
-# strict_deduplication + strict_increase pair modes,
-# quantilesExactWeighted per group, simpleLinearRegression, entropy,
-# neighbor/runningDifference, groupArraySorted, array folds,
-# stratified + per-group reservoir samples, TTR/hapax, Good–Turing,
-# Zipf slope, chi-square keyness, shard balance, n-gram redundancy —
-# all oracle-parity-green at three scales under
-# tests/test_staged_r11_parity.py and `scripts/strict_parity.py
-# --staged` before promotion; disjointness from the existing registry
-# is guarded there).
 from clickbom_spark.queries import staged_r11  # noqa: E402,F401
-
-REGISTRY.update(staged_r11.STAGED_R11)
-
-# Round-12 activation of the seventh staged wave (23 queries — dialect
-# round-trips for the JSON-props extraction family, extractAll /
-# countMatches, per-group paging (LIMIT m, n BY), the plain comma
-# LIMIT m, n, untuple / tuple-IN, the run-path * REPLACE / * APPLY
-# chain, transform() value mapping, positional ordinals, NULL/math
-# scalars, arrayPartialSort, string/calendar shaping, weekday
-# profiles; corpus text analytics (lexical density, Heaps'-law
-# vocabulary curve, unigram cross-entropy, vocabulary-overlap
-# Jaccard, exact Pearson from power sums, fixed-width histograms,
-# quantileExactLow/High); event-stream folds (timed sequenceCount,
-# inter-event gap statistics, runningAccumulate analog) — all
-# oracle-parity-green at three scales under
-# tests/test_staged_r12_parity.py and re-verified via
-# `scripts/strict_parity.py --staged <r12 names>` immediately before
-# this activation; disjointness from the existing registry is guarded
-# in the parity test file).
 from clickbom_spark.queries import staged_r12  # noqa: E402,F401
-
-REGISTRY.update(staged_r12.STAGED_R12)
-
-# Round-13 activation of the eighth staged wave (23 queries — dialect
-# round-trips for the round-11 compilations: the -State/-Merge
-# simple-aggregate algebra (grouped + incremental two-batch merge),
-# LIMIT m, n WITH TIES, WITH FILL … INTERPOLATE stair-step carry, the
-# hierarchical dictionary family, a DDL-driven FINAL+SAMPLE+FILL
-# capstone; time-series statistics (EWMA, anomaly z-scores, lag-1
-# autocorrelation, CUSUM drift, Fano burstiness, Markov transition
-# matrix); corpus/embedding audits (3-gram novelty, token PMI,
-# length-decile quality, integer-exact embedding norms, session
-# log-buckets); relational audits (null audit, brand HHI, Pareto
-# coverage, ship latency) — PLUS the two round-trips pulled forward
-# from the r16 wave per VERDICT r12 #4: the uniqState/uniqMerge MV
-# idiom and the countMerge/sumMerge NULL→0 ADVICE fix.  All 23
-# oracle-parity-green at three scales under
-# tests/test_staged_r13_parity.py and re-verified via
-# `scripts/strict_parity.py --staged <the 23 names + the 2 demoted
-# swaps>` (25/25 ok) immediately before this activation;
-# disjointness from the existing registry is guarded in the parity
-# test file.
 from clickbom_spark.queries import staged_r13  # noqa: E402,F401
-
-REGISTRY.update(staged_r13.STAGED_R13)
-
-# Round-14 activation of the ninth staged wave (27 queries — 23 built
-# during round 11 plus the four round-13 additions per VERDICT r12
-# #8: oracle round-trips for the QUALIFY clause compile
-# (q_dialect_qualify_topn), the quantileGK/approximate-spelling
-# policy (q_dialect_quantile_gk), the snowflake-ID bit layout
-# (q_dialect_snowflake_ids), and the reference's ALTER-migration
-# idiom (q_ddl_alter_migration, entrypoint.sh:130-161) — plus
-# negative-substring spellings, hierarchy-filtered dictGet, multi-col
-# INTERPOLATE, simple-aggregate state round-trip, lake time-travel
-# diff, and the relational/text/stats cohort (ABC classification,
-# Benford first-digit, brand entropy, char-class profiles, template
-# clusters, bigrams, lifecycle, heatmaps).  All 27 oracle-parity-
-# green at three scales under tests/test_staged_r14_parity.py and
-# re-verified via `scripts/strict_parity.py --staged <the 27 names>`
-# (27/27 ok, dtype-strict) immediately before this activation; the
-# parity file's disjointness guard checks the wave against the
-# post-activation registry identity.
 from clickbom_spark.queries import staged_r14  # noqa: E402,F401
-
-REGISTRY.update(staged_r14.STAGED_R14)

@@ -390,17 +390,16 @@ ORDER BY id_a, id_b
     "for the batch is the versioned lake's change_feed inserts.",
 )
 def q_incremental_minhash_dedup(spark, sf_dir):
-    import os
     import shutil
 
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (docs,) = load(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 7 == 3
     old, new = docs.where(~is_new), docs.where(is_new)
     # persist the standing index like a real pipeline would, then read
     # it back so the increment provably runs off stored postings
-    idx_path = os.path.join(_TMP, "minhash_index")
+    idx_path = scratch_path("minhash_index")
     shutil.rmtree(idx_path, ignore_errors=True)
     D.minhash_band_postings(old).write.parquet(idx_path)
     index = spark.read.parquet(idx_path)
@@ -517,10 +516,11 @@ def q_stream_neardup_filter(spark, sf_dir):
         create_dedup_state,
         neardup_filter_sink,
     )
-    from clickbom_spark.queries.staged import _TMP, stage_single_parquet
+    from clickbom_spark.queries import scratch_path
+    from clickbom_spark.queries.staged import stage_single_parquet
 
     (docs,) = load(spark, sf_dir, "documents")
-    base = os.path.join(_TMP, "stream_neardup")
+    base = scratch_path("stream_neardup")
     shutil.rmtree(base, ignore_errors=True)
     src = os.path.join(base, "src")
     os.makedirs(src)

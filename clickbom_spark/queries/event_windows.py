@@ -893,7 +893,8 @@ def q_stream_matview(spark, sf_dir):
 
     from clickbom_spark.ext.manifest import VersionedLake, sum_agg_of
     from clickbom_spark.ext.streaming_dedup import streaming_matview_sink
-    from clickbom_spark.queries.staged import _TMP, stage_single_parquet
+    from clickbom_spark.queries import scratch_path
+    from clickbom_spark.queries.staged import stage_single_parquet
 
     (events,) = load(spark, sf_dir, "events")
     rows = events.select(
@@ -901,7 +902,7 @@ def q_stream_matview(spark, sf_dir):
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    base = os.path.join(_TMP, "stream_matview")
+    base = scratch_path("stream_matview")
     shutil.rmtree(base, ignore_errors=True)
     src = os.path.join(base, "src")
     os.makedirs(src)

@@ -17,12 +17,7 @@ import os
 from pyspark.sql import functions as F
 
 from clickbom_spark.io import formats as FMT
-from clickbom_spark.queries import dec, epoch_us, load, query
-
-_TMP = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".fmt_roundtrip",
-)
+from clickbom_spark.queries import dec, epoch_us, load, query, scratch_path
 
 
 @query(
@@ -43,7 +38,7 @@ ORDER BY o_orderstatus
 )
 def q_csv_roundtrip(spark, sf_dir):
     (orders,) = load(spark, sf_dir, "orders")
-    path = os.path.join(_TMP, "orders_csv")
+    path = scratch_path("orders_csv")
     FMT.write_csv(orders, path, n_files=4)
     back = FMT.read_csv(spark, path, orders.schema)
     return (
@@ -76,7 +71,7 @@ ORDER BY event_type
 )
 def q_json_roundtrip(spark, sf_dir):
     (events,) = load(spark, sf_dir, "events")
-    path = os.path.join(_TMP, "events_jsonl")
+    path = scratch_path("events_jsonl")
     FMT.write_jsonl(events, path, n_files=4)
     back = FMT.read_jsonl(spark, path, events.schema)
     return (
@@ -110,7 +105,7 @@ ORDER BY event_type
 )
 def q_orc_roundtrip(spark, sf_dir):
     (events,) = load(spark, sf_dir, "events")
-    path = os.path.join(_TMP, "events_orc")
+    path = scratch_path("events_orc")
     FMT.write_orc(events, path, n_files=4)
     back = FMT.read_orc(spark, path)
     return (
@@ -157,10 +152,8 @@ ORDER BY 1
     "history, the only sane path at 100 TB.",
 )
 def q_schema_evolution(spark, sf_dir):
-    import os
-
     (orders,) = load(spark, sf_dir, "orders")
-    base = os.path.join(_TMP, "orders_evolving")
+    base = scratch_path("orders_evolving")
     v1 = orders.where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     )
@@ -207,7 +200,7 @@ ORDER BY event_type
 )
 def q_tsv_roundtrip(spark, sf_dir):
     (events,) = load(spark, sf_dir, "events")
-    path = os.path.join(_TMP, "events_tsv")
+    path = scratch_path("events_tsv")
     FMT.write_tsv(events, path, n_files=4)
     back = FMT.read_tsv(spark, path, events.schema)
     return (

@@ -207,12 +207,10 @@ ORDER BY 1
     "filter on the unpartitioned original.",
 )
 def q_partition_pruned_scan(spark, sf_dir):
-    import os
-
-    from clickbom_spark.queries.formats import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (events,) = load(spark, sf_dir, "events")
-    path = os.path.join(_TMP, "events_by_day")
+    path = scratch_path("events_by_day")
     L.write_time_partitioned(events, "ts", path)
     back = spark.read.parquet(path)
     return (
@@ -249,13 +247,11 @@ ORDER BY 1
     "partition set comes from a dim filter, not a literal.",
 )
 def q_dynamic_partition_pruning(spark, sf_dir):
-    import os
-
-    from clickbom_spark.queries.formats import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (events,) = load(spark, sf_dir, "events")
-    fact_path = os.path.join(_TMP, "events_by_day")
-    dim_path = os.path.join(_TMP, "date_dim")
+    fact_path = scratch_path("events_by_day")
+    dim_path = scratch_path("date_dim")
     L.write_time_partitioned(events, "ts", fact_path)
     fact = spark.read.parquet(fact_path)
     dim = (

@@ -1,18 +1,10 @@
-"""Staged registry wave for round 6.
-
-Queries here are pytest-verified NOW (tests/test_staged_parity.py runs
-the same oracle-parity harness as tests/test_parity.py) but are held
-out of :data:`clickbom_spark.queries.REGISTRY` so the current round's
-driver correctness budget keeps rotating stale greens (VERDICT r4 §next
-item 1: new wave small, rotation first).  Round 6 activates the wave
-with one line in ``queries/__init__.py``::
-
-    from clickbom_spark.queries import staged  # noqa: F401
-    REGISTRY.update(staged.STAGED)
+"""Registry queries over the ``ext/`` operators, first batch.
 
 Each entry wraps an operator that already landed in ``ext/`` with full
-pytest coverage this round — the wrappers below only bind corpus
-columns and align output aliases with the oracle SQL.
+pytest coverage — the wrappers below only bind corpus columns and align
+output aliases with the oracle SQL.  The ``staged*`` module names are
+historical: these modules register through
+:func:`clickbom_spark.queries.query` like every other query module.
 """
 
 from __future__ import annotations
@@ -22,24 +14,8 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from clickbom_spark.queries import QuerySpec, load
+from clickbom_spark.queries import load, query, scratch_path
 
-STAGED: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
-
-
-_TMP = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".fmt_roundtrip",
-)
 
 
 def stage_single_parquet(df, path: str, mtime: int | None = None) -> None:
@@ -72,7 +48,7 @@ def stage_single_parquet(df, path: str, mtime: int | None = None) -> None:
 # with the same > N/k cutoff is the ground truth.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_heavy_hitters",
     oracle="""
 WITH d AS (
@@ -119,7 +95,7 @@ def q_heavy_hitters(spark, sf_dir):
     return hh_lang.unionByName(hh_et).orderBy("tbl", "val")
 
 
-@staged(
+@query(
     "q_heavy_hitters_weighted",
     oracle="""
 WITH toks AS (
@@ -159,7 +135,7 @@ def q_heavy_hitters_weighted(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_heavy_hitters_by_group",
     oracle="""
 WITH counts AS (
@@ -200,7 +176,7 @@ def q_heavy_hitters_by_group(spark, sf_dir):
 # a pure function of doc_id, so DuckDB recomputes it bit-for-bit.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_weighted_sample",
     oracle="""
 WITH keyed AS (
@@ -245,7 +221,7 @@ def q_weighted_sample(spark, sf_dir):
 # sums only, so the result is engine-portable with no float contract.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_token_shards",
     oracle="""
 WITH p AS (
@@ -290,7 +266,7 @@ def q_token_shards(spark, sf_dir):
 # everything engine-portable.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_weighted_quantiles",
     oracle="""
 WITH agg AS (
@@ -341,7 +317,7 @@ def q_weighted_quantiles(spark, sf_dir):
 # re-derivable via ext/sketches.approx_quantiles_from_sketch.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_quantile_sketch",
     oracle="""
 WITH src AS (
@@ -411,7 +387,7 @@ def q_quantile_sketch(spark, sf_dir):
 # from the raw table — the round-trip must conserve both.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_tar_shards_roundtrip",
     oracle="""
 WITH p AS (
@@ -442,7 +418,7 @@ def q_tar_shards_roundtrip(spark, sf_dir):
     from clickbom_spark.ext.shards import read_tar_shards, write_tar_shards
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, "doc_tar_shards")
+    path = scratch_path("doc_tar_shards")
     shutil.rmtree(path, ignore_errors=True)
     sharded = shard_by_budget(docs, ["doc_id"], "n_chars", budget=20000)
     members = sharded.select(
@@ -474,7 +450,7 @@ def q_tar_shards_roundtrip(spark, sf_dir):
 
 _HE_DIM = 16
 
-@staged(
+@query(
     "q_hashed_embedding",
     oracle=f"""
 WITH toks AS (
@@ -587,7 +563,7 @@ SELECT '{table}.{col}' AS col_name, CAST({_HLL_M} AS BIGINT) AS m,
 FROM ({sv}\n)"""
 
 
-@staged(
+@query(
     "q_hll_distinct",
     oracle="SELECT * FROM (\n"
     + "\nUNION ALL\n".join(
@@ -645,7 +621,7 @@ def q_hll_distinct(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_hll_state_merge",
     oracle=f"""
 WITH even_regs AS ({_hll_regs_sql("orders", "o_orderkey", "o_orderkey % 2 = 0")}
@@ -723,7 +699,7 @@ def _hll_est_of(src_regs: str) -> str:
     return f"(SELECT {_HLL_EST} FROM ({sv}\n))"
 
 
-@staged(
+@query(
     "q_hll_intersection",
     oracle=f"""
 WITH viewers AS ({_hll_regs_sql("events", "user_id", "event_type = 'view'")}
@@ -809,7 +785,7 @@ def q_hll_intersection(spark, sf_dir):
 # v = m - present, so only present (dims, bucket) rows ever shuffle.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_hll_by_group",
     oracle=f"""
 WITH regs AS (
@@ -895,7 +871,7 @@ def _seq_count_sql(steps: str) -> str:
             // {length} AS BIGINT)"""
 
 
-@staged(
+@query(
     "q_sequence_count",
     oracle=f"""
 WITH streams AS (
@@ -998,7 +974,7 @@ GROUP BY w.w0, w.w1, w.w2, w.w3
 """
 
 
-@staged(
+@query(
     "q_train_quality_lr",
     oracle=_lr_oracle(),
     description="Distributed full-batch gradient descent for a linear "
@@ -1051,7 +1027,7 @@ _WF_WINDOW_US = 30 * 60 * 1_000_000  # 30 minutes
 _WF_NEG = -(10**18)
 
 
-@staged(
+@query(
     "q_window_funnel",
     oracle=f"""
 WITH lev AS (
@@ -1129,7 +1105,7 @@ def q_window_funnel(spark, sf_dir):
 _BASKET_CAP = 1024
 
 
-@staged(
+@query(
     "q_triangle_count",
     oracle=f"""
 WITH ok AS (
@@ -1217,7 +1193,7 @@ def copurchase_edges(lineitem, basket_cap: int = _BASKET_CAP,
 # pattern so the float side stays engine-portable.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_l_diversity",
     oracle="""
 WITH cells AS (
@@ -1292,7 +1268,7 @@ def q_l_diversity(spark, sf_dir):
 # integer until one final division.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_model_auc",
     oracle="""
 WITH toks AS (
@@ -1362,7 +1338,7 @@ def q_model_auc(spark, sf_dir):
 _TEMP_TOKENS = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
 
 
-@staged(
+@query(
     "q_temperature_mixture",
     oracle=f"""
 WITH per_lang AS (
@@ -1445,7 +1421,7 @@ def q_temperature_mixture(spark, sf_dir):
 # ratios themselves vs local zlib is pinned in tests/test_properties.py.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_compression_ratio",
     oracle="""
 SELECT source,
@@ -1507,7 +1483,7 @@ def q_compression_ratio(spark, sf_dir):
 # rollup, all built-in expressions.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_retention",
     oracle="""
 WITH per_user AS (
@@ -1560,7 +1536,7 @@ def q_retention(spark, sf_dir):
 # state equals the oracle's CASE-mutated view of the source.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_cow_update",
     oracle="""
 SELECT CASE WHEN source = 'src3' THEN 'en' ELSE lang END AS lang,
@@ -1582,7 +1558,7 @@ def q_cow_update(spark, sf_dir):
     from clickbom_spark.ext.mutations import cow_update
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, "docs_cow_lake")
+    path = scratch_path("docs_cow_lake")
     shutil.rmtree(path, ignore_errors=True)
     docs.repartitionByRange(4, "doc_id").write.parquet(path)
     cow_update(
@@ -1602,7 +1578,7 @@ def q_cow_update(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_cow_upsert",
     oracle="""
 WITH merged AS (
@@ -1627,7 +1603,7 @@ def q_cow_upsert(spark, sf_dir):
     from clickbom_spark.ext.mutations import cow_upsert
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, "docs_merge_lake")
+    path = scratch_path("docs_merge_lake")
     shutil.rmtree(path, ignore_errors=True)
     docs.repartitionByRange(4, "doc_id").write.parquet(path)
     updates = docs.where(F.col("doc_id") % 50 == 0).withColumn(
@@ -1657,7 +1633,7 @@ def q_cow_upsert(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_time_travel",
     oracle="""
 WITH v1 AS (
@@ -1690,7 +1666,7 @@ def q_time_travel(spark, sf_dir):
     from clickbom_spark.ext.manifest import VersionedLake
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, "docs_versioned_lake")
+    path = scratch_path("docs_versioned_lake")
     shutil.rmtree(path, ignore_errors=True)
     lake = VersionedLake.create(spark, path, docs, n_files=4)
     lake.update(F.col("source") == "src3", {"lang": F.lit("en")})
@@ -1712,7 +1688,7 @@ def q_time_travel(spark, sf_dir):
     return out.select("version", "n_docs", "n_en").orderBy("version")
 
 
-@staged(
+@query(
     "q_change_feed",
     oracle="""
 WITH changed AS (
@@ -1743,7 +1719,7 @@ def q_change_feed(spark, sf_dir):
     from clickbom_spark.ext.manifest import VersionedLake, change_feed
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, "docs_cdf_lake")
+    path = scratch_path("docs_cdf_lake")
     shutil.rmtree(path, ignore_errors=True)
     lake = VersionedLake.create(spark, path, docs, n_files=4)
     lake.update(F.col("source") == "src3", {"lang": F.lit("en")})
@@ -1790,7 +1766,7 @@ def q_change_feed(spark, sf_dir):
 _ASOF_TOL_US = 30 * 60 * 1_000_000
 
 
-@staged(
+@query(
     "q_asof_forward_tolerance",
     oracle=f"""
 WITH views AS (
@@ -1853,9 +1829,9 @@ def q_asof_forward_tolerance(spark, sf_dir):
 # Pure bounded windows (per-key partitions), no custom code.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_scd2_intervals",
-    bench=True,  # core20-r11 frozen tier (VERDICT r10 item 3)
+    bench=True,
     oracle="""
 WITH ordered AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS t,
@@ -1980,7 +1956,7 @@ FROM sharded GROUP BY shard ORDER BY shard
 """
 
 
-@staged(
+@query(
     "q_curation_v2",
     oracle=_curation_v2_oracle(),
     description="Model-driven curation pipeline: 3-epoch GD training of "
@@ -2107,7 +2083,7 @@ FROM per_tok GROUP BY doc_id ORDER BY id
 """
 
 
-@staged(
+@query(
     "q_bpe_segment",
     oracle=_bpe_seg_oracle(),
     description="BPE segmentation (the tokenizer encode step, "
@@ -2139,7 +2115,7 @@ def q_bpe_segment(spark, sf_dir):
 # join: bucketing is physical, never semantic.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_bucketed_lake_join",
     oracle="""
 SELECT o_orderpriority,
@@ -2168,8 +2144,8 @@ def q_bucketed_lake_join(spark, sf_dir):
     from clickbom_spark.queries import dec, dsum
 
     orders, lineitem = load(spark, sf_dir, "orders", "lineitem")
-    po = os.path.join(_TMP, "bkt_orders")
-    pl = os.path.join(_TMP, "bkt_lineitem")
+    po = scratch_path("bkt_orders")
+    pl = scratch_path("bkt_lineitem")
     for p in (po, pl):
         shutil.rmtree(p, ignore_errors=True)
     lake_o = create_bucketed(
@@ -2201,7 +2177,7 @@ def q_bucketed_lake_join(spark, sf_dir):
 # on exactly that state after one merge_cdc call.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_cdc_apply",
     oracle="""
 WITH final AS (
@@ -2227,7 +2203,7 @@ def q_cdc_apply(spark, sf_dir):
     from clickbom_spark.ext.manifest import VersionedLake
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, "docs_cdc_lake")
+    path = scratch_path("docs_cdc_lake")
     shutil.rmtree(path, ignore_errors=True)
     lake = VersionedLake.create(
         spark, path, docs.where(F.col("doc_id") % 5 != 0), n_files=4
@@ -2261,7 +2237,7 @@ def q_cdc_apply(spark, sf_dir):
 # final state relationally — the projection must land on exactly that.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_projection_rollup",
     oracle="""
 WITH final AS (
@@ -2293,7 +2269,7 @@ def q_projection_rollup(spark, sf_dir):
     )
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, "docs_projection_lake")
+    path = scratch_path("docs_projection_lake")
     shutil.rmtree(path, ignore_errors=True)
     lake = VersionedLake.create(
         spark,

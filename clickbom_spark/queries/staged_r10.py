@@ -1,14 +1,7 @@
-"""Staged registry wave for round 10 — new operator surface.
+"""Registry queries, round-10 batch — new operator surface.
 
-Same staging workflow as the round-6..9 waves: every query here is
-oracle-parity-verified (bit-exact vs DuckDB at sf0.001 and sf0.01
-via ``tests/test_staged_r10_parity.py``; the strict-parity sweep
-covers sf0.1).  ACTIVATED in round 10 via::
-
-    from clickbom_spark.queries import staged_r10  # noqa: F401
-    REGISTRY.update(staged_r10.STAGED_R10)
-
-in ``queries/__init__.py``.
+Every query is checked bit-exact against its DuckDB oracle by
+``tests/test_parity.py``; the strict-parity sweep covers sf0.1.
 
 Round-10 themes:
 
@@ -44,18 +37,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from clickbom_spark.queries import QuerySpec, load
-
-STAGED_R10: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED_R10[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
+from clickbom_spark.queries import load, query
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +55,7 @@ GROUP BY source ORDER BY source
 """
 
 
-@staged(
+@query(
     "q_dialect_sample",
     oracle="""
 SELECT source, CAST(count(*) AS BIGINT) AS n,
@@ -119,7 +101,7 @@ LIMIT 20
 """
 
 
-@staged(
+@query(
     "q_dialect_multi_array_join",
     oracle="""
 WITH ex AS (
@@ -162,7 +144,7 @@ GROUP BY ws ORDER BY n DESC, ws LIMIT 20
 """
 
 
-@staged(
+@query(
     "q_dialect_aliasless_array_join",
     oracle="""
 WITH ex AS (
@@ -200,7 +182,7 @@ LIMIT 10
 """
 
 
-@staged(
+@query(
     "q_dialect_combo",
     oracle="""
 WITH fin AS (
@@ -245,7 +227,7 @@ def q_dialect_combo(spark, sf_dir):
 # merge where 'fail' would refuse: the final table carries BOTH edits.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_lake_merge_column_conflict",
     oracle="""
 WITH base AS (
@@ -281,7 +263,7 @@ def q_lake_merge_column_conflict(spark, sf_dir):
         merge_branch,
     )
     from clickbom_spark.queries import dec
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (orders,) = load(spark, sf_dir, "orders")
     base = orders.where(F.col("o_orderkey") % 3 == 0).select(
@@ -290,8 +272,8 @@ def q_lake_merge_column_conflict(spark, sf_dir):
         dec("o_totalprice").alias("p"),
     )
     tag = _uuid.uuid4().hex[:8]
-    path = os.path.join(_TMP, f"colmerge_src_{tag}")
-    br_path = os.path.join(_TMP, f"colmerge_br_{tag}")
+    path = scratch_path(f"colmerge_src_{tag}")
+    br_path = scratch_path(f"colmerge_br_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(br_path, ignore_errors=True)
     lake = VersionedLake.create(
@@ -321,9 +303,9 @@ def q_lake_merge_column_conflict(spark, sf_dir):
 # route_aggregate (sums are distributive), and the route is asserted.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_lake_stream_serving",
-    bench=True,  # core20-r11 frozen tier (VERDICT r10 item 3)
+    bench=True,
     oracle="""
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n,
@@ -348,7 +330,7 @@ def q_lake_stream_serving(spark, sf_dir):
         additive_matview_sink,
         route_aggregate,
     )
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
     from clickbom_spark.streaming.lake_source import LakeStreamDataSource
 
     (events,) = load(spark, sf_dir, "events")
@@ -359,8 +341,8 @@ def q_lake_stream_serving(spark, sf_dir):
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     tag = _uuid.uuid4().hex[:8]
-    src_path = os.path.join(_TMP, f"serve_src_{tag}")
-    mv_path = os.path.join(_TMP, f"serve_mv_{tag}")
+    src_path = scratch_path(f"serve_src_{tag}")
+    mv_path = scratch_path(f"serve_mv_{tag}")
     shutil.rmtree(src_path, ignore_errors=True)
     shutil.rmtree(mv_path, ignore_errors=True)
     src = VersionedLake.create(
@@ -401,7 +383,7 @@ def q_lake_stream_serving(spark, sf_dir):
         .writeStream.foreachBatch(
             additive_matview_sink(mv, ["event_type", "bucket"], partial)
         )
-        .option("checkpointLocation", os.path.join(_TMP, f"serve_ck_{tag}"))
+        .option("checkpointLocation", scratch_path(f"serve_ck_{tag}"))
         .trigger(availableNow=True)
         .start()
     )
@@ -426,7 +408,7 @@ def q_lake_stream_serving(spark, sf_dir):
 # detection via lag over present epochs, intervals via lead.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_stream_scd2_incremental",
     oracle="""
 WITH b AS (SELECT MAX(event_id) + 1 AS nn FROM events),
@@ -474,7 +456,8 @@ def q_stream_scd2_incremental(spark, sf_dir):
     import uuid as _uuid
 
     from clickbom_spark.ext.manifest import VersionedLake, scd2_sink
-    from clickbom_spark.queries.staged import _TMP, stage_single_parquet
+    from clickbom_spark.queries import scratch_path
+    from clickbom_spark.queries.staged import stage_single_parquet
 
     (events,) = load(spark, sf_dir, "events")
     rows = events.select(
@@ -484,7 +467,7 @@ def q_stream_scd2_incremental(spark, sf_dir):
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     tag = _uuid.uuid4().hex[:8]
-    base = os.path.join(_TMP, f"scd2_{tag}")
+    base = scratch_path(f"scd2_{tag}")
     src = os.path.join(base, "src")
     os.makedirs(src)
     n = rows.agg(F.max("event_id")).collect()[0][0] + 1
@@ -539,7 +522,7 @@ def q_stream_scd2_incremental(spark, sf_dir):
 # same generating rule: the parser is graded against ground truth.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_url_canonical_dedup",
     oracle="""
 WITH u AS (
@@ -630,7 +613,7 @@ _LPA_ROUND = """
 )"""
 
 
-@staged(
+@query(
     "q_label_propagation",
     oracle="""
 WITH ok AS (
@@ -709,7 +692,7 @@ _BH_Z = (
 )
 
 
-@staged(
+@query(
     "q_benjamini_hochberg",
     oracle=f"""
 WITH c AS (
@@ -818,7 +801,7 @@ def q_benjamini_hochberg(spark, sf_dir):
 # documented cost of derandomized exactness).
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_multi_touch_attribution",
     oracle="""
 WITH ev AS (
@@ -924,7 +907,7 @@ ORDER BY bucket
 """
 
 
-@staged(
+@query(
     "q_dialect_asof_join",
     oracle="""
 WITH p AS (
@@ -994,7 +977,7 @@ ORDER BY bucket
 """
 
 
-@staged(
+@query(
     "q_dialect_retention",
     oracle="""
 WITH r AS (
@@ -1055,7 +1038,7 @@ ORDER BY event_type
 """
 
 
-@staged(
+@query(
     "q_dialect_combinators",
     oracle="""
 SELECT event_type,
@@ -1116,7 +1099,7 @@ _KCORE_ROUND = """
 )"""
 
 
-@staged(
+@query(
     "q_kcore_decomposition",
     oracle="""
 WITH ok AS (
@@ -1190,7 +1173,7 @@ _KMV_HASH_DUCK = (
 )
 
 
-@staged(
+@query(
     "q_kmv_distinct",
     oracle=f"""
 WITH du AS (
@@ -1292,7 +1275,7 @@ def q_kmv_distinct(spark, sf_dir):
 _PARA_W = 8
 
 
-@staged(
+@query(
     "q_paragraph_dedup",
     oracle=f"""
 WITH d AS (
@@ -1401,7 +1384,7 @@ def q_paragraph_dedup(spark, sf_dir):
 _TOKEN_BUDGET = 1500
 
 
-@staged(
+@query(
     "q_domain_token_budget",
     oracle=f"""
 WITH t AS (
@@ -1471,7 +1454,7 @@ def q_domain_token_budget(spark, sf_dir):
 # user count in one final double expression.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_mrr_eval",
     oracle="""
 WITH r AS (
@@ -1554,7 +1537,7 @@ _NDCG_TERM = (
 )
 
 
-@staged(
+@query(
     "q_ndcg_eval",
     oracle=f"""
 WITH g AS (
@@ -1656,7 +1639,7 @@ def q_ndcg_eval(spark, sf_dir):
 # only division is the final per-slot mean.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_seasonal_decompose",
     oracle="""
 WITH hourly AS (
@@ -1731,7 +1714,7 @@ def q_seasonal_decompose(spark, sf_dir):
 # arithmetic, not interpolated: bit-identical in any engine.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_winsorized_mean",
     oracle="""
 WITH c AS (
@@ -1878,9 +1861,9 @@ _BOOT_SEED_DUCK = (
 )
 
 
-@staged(
+@query(
     "q_bootstrap_ci",
-    bench=True,  # core20-r11 frozen tier (VERDICT r10 item 3)
+    bench=True,
     oracle=f"""
 WITH ev AS (
   SELECT event_id, event_type,

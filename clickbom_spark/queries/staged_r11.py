@@ -1,17 +1,7 @@
-"""Staged registry wave for round 11 — new operator surface.
+"""Registry queries, round-11 batch — new operator surface.
 
-Same staging workflow as the round-6..10 waves: every query here is
-oracle-parity-verified NOW (bit-exact vs DuckDB at sf0.001 and sf0.01
-via ``tests/test_staged_r11_parity.py``; the strict-parity sweep
-covers sf0.1) but held OUT of :data:`clickbom_spark.queries.REGISTRY`
-so this round's 50-slot driver budget goes to the 23 round-10
-activations plus the stalest-green rotation.  Round 11 activates
-with::
-
-    from clickbom_spark.queries import staged_r11  # noqa: F401
-    REGISTRY.update(staged_r11.STAGED_R11)
-
-in ``queries/__init__.py``.
+Every query is checked bit-exact against its DuckDB oracle by
+``tests/test_parity.py``; the strict-parity sweep covers sf0.1.
 
 Round-11 themes:
 
@@ -53,18 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from clickbom_spark.queries import QuerySpec, load
-
-STAGED_R11: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED_R11[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
+from clickbom_spark.queries import load, query
 
 
 # ---------------------------------------------------------------------------
@@ -105,7 +84,7 @@ def _register_r11_nation():
     )
 
 
-@staged(
+@query(
     "q_dialect_dictget",
     oracle="""
 WITH d AS (SELECT n_nationkey AS nat_key, n_name AS nat_name,
@@ -166,7 +145,7 @@ ORDER BY n_orders DESC LIMIT 8 WITH TIES
 """
 
 
-@staged(
+@query(
     "q_dialect_with_ties",
     oracle="""
 WITH b AS (SELECT o_custkey, count(*) AS n_orders
@@ -205,7 +184,7 @@ ORDER BY l_returnflag, l_linestatus LIMIT 4 WITH TIES
 """
 
 
-@staged(
+@query(
     "q_dialect_with_ties_multi",
     oracle="""
 WITH b AS (SELECT l_returnflag, l_linestatus,
@@ -251,7 +230,7 @@ ORDER BY bucket WITH FILL FROM 0 TO 75 STEP 3
 """
 
 
-@staged(
+@query(
     "q_dialect_with_fill_int",
     oracle="""
 WITH b AS (SELECT CAST(s_nationkey * 3 AS BIGINT) AS bucket,
@@ -293,7 +272,7 @@ GROUP BY d ORDER BY d WITH FILL
 """
 
 
-@staged(
+@query(
     "q_dialect_with_fill_date",
     oracle="""
 WITH b AS (SELECT CAST(ts AS DATE) AS d,
@@ -342,7 +321,7 @@ def q_dialect_with_fill_date(spark, sf_dir):
 _SAMPLE_ROWS_TARGET = 2500
 
 
-@staged(
+@query(
     "q_dialect_sample_rows",
     oracle=f"""
 SELECT source, CAST(count(*) AS BIGINT) AS n,
@@ -414,7 +393,7 @@ GROUP BY nation ORDER BY nation
 """
 
 
-@staged(
+@query(
     "q_dialect_ddl_composed",
     oracle="""
 WITH d AS (SELECT n_nationkey AS nat_key, n_name AS nat_name
@@ -562,7 +541,7 @@ def _wfp_query(mode: str):
     return fn
 
 
-staged(
+query(
     "q_window_funnel_dedup",
     oracle=_wfp_oracle("strict_deduplication"),
     description="windowFunnel(30 min, 'strict_deduplication')(view, "
@@ -575,7 +554,7 @@ staged(
     "tests/test_r11_ops.py.",
 )(_wfp_query("strict_deduplication"))
 
-staged(
+query(
     "q_window_funnel_increase",
     oracle=_wfp_oracle("strict_increase"),
     description="windowFunnel(30 min, 'strict_increase')(view, click, "
@@ -596,9 +575,9 @@ staged(
 # single-partition window even when one group holds the corpus.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_quantiles_weighted_by_group",
-    bench=True,  # core20-r11 frozen tier (VERDICT r10 item 3)
+    bench=True,
     oracle="""
 WITH agg AS (
   SELECT l_returnflag AS g, l_extendedprice AS v,
@@ -648,7 +627,7 @@ def q_quantiles_weighted_by_group(spark, sf_dir):
 # and cross-product stays far below 2^63 at corpus scale.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_simple_linreg",
     oracle="""
 WITH s AS (
@@ -715,7 +694,7 @@ def q_simple_linreg(spark, sf_dir):
 # exact decimal sum, final H rounded to 6.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_entropy_shannon",
     oracle="""
 WITH c AS (
@@ -771,7 +750,7 @@ def q_entropy_shannon(spark, sf_dir):
 # scale — the scale-shape rule for ordered windows).
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_neighbor_deltas",
     oracle="""
 WITH daily AS (
@@ -820,7 +799,7 @@ def q_neighbor_deltas(spark, sf_dir):
 # string (identical tie VALUES make the output deterministic).
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_group_array_sorted",
     oracle="""
 WITH v AS (
@@ -881,7 +860,7 @@ def q_group_array_sorted(spark, sf_dir):
 # two independent constructions of the same integers.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_array_cum_funcs",
     oracle="""
 WITH v AS (
@@ -987,7 +966,7 @@ def q_array_cum_funcs(spark, sf_dir):
 _STRAT_K = 50
 
 
-@staged(
+@query(
     "q_stratified_equal_alloc",
     oracle=f"""
 WITH sz AS (
@@ -1044,7 +1023,7 @@ def q_stratified_sample(spark, sf_dir):
 # hash is a pure function of doc_id.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_reservoir_group_sample",
     oracle="""
 WITH ranked AS (
@@ -1097,7 +1076,7 @@ def q_reservoir_group_sample(spark, sf_dir):
 # aggregates; the ratios are single fixed IEEE divisions rounded 6.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_ttr_stats",
     oracle="""
 WITH tok AS (
@@ -1159,7 +1138,7 @@ def q_ttr_stats(spark, sf_dir):
 # corpus sizing.  Two hash aggregates over the term-frequency table.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_good_turing",
     oracle="""
 WITH tok AS (
@@ -1222,7 +1201,7 @@ def q_good_turing(spark, sf_dir):
 # expression rounded to 6.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_zipf_slope",
     oracle="""
 WITH tf AS (
@@ -1316,7 +1295,7 @@ def q_zipf_slope(spark, sf_dir):
 # the statistic is one fixed IEEE expression.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_chi2_keyness",
     oracle="""
 WITH tok AS (
@@ -1394,7 +1373,7 @@ def q_chi2_keyness(spark, sf_dir):
 # writing training shards (a bad key shows up here as max/avg >> 1).
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_shard_balance",
     oracle="""
 WITH sh AS (
@@ -1450,9 +1429,9 @@ def q_shard_balance(spark, sf_dir):
 # engines.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_ngram_redundancy",
-    bench=True,  # core20-r11 frozen tier (VERDICT r10 item 3)
+    bench=True,
     oracle="""
 WITH sh AS (
   SELECT source, doc_id,

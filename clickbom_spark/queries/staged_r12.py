@@ -1,16 +1,7 @@
-"""Staged registry wave for round 12 — new operator surface.
+"""Registry queries, round-12 batch — new operator surface.
 
-Same staging workflow as the round-6..11 waves.  This file is built
-AHEAD of schedule (during round 10) so round 11 can focus on
-activation and rotation: every query here is oracle-parity-verified
-via ``tests/test_staged_r12_parity.py`` but held OUT of
-:data:`clickbom_spark.queries.REGISTRY` — and out of the round-11
-activation too.  Round 12 activates with::
-
-    from clickbom_spark.queries import staged_r12  # noqa: F401
-    REGISTRY.update(staged_r12.STAGED_R12)
-
-in ``queries/__init__.py``.
+Every query is checked bit-exact against its DuckDB oracle by
+``tests/test_parity.py``; the strict-parity sweep covers sf0.1.
 
 Round-12 themes (the wave is COMPLETE at 23 queries):
 
@@ -41,18 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from clickbom_spark.queries import QuerySpec, load
-
-STAGED_R12: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED_R12[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
+from clickbom_spark.queries import load, query
 
 
 # ---------------------------------------------------------------------------
@@ -74,7 +54,7 @@ FROM events GROUP BY ym ORDER BY ym
 """
 
 
-@staged(
+@query(
     "q_dialect_json_props",
     oracle="""
 SELECT strftime(ts, '%Y-%m') AS ym,
@@ -126,7 +106,7 @@ GROUP BY source ORDER BY source
 """
 
 
-@staged(
+@query(
     "q_dialect_extract_all",
     oracle=r"""
 SELECT source,
@@ -174,7 +154,7 @@ LIMIT 2, 3 BY event_type
 """
 
 
-@staged(
+@query(
     "q_dialect_limit_by_paging",
     oracle="""
 WITH per_user AS (
@@ -223,7 +203,7 @@ FROM orders
 """
 
 
-@staged(
+@query(
     "q_dialect_star_chain",
     oracle="""
 SELECT max(o_orderkey) AS "max(o_orderkey)",
@@ -272,7 +252,7 @@ _STOPWORDS = (
 )
 
 
-@staged(
+@query(
     "q_lexical_density",
     oracle=f"""
 WITH tok AS (
@@ -336,7 +316,7 @@ def q_lexical_density(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_quantile_exact_bounds",
     oracle="""
 WITH v AS (
@@ -416,7 +396,7 @@ SELECT l_returnflag, untuple(s) FROM (
 """
 
 
-@staged(
+@query(
     "q_dialect_untuple",
     oracle="""
 SELECT l_returnflag,
@@ -457,7 +437,7 @@ LIMIT 5, 10
 """
 
 
-@staged(
+@query(
     "q_dialect_comma_limit",
     oracle="""
 SELECT o_custkey, count(*) AS n
@@ -498,7 +478,7 @@ GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
-@staged(
+@query(
     "q_dialect_array_partial_sort",
     oracle="""
 SELECT l_returnflag,
@@ -542,7 +522,7 @@ FROM events GROUP BY dow, event_type ORDER BY dow, event_type
 """
 
 
-@staged(
+@query(
     "q_dialect_weekday_profile",
     oracle="""
 SELECT isodow(ts) AS dow, event_type,
@@ -574,7 +554,7 @@ def q_dialect_weekday_profile(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_running_accumulate",
     oracle="""
 WITH daily AS (
@@ -626,7 +606,7 @@ def q_running_accumulate(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_pearson_exact",
     oracle="""
 WITH s AS (
@@ -693,7 +673,7 @@ def q_pearson_exact(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_histogram_fixed_width",
     oracle="""
 SELECT CAST(floor(CAST(round(value * 100) AS BIGINT) / 1000) AS BIGINT)
@@ -743,7 +723,7 @@ FROM events GROUP BY stage ORDER BY stage
 """
 
 
-@staged(
+@query(
     "q_dialect_transform_map",
     oracle="""
 SELECT CASE event_type WHEN 'view' THEN 'browse'
@@ -787,7 +767,7 @@ FROM events GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-@staged(
+@query(
     "q_dialect_ordinals",
     oracle="""
 SELECT event_type, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS d,
@@ -829,7 +809,7 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
-@staged(
+@query(
     "q_dialect_null_math",
     oracle="""
 SELECT l_returnflag,
@@ -873,7 +853,7 @@ def q_dialect_null_math(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_heaps_vocab_curve",
     oracle="""
 WITH mx AS (SELECT max(doc_id) AS m FROM documents),
@@ -932,7 +912,7 @@ def q_heaps_vocab_curve(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_cross_entropy_unigram",
     oracle="""
 WITH tok AS (
@@ -1006,7 +986,7 @@ def q_cross_entropy_unigram(spark, sf_dir):
 _SCT_LIMIT_US = 12 * 3600 * 1_000_000
 
 
-@staged(
+@query(
     "q_sequence_count_timed",
     oracle=f"""
 WITH lev AS (
@@ -1100,7 +1080,7 @@ def q_sequence_count_timed(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_interevent_gaps",
     oracle="""
 WITH u AS (
@@ -1186,7 +1166,7 @@ ORDER BY doc_id LIMIT 40
 """
 
 
-@staged(
+@query(
     "q_dialect_string_shape",
     oracle="""
 SELECT doc_id,
@@ -1228,7 +1208,7 @@ ORDER BY q, q0, m_plus2, months_in
 """
 
 
-@staged(
+@query(
     "q_dialect_calendar_shape",
     oracle="""
 SELECT quarter(ts) AS q,
@@ -1266,7 +1246,7 @@ def q_dialect_calendar_shape(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_vocab_overlap",
     oracle="""
 WITH b AS (SELECT min(source) AS lo, max(source) AS hi FROM documents),

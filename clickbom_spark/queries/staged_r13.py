@@ -1,15 +1,7 @@
-"""Staged registry wave for round 13 — new operator surface.
+"""Registry queries, round-13 batch — new operator surface.
 
-Same staging workflow as the round-6..12 waves: every query here is
-oracle-parity-verified NOW (bit-exact vs DuckDB at sf0.001 and sf0.01
-via ``tests/test_staged_r13_parity.py``; ``scripts/strict_parity.py
---staged`` widens the sweep to sf0.1) but held OUT of
-:data:`clickbom_spark.queries.REGISTRY` until round-13 activation::
-
-    from clickbom_spark.queries import staged_r13  # noqa: F401
-    REGISTRY.update(staged_r13.STAGED_R13)
-
-in ``queries/__init__.py``.
+Every query is checked bit-exact against its DuckDB oracle by
+``tests/test_parity.py``; the strict-parity sweep covers sf0.1.
 
 Round-13 themes:
 
@@ -34,11 +26,9 @@ Round-13 themes:
 * **Relational / audit ops** — per-column null/blank audit,
   Herfindahl brand concentration, Pareto coverage via distinct-value
   prefix sums, and order→ship latency statistics.
-* **Pulled forward from the r16 wave** (VERDICT r12 next-round #4) —
-  the ``uniqState/uniqMerge`` MV idiom round-trip (the round-12
-  headline dialect compile) and the outer-join-fed ``countMerge/
-  sumMerge`` NULL→0 ADVICE-fix round-trip, swapped 1-for-1 with
-  ``q_topk_user_share`` / ``q_supplier_coverage`` (now staged_r16).
+* **Aggregate-state MV idioms** — the ``uniqState/uniqMerge`` MV
+  idiom round-trip (the round-12 headline dialect compile) and the
+  outer-join-fed ``countMerge/sumMerge`` NULL→0 ADVICE-fix round-trip.
 
 Float determinism policy (same as the registry): exact integer /
 decimal aggregates first, then ONE fixed IEEE expression per surfaced
@@ -55,18 +45,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from clickbom_spark.dialect import _UNIQ_STATE_SCALE
-from clickbom_spark.queries import QuerySpec, load
-
-STAGED_R13: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED_R13[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
+from clickbom_spark.queries import load, query
 
 
 _CENTS = "toInt64(round(value * 100))"
@@ -101,7 +80,7 @@ FROM (
 """
 
 
-@staged(
+@query(
     "q_dialect_state_merge",
     oracle=f"""
 SELECT event_type,
@@ -163,7 +142,7 @@ FROM (
 """
 
 
-@staged(
+@query(
     "q_dialect_state_merge_incremental",
     oracle=f"""
 SELECT event_type,
@@ -209,7 +188,7 @@ ORDER BY q LIMIT 100, 50 WITH TIES
 """
 
 
-@staged(
+@query(
     "q_dialect_ties_paging",
     oracle="""
 WITH b AS (SELECT CAST(l_quantity AS BIGINT) AS q FROM lineitem),
@@ -252,7 +231,7 @@ ORDER BY d WITH FILL FROM 1 TO 32 STEP 2 INTERPOLATE (cents)
 """
 
 
-@staged(
+@query(
     "q_dialect_fill_interpolate",
     oracle=f"""
 WITH base AS (
@@ -333,7 +312,7 @@ def _register_r13_geo():
     )
 
 
-@staged(
+@query(
     "q_dialect_hierarchy",
     oracle="""
 WITH nk AS (SELECT DISTINCT CAST(s_nationkey AS BIGINT) AS nk
@@ -412,7 +391,7 @@ ORDER BY d WITH FILL FROM 1 TO 31 INTERPOLATE (cents)
 """
 
 
-@staged(
+@query(
     "q_dialect_fill_composed",
     oracle=f"""
 WITH sampled AS (
@@ -477,7 +456,7 @@ def q_dialect_fill_composed(spark, sf_dir):
 # tests/test_plans.py).
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_ewma_daily",
     oracle=f"""
 WITH daily AS (
@@ -558,7 +537,7 @@ _Z_EXPR = (
 )
 
 
-@staged(
+@query(
     "q_daily_anomaly_zscore",
     oracle=f"""
 WITH daily AS (
@@ -621,7 +600,7 @@ _CORR_EXPR = (
 )
 
 
-@staged(
+@query(
     "q_autocorr_lag1",
     oracle=f"""
 WITH daily AS (
@@ -684,7 +663,7 @@ def q_autocorr_lag1(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_cusum_drift",
     oracle=f"""
 WITH daily AS (
@@ -753,7 +732,7 @@ _FANO_EXPR = (
 )
 
 
-@staged(
+@query(
     "q_burstiness_fano",
     oracle=f"""
 WITH daily AS (
@@ -810,7 +789,7 @@ def q_burstiness_fano(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_event_markov_matrix",
     oracle="""
 WITH seq AS (
@@ -870,7 +849,7 @@ def q_event_markov_matrix(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_shingle_novelty",
     oracle="""
 WITH sh AS (
@@ -968,7 +947,7 @@ _PMI_TOP_WORDS = 40
 _PMI_TOP_PAIRS = 20
 
 
-@staged(
+@query(
     "q_token_pmi",
     oracle=f"""
 WITH dw AS (
@@ -1093,7 +1072,7 @@ def q_token_pmi(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_length_band_quality",
     oracle="""
 SELECT CAST(n_chars // 200 AS BIGINT) AS band,
@@ -1144,7 +1123,7 @@ def q_length_band_quality(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_embedding_norms",
     oracle="""
 WITH q AS (
@@ -1202,7 +1181,7 @@ _SESSION_GAP_US = 30 * 60 * 1_000_000
 _SESSION_BUCKET_US = 5 * 60 * 1_000_000
 
 
-@staged(
+@query(
     "q_session_duration_buckets",
     oracle=f"""
 WITH ev AS (
@@ -1291,12 +1270,8 @@ def q_session_duration_buckets(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Pulled forward from the round-16 wave (VERDICT r12 next-round #4):
-# the round-12 headline dialect feature — the uniqState/uniqMerge MV
-# idiom — and the countMerge/sumMerge NULL→0 ADVICE-fix round-trip
-# get driver-visible green rows at the r13 activation instead of
-# waiting for round 16.  Swapped 1-for-1 with q_topk_user_share and
-# q_supplier_coverage (now staged_r16) to keep both waves at 23.
+# The round-12 headline dialect feature — the uniqState/uniqMerge MV
+# idiom — and the countMerge/sumMerge NULL→0 ADVICE-fix round-trip.
 # ---------------------------------------------------------------------------
 
 # DuckDB replay of the dialect's portable HLL finalize (the same
@@ -1352,7 +1327,7 @@ FROM (
 """
 
 
-@staged(
+@query(
     "q_dialect_uniq_state_mv",
     oracle=f"""
 WITH h AS (
@@ -1410,7 +1385,7 @@ GROUP BY s.st ORDER BY st
 """
 
 
-@staged(
+@query(
     "q_dialect_merge_null_zero",
     oracle="""
 WITH s(st) AS (VALUES ('F'), ('O'), ('P'), ('X')),
@@ -1448,7 +1423,7 @@ def q_dialect_merge_null_zero(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_column_null_audit",
     oracle="""
 SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -1513,7 +1488,7 @@ def q_column_null_audit(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_brand_hhi",
     oracle="""
 WITH brand AS (
@@ -1566,7 +1541,7 @@ def q_brand_hhi(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_pareto_coverage",
     oracle="""
 WITH uc AS (
@@ -1655,7 +1630,7 @@ def q_pareto_coverage(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_ship_latency_stats",
     oracle="""
 WITH lat AS (

@@ -1,17 +1,7 @@
-"""Staged registry wave for round 14 — new operator surface (built
-ahead during round 11, same as the r12 wave was built during round
-10).
+"""Registry queries, round-14 batch — new operator surface.
 
-Same staging workflow as the round-6..13 waves: every query here is
-oracle-parity-verified NOW (bit-exact vs DuckDB at sf0.001 and sf0.01
-via ``tests/test_staged_r14_parity.py``; ``scripts/strict_parity.py
---staged`` widens the sweep to sf0.1) but held OUT of
-:data:`clickbom_spark.queries.REGISTRY` until round-14 activation::
-
-    from clickbom_spark.queries import staged_r14  # noqa: F401
-    REGISTRY.update(staged_r14.STAGED_R14)
-
-in ``queries/__init__.py``.
+Every query is checked bit-exact against its DuckDB oracle by
+``tests/test_parity.py``; the strict-parity sweep covers sf0.1.
 
 Round-14 themes:
 
@@ -21,8 +11,7 @@ Round-14 themes:
   (default-before-carry path), a ``-SimpleState`` materialized-view
   round-trip, and a versioned-lake time-travel diff.
 * **Corpus text ops** — keyword burst detection, template prefix
-  clusters, exact-duplicate cluster sizes, word-length distribution,
-  top bigrams per source, and a character-class profile computed by
+  clusters, exact-duplicate cluster sizes, top bigrams per source, and a character-class profile computed by
   length-difference counting (no regexp_count engine quirks).
 * **Event analytics** — user lifecycle stages, weekly type-share
   drift, weekday×hour heatmap, Benford first-digit audit,
@@ -33,14 +22,12 @@ Round-14 themes:
   integers only), monthly returns impact, nation median order value,
   per-label centroid shift and per-dimension variance top-k over
   integer-quantized embeddings.
-* **Round-13 additions** (VERDICT r12 #8b/#8c; wave 23 → 26) —
-  oracle round-trips for the r13 approximate-spelling compiles:
-  ``quantileGK`` in its exact regime (accuracy beyond the group
-  cardinality) vs ``quantile_disc``, the Twitter-epoch snowflake-ID
-  bit arithmetic, and negative-length ``left``/``right`` +
-  ``stringCompare``; plus the reference's ALTER-migration path
-  (``q_ddl_alter_migration``, pulled forward from r16, swapped
-  1-for-1 with ``q_word_length_distribution``).
+* **Round-13 additions** (VERDICT r12 #8b/#8c) — oracle round-trips
+  for the r13 approximate-spelling compiles: ``quantileGK`` in its
+  exact regime (accuracy beyond the group cardinality) vs
+  ``quantile_disc``, the Twitter-epoch snowflake-ID bit arithmetic,
+  and negative-length ``left``/``right`` + ``stringCompare``; plus
+  the reference's ALTER-migration path (``q_ddl_alter_migration``).
 
 Float determinism policy (same as the registry): exact integer /
 decimal aggregates first, then ONE fixed IEEE expression per surfaced
@@ -54,23 +41,11 @@ differs).
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import functions as F
 
-from clickbom_spark.queries import QuerySpec, load
-
-STAGED_R14: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED_R14[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
+from clickbom_spark.queries import load, query
 
 
 _CENTS = "toInt64(round(value * 100))"
@@ -112,7 +87,7 @@ def _register_r14_geo():
     )
 
 
-@staged(
+@query(
     "q_dialect_hier_where",
     oracle="""
 SELECT CAST(s_nationkey AS BIGINT) AS nk,
@@ -163,7 +138,7 @@ ORDER BY d WITH FILL FROM 0 TO 33 STEP 3 INTERPOLATE (cents, hi)
 """
 
 
-@staged(
+@query(
     "q_dialect_interpolate_multi",
     oracle=f"""
 WITH base AS (
@@ -231,7 +206,7 @@ FROM (
 """
 
 
-@staged(
+@query(
     "q_dialect_state_simple_rt",
     oracle=f"""
 SELECT event_type,
@@ -269,7 +244,7 @@ def q_dialect_state_simple_rt(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_lake_time_travel_diff",
     oracle=f"""
 WITH v1 AS (
@@ -299,7 +274,7 @@ def q_lake_time_travel_diff(spark, sf_dir):
     import uuid as _uuid
 
     from clickbom_spark.ext.manifest import VersionedLake
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (events,) = load(spark, sf_dir, "events")
     base = events.select(
@@ -308,7 +283,7 @@ def q_lake_time_travel_diff(spark, sf_dir):
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     tag = _uuid.uuid4().hex[:8]
-    path = os.path.join(_TMP, f"tt_diff_{tag}")
+    path = scratch_path(f"tt_diff_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     try:
         lake = VersionedLake.create(
@@ -359,7 +334,7 @@ def q_lake_time_travel_diff(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_keyword_burst",
     oracle="""
 WITH w AS (
@@ -423,7 +398,7 @@ def q_keyword_burst(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_template_clusters",
     oracle="""
 WITH pre AS (
@@ -469,7 +444,7 @@ def q_template_clusters(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_dup_cluster_sizes",
     oracle="""
 WITH cl AS (
@@ -503,7 +478,7 @@ def q_dup_cluster_sizes(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_top_bigrams",
     oracle="""
 WITH bg AS (
@@ -568,7 +543,7 @@ def q_top_bigrams(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_charclass_profile",
     oracle="""
 SELECT source,
@@ -625,7 +600,7 @@ def q_charclass_profile(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_user_lifecycle",
     oracle="""
 WITH u AS (
@@ -684,7 +659,7 @@ def q_user_lifecycle(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_type_share_drift",
     oracle="""
 WITH wk AS (
@@ -737,7 +712,7 @@ def q_type_share_drift(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_weekday_hour_heatmap",
     oracle="""
 WITH g AS (
@@ -774,7 +749,7 @@ def q_weekday_hour_heatmap(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_benford_first_digit",
     oracle="""
 WITH d AS (
@@ -827,7 +802,7 @@ _CV_EXPR = (
 )
 
 
-@staged(
+@query(
     "q_interarrival_cv",
     oracle=f"""
 WITH gaps AS (
@@ -877,7 +852,7 @@ def q_interarrival_cv(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_reorder_interval_stats",
     oracle="""
 WITH gaps AS (
@@ -932,7 +907,7 @@ def q_reorder_interval_stats(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_abc_classification",
     oracle="""
 WITH pr AS (
@@ -1026,7 +1001,7 @@ def q_abc_classification(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_price_log2_histogram",
     oracle="""
 WITH b AS (
@@ -1079,7 +1054,7 @@ def q_price_log2_histogram(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_brand_entropy",
     oracle="""
 WITH brand AS (
@@ -1142,7 +1117,7 @@ def q_brand_entropy(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_returns_impact",
     oracle="""
 WITH m AS (
@@ -1187,7 +1162,7 @@ def q_returns_impact(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_nation_median_order",
     oracle="""
 WITH o AS (
@@ -1234,7 +1209,7 @@ def q_nation_median_order(spark, sf_dir):
     )
 
 
-@staged(
+@query(
     "q_embedding_centroid_shift",
     oracle="""
 WITH q AS (
@@ -1319,7 +1294,7 @@ _DIMVAR_EXPR = (
 )
 
 
-@staged(
+@query(
     "q_dim_variance_topk",
     oracle=f"""
 WITH q AS (
@@ -1367,11 +1342,6 @@ def q_dim_variance_topk(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Pulled forward from the round-16 wave (round 13; same rationale
-# as the r13 uniqState-MV pull: the reference's ALTER-migration
-# path — VERDICT r12 next-round #8c — gets a driver-visible green
-# row at the r14 activation instead of waiting for round 16.
-# Swapped 1-for-1 with q_word_length_distribution (now staged_r16).
 # The reference's table migration end-to-end: a lake created WITHOUT
 # the source column, the reference's ALTER TABLE ADD COLUMN statement
 # applied verbatim (apply_alter_ddl — metadata-only evolution), new
@@ -1382,7 +1352,7 @@ def q_dim_variance_topk(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "q_ddl_alter_migration",
     oracle="""
 SELECT CASE WHEN o_orderkey % 3 = 0 THEN 'mend_batch'
@@ -1408,7 +1378,7 @@ def q_ddl_alter_migration(spark, sf_dir):
 
     from clickbom_spark.dialect import apply_alter_ddl
     from clickbom_spark.ext.manifest import VersionedLake
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (orders,) = load(spark, sf_dir, "orders")
     base = orders.select(
@@ -1416,7 +1386,7 @@ def q_ddl_alter_migration(spark, sf_dir):
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     tag = _uuid.uuid4().hex[:8]
-    path = os.path.join(_TMP, f"alter_mig_{tag}")
+    path = scratch_path(f"alter_mig_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     try:
         lake = VersionedLake.create(
@@ -1467,7 +1437,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
-@staged(
+@query(
     "q_dialect_quantile_gk",
     oracle="""
 SELECT event_type,
@@ -1508,7 +1478,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
-@staged(
+@query(
     "q_dialect_snowflake_ids",
     oracle="""
 SELECT event_type,
@@ -1554,7 +1524,7 @@ FROM documents GROUP BY lang ORDER BY lang
 """
 
 
-@staged(
+@query(
     "q_dialect_neg_substrings",
     oracle="""
 SELECT lang,
@@ -1608,7 +1578,7 @@ ORDER BY event_type, rn
 """
 
 
-@staged(
+@query(
     "q_dialect_qualify_topn",
     oracle="""
 SELECT event_type, CAST(user_id AS BIGINT) AS user_id,

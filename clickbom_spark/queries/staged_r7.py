@@ -1,37 +1,16 @@
-"""Staged registry wave for round 7 — 14 queries.
+"""Registry queries, round-7 batch — 14 queries.
 
-Same workflow as the (now activated) round-6 wave in ``staged.py``:
-every query here is oracle-parity-verified NOW — bit-exact vs DuckDB
-at sf0.001, sf0.01 AND sf0.1 (``tests/test_staged_r7_parity.py`` runs
-the exact driver comparison; ``python scripts/strict_parity.py
---staged`` sweeps the wave, including under SPARK_GRAFT_TZ /
-SPARK_GRAFT_PARTS / SPARK_GRAFT_SF_DIR variation) — but held out of
-:data:`clickbom_spark.queries.REGISTRY` so the round-6 driver budget
-covers the 47 queries that are currently never-checked instead of
-overflowing.  Round 7 activates with::
-
-    from clickbom_spark.queries import staged_r7  # noqa: F401
-    REGISTRY.update(staged_r7.STAGED_R7)
-
-in ``queries/__init__.py``.
+Every query is checked bit-exact against its DuckDB oracle by
+``tests/test_parity.py`` at sf0.01; ``python scripts/strict_parity.py`` widens the
+sweep, including under SPARK_GRAFT_TZ / SPARK_GRAFT_PARTS /
+SPARK_GRAFT_SF_DIR variation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from clickbom_spark.queries import QuerySpec, load
-
-STAGED_R7: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED_R7[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
+from clickbom_spark.queries import load, query
 
 
 # ---------------------------------------------------------------------------
@@ -40,7 +19,7 @@ def staged(name: str, oracle: str | None = None, description: str = "",
 # the union, which is exactly what the plain GROUP BY oracle computes.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_topk_state_merge",
     oracle="""
 WITH e AS (SELECT event_type FROM events WHERE event_type IS NOT NULL),
@@ -85,7 +64,7 @@ def q_topk_state_merge(spark, sf_dir):
 # string.  Deterministic because the sort key is unique per user.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_user_journeys",
     oracle="""
 SELECT user_id,
@@ -130,7 +109,7 @@ def q_user_journeys(spark, sf_dir):
 # — scale-safe), conditional min.  Integer weights ⇒ exact prefix sums.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_weighted_quantiles_by_group",
     oracle="""
 WITH agg AS (
@@ -178,7 +157,7 @@ def q_weighted_quantiles_by_group(spark, sf_dir):
 # edges.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_degree_distribution",
     oracle="""
 WITH ok AS (
@@ -228,7 +207,7 @@ def q_degree_distribution(spark, sf_dir):
 # decimal totals for the numeric column.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_profile_columns",
     oracle="""
 SELECT 'o_orderstatus' AS col,
@@ -296,7 +275,7 @@ def q_profile_columns(spark, sf_dir):
 # one identical double division rounded past the noise floor.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_yoy_growth",
     oracle="""
 WITH m AS (
@@ -357,7 +336,7 @@ def q_yoy_growth(spark, sf_dir):
 # window; the approximate scale twin is the HLL family).
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_sliding_distinct_users",
     oracle="""
 WITH posted AS (
@@ -409,7 +388,7 @@ def q_sliding_distinct_users(spark, sf_dir):
 # the 1-row total, identical division both engines.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_ratio_to_report",
     oracle="""
 WITH g AS (
@@ -455,7 +434,7 @@ def q_ratio_to_report(spark, sf_dir):
 # (running max, then max gap below it); integer cents ⇒ exact.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_max_drawdown",
     oracle="""
 WITH c AS (
@@ -509,7 +488,7 @@ def q_max_drawdown(spark, sf_dir):
 # much of the corpus sits in how-big duplicate families.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_cc_size_histogram",
     oracle="""
 WITH toks AS (
@@ -587,7 +566,7 @@ def q_cc_size_histogram(spark, sf_dir):
 # — the planner behavior surfaced as a query.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_projection_route",
     oracle="""
 WITH final AS (
@@ -607,7 +586,6 @@ FROM final GROUP BY lang ORDER BY lang
     "routed answer must match exactly.",
 )
 def q_projection_route(spark, sf_dir):
-    import os
     import shutil
 
     from clickbom_spark.ext.manifest import (
@@ -615,10 +593,10 @@ def q_projection_route(spark, sf_dir):
         add_projection,
         route_aggregate,
     )
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, "docs_proute_lake")
+    path = scratch_path("docs_proute_lake")
     shutil.rmtree(path, ignore_errors=True)
     lake = VersionedLake.create(
         spark,
@@ -643,7 +621,7 @@ def q_projection_route(spark, sf_dir):
 # TTL retention sweep on the lake — expiration as a tagged snapshot.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_lake_ttl",
     oracle="""
 SELECT event_type,
@@ -661,15 +639,14 @@ GROUP BY event_type ORDER BY event_type
     "filter the oracle computes.",
 )
 def q_lake_ttl(spark, sf_dir):
-    import os
     import shutil
 
     from clickbom_spark.ext.manifest import VersionedLake, apply_ttl
     from clickbom_spark.queries import epoch_us
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (events,) = load(spark, sf_dir, "events")
-    path = os.path.join(_TMP, "events_ttl_lake")
+    path = scratch_path("events_ttl_lake")
     shutil.rmtree(path, ignore_errors=True)
     lake = VersionedLake.create(
         spark,
@@ -700,7 +677,7 @@ def q_lake_ttl(spark, sf_dir):
 # min/difference-of-multiplicities semantics on both engines.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_set_ops_bag",
     oracle="""
 WITH a AS (
@@ -750,7 +727,7 @@ def q_set_ops_bag(spark, sf_dir):
 # formula, rounded past the noise floor.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_chi_square",
     oracle="""
 WITH o AS (

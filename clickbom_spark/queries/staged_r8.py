@@ -1,17 +1,8 @@
-"""Staged registry wave for round 8 — new operator surface.
+"""Registry queries, round-8 batch — new operator surface.
 
-Same staging workflow as the (now activated) round-6/round-7 waves:
-every query here is oracle-parity-verified NOW (bit-exact vs DuckDB at
-sf0.001 and sf0.01 via ``tests/test_staged_r8_parity.py``; the
-strict-parity sweep covers sf0.1 for the queries whose oracle is not
-O(n²)) but held OUT of :data:`clickbom_spark.queries.REGISTRY` so this
-round's 50-slot driver budget goes to the 16 queries that newly need a
-row plus the stalest-green rotation.  Round 9 activates with::
-
-    from clickbom_spark.queries import staged_r8  # noqa: F401
-    REGISTRY.update(staged_r8.STAGED_R8)
-
-in ``queries/__init__.py``.
+Every query is checked bit-exact against its DuckDB oracle by
+``tests/test_parity.py``; the strict-parity sweep covers sf0.1 for the
+queries whose oracle is not O(n²).
 
 Float determinism policy (same as the registry): exact integer /
 decimal aggregates first, then ONE fixed IEEE expression per surfaced
@@ -21,24 +12,12 @@ SUM over doubles — and ``round(x, 6)`` on surfaced statistics.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from clickbom_spark.queries import QuerySpec, epoch_us, load
-
-STAGED_R8: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED_R8[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
+from clickbom_spark.queries import epoch_us, load, query
 
 
 _TOKENS = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
@@ -53,7 +32,7 @@ _TOKENS = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
 # |b| >= t*|a| length prefilter) must produce the identical set.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_containment_join",
     oracle=f"""
 WITH t AS (
@@ -98,7 +77,7 @@ def q_containment_join(spark, sf_dir):
 # machinery (no global sort), the oracle with a window.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_ks_test",
     oracle="""
 WITH v AS (
@@ -195,7 +174,7 @@ FROM f
 """
 
 
-@staged(
+@query(
     "q_anova_f",
     oracle=_anova_oracle(),
     description="One-way ANOVA F-statistic across event types on value "
@@ -262,7 +241,7 @@ def q_anova_f(spark, sf_dir):
 # so no per-user double is ever summed.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_cuped_ab",
     oracle="""
 WITH per_user AS (
@@ -370,7 +349,7 @@ def q_cuped_ab(spark, sf_dir):
 # neighbor id); votes and accuracies are pure integers.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_knn_classify",
     oracle="""
 WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
@@ -486,7 +465,7 @@ ok AS (
 """
 
 
-@staged(
+@query(
     "q_link_prediction",
     oracle=f"""
 WITH {_EDGE_CTE},
@@ -571,7 +550,7 @@ def q_link_prediction(spark, sf_dir):
 # asserts the diameter stays far below it, so both sides converge.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_bfs_distances",
     oracle=f"""
 WITH RECURSIVE {_EDGE_CTE},
@@ -622,7 +601,7 @@ def q_bfs_distances(spark, sf_dir):
 # IEEE expression on both sides.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_delta_codec_estimate",
     oracle="""
 WITH o AS (
@@ -700,7 +679,7 @@ def q_delta_codec_estimate(spark, sf_dir):
 # encoding would need.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_dict_encode",
     oracle="""
 WITH counts AS (
@@ -756,7 +735,7 @@ def q_dict_encode(spark, sf_dir):
 # median.  Both interpolate even counts as the midpoint mean.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_sliding_median",
     oracle="""
 SELECT event_id, user_id,
@@ -830,7 +809,7 @@ FROM p ORDER BY user_id
 """
 
 
-@staged(
+@query(
     "q_user_entropy",
     oracle=_entropy_oracle(),
     description="Shannon entropy of each user's event-type mix (the "
@@ -872,7 +851,7 @@ def q_user_entropy(spark, sf_dir):
 # touched survive.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_lake_branch",
     oracle="""
 WITH src AS (
@@ -911,12 +890,12 @@ def q_lake_branch(spark, sf_dir):
         branch,
         merge_branch,
     )
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (docs,) = load(spark, sf_dir, "documents")
     tag = _uuid.uuid4().hex[:8]
-    path = os.path.join(_TMP, f"docs_branch_lake_{tag}")
-    br_path = os.path.join(_TMP, f"docs_branch_feature_{tag}")
+    path = scratch_path(f"docs_branch_lake_{tag}")
+    br_path = scratch_path(f"docs_branch_feature_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(br_path, ignore_errors=True)
     lake = VersionedLake.create(
@@ -958,7 +937,7 @@ def q_lake_branch(spark, sf_dir):
 # function of (doc_id, n_chars) and fully oracle-checkable.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_weighted_sample_by_group",
     oracle="""
 WITH keyed AS (
@@ -1008,7 +987,7 @@ def q_weighted_sample_by_group(spark, sf_dir):
 # the relational whole — which is what the oracle computes.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_lake_stream_source",
     oracle="""
 SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1030,12 +1009,12 @@ def q_lake_stream_source(spark, sf_dir):
     import uuid as _uuid
 
     from clickbom_spark.ext.manifest import VersionedLake
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
     from clickbom_spark.streaming.lake_source import LakeStreamDataSource
 
     (docs,) = load(spark, sf_dir, "documents")
     base = docs.select("doc_id", "source", "n_chars")
-    path = os.path.join(_TMP, f"docs_stream_lake_{_uuid.uuid4().hex[:8]}")
+    path = scratch_path(f"docs_stream_lake_{_uuid.uuid4().hex[:8]}")
     shutil.rmtree(path, ignore_errors=True)
     # three append commits: create + two fresh-key upserts
     lake = VersionedLake.create(
@@ -1053,7 +1032,7 @@ def q_lake_stream_source(spark, sf_dir):
         .writeStream.format("memory")
         .queryName(view)
         .option(
-            "checkpointLocation", os.path.join(_TMP, f"ck_{view}")
+            "checkpointLocation", scratch_path(f"ck_{view}")
         )
         .trigger(availableNow=True)
         .start()
@@ -1077,7 +1056,7 @@ def q_lake_stream_source(spark, sf_dir):
 # Welch–Satterthwaite df.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_welch_ttest",
     oracle="""
 WITH e AS (
@@ -1177,7 +1156,7 @@ def q_welch_ttest(spark, sf_dir):
 # tie-correction term, then one fixed z formula.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_mann_whitney",
     oracle="""
 WITH v AS (
@@ -1259,7 +1238,7 @@ def q_mann_whitney(spark, sf_dir):
 # the observed span.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_counter_increase",
     oracle="""
 WITH o AS (
@@ -1342,7 +1321,7 @@ def q_counter_increase(spark, sf_dir):
 # original table, which is what the oracle computes.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_stream_pipeline_e2e",
     oracle="""
 SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1364,14 +1343,14 @@ def q_stream_pipeline_e2e(spark, sf_dir):
         VersionedLake,
         streaming_epoch_sink,
     )
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
     from clickbom_spark.streaming.lake_source import LakeStreamDataSource
 
     (docs,) = load(spark, sf_dir, "documents")
     base = docs.select("doc_id", "lang", "n_chars")
     tag = _uuid.uuid4().hex[:8]
-    src_path = os.path.join(_TMP, f"pipe_src_{tag}")
-    dst_path = os.path.join(_TMP, f"pipe_dst_{tag}")
+    src_path = scratch_path(f"pipe_src_{tag}")
+    dst_path = scratch_path(f"pipe_dst_{tag}")
     src = VersionedLake.create(
         spark, src_path, base.where(F.col("doc_id") % 2 == 0), n_files=2
     )
@@ -1386,7 +1365,7 @@ def q_stream_pipeline_e2e(spark, sf_dir):
         .option("path", src_path)
         .load()
         .writeStream.foreachBatch(streaming_epoch_sink(dst, ["doc_id"]))
-        .option("checkpointLocation", os.path.join(_TMP, f"pipe_ck_{tag}"))
+        .option("checkpointLocation", scratch_path(f"pipe_ck_{tag}"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1409,7 +1388,7 @@ def q_stream_pipeline_e2e(spark, sf_dir):
 # surfaced as constant boolean columns the oracle asserts.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_lake_optimize",
     oracle="""
 WITH g AS (
@@ -1444,7 +1423,7 @@ def q_lake_optimize(spark, sf_dir):
         optimize_zorder,
         read_pruned,
     )
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (lineitem,) = load(spark, sf_dir, "lineitem")
     # distinct (part, supplier) grain: a true row identity for the CDF
@@ -1452,7 +1431,7 @@ def q_lake_optimize(spark, sf_dir):
         lineitem.groupBy("l_partkey", "l_suppkey")
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("qty"))
     )
-    path = os.path.join(_TMP, f"zopt_{_uuid.uuid4().hex[:8]}")
+    path = scratch_path(f"zopt_{_uuid.uuid4().hex[:8]}")
     lake = VersionedLake.create(
         spark, path, base.repartition(8), n_files=8
     )
@@ -1493,7 +1472,7 @@ def q_lake_optimize(spark, sf_dir):
 # straightforwardly renamed view of the base relation.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_rename_drop_column",
     oracle="""
 WITH t AS (
@@ -1524,10 +1503,10 @@ def q_rename_drop_column(spark, sf_dir):
         drop_column,
         rename_column,
     )
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, f"renm_{_uuid.uuid4().hex[:8]}")
+    path = scratch_path(f"renm_{_uuid.uuid4().hex[:8]}")
     lake = VersionedLake.create(
         spark,
         path,
@@ -1555,7 +1534,7 @@ def q_rename_drop_column(spark, sf_dir):
 # The oracle recomputes fresh ∪ per-group-rolled-expired directly.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_ttl_rollup",
     oracle="""
 WITH src AS (
@@ -1588,7 +1567,7 @@ def q_ttl_rollup(spark, sf_dir):
     import uuid as _uuid
 
     from clickbom_spark.ext.manifest import VersionedLake, apply_ttl_rollup
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (events,) = load(spark, sf_dir, "events")
     src = events.where(F.col("value").isNotNull()).select(
@@ -1596,7 +1575,7 @@ def q_ttl_rollup(spark, sf_dir):
         F.dayofmonth("ts").cast("long").alias("day"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    path = os.path.join(_TMP, f"ttlr_{_uuid.uuid4().hex[:8]}")
+    path = scratch_path(f"ttlr_{_uuid.uuid4().hex[:8]}")
     lake = VersionedLake.create(
         spark, path, src.repartitionByRange(4, "day"), n_files=4
     )
@@ -1623,7 +1602,7 @@ def q_ttl_rollup(spark, sf_dir):
 # oracle-asserted constants beside the final aggregate ground truth.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_lake_constraints",
     oracle="""
 WITH t AS (
@@ -1652,10 +1631,10 @@ def q_lake_constraints(spark, sf_dir):
         VersionedLake,
         add_constraint,
     )
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (docs,) = load(spark, sf_dir, "documents")
-    path = os.path.join(_TMP, f"cons_{_uuid.uuid4().hex[:8]}")
+    path = scratch_path(f"cons_{_uuid.uuid4().hex[:8]}")
     lake = VersionedLake.create(
         spark,
         path,
@@ -1711,7 +1690,7 @@ ORDER BY event_type
 """
 
 
-@staged(
+@query(
     "q_clickhouse_dialect",
     oracle="""
 WITH e AS (SELECT * FROM events WHERE value IS NOT NULL)

@@ -1,12 +1,8 @@
-"""Staged registry wave for round 9 — new operator surface.
+"""Registry queries, round-9 batch — new operator surface.
 
-Same staging workflow as the round-6/7/8 waves: every query here was
-oracle-parity-verified while staged (bit-exact vs DuckDB at sf0.001
-and sf0.01 via ``tests/test_staged_r9_parity.py``; the strict-parity
-sweep covers sf0.1 for the queries whose oracle is not O(n²)), then
-ACTIVATED in round 9 via ``REGISTRY.update(staged_r9.STAGED_R9)`` in
-``queries/__init__.py``.  The round-10 holdout lives in
-``staged_r10.py``.
+Every query is checked bit-exact against its DuckDB oracle by
+``tests/test_parity.py``; the strict-parity sweep covers sf0.1 for the
+queries whose oracle is not O(n²).
 
 Round-9 themes:
 
@@ -36,24 +32,12 @@ SUM over doubles — and ``round(x, 6)`` on surfaced statistics.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from clickbom_spark.queries import QuerySpec, epoch_us, load
-
-STAGED_R9: dict[str, QuerySpec] = {}
-
-
-def staged(name: str, oracle: str | None = None, description: str = "",
-           bench: bool = False):
-    def deco(fn):
-        STAGED_R9[name] = QuerySpec(name, fn, oracle, description, bench)
-        return fn
-
-    return deco
+from clickbom_spark.queries import epoch_us, load, query
 
 
 # ---------------------------------------------------------------------------
@@ -74,7 +58,7 @@ LIMIT 25
 """
 
 
-@staged(
+@query(
     "q_dialect_array_join",
     oracle="""
 SELECT w AS word, CAST(count(*) AS BIGINT) AS n
@@ -113,7 +97,7 @@ LIMIT 3 BY event_type
 """
 
 
-@staged(
+@query(
     "q_dialect_limit_by",
     oracle="""
 SELECT event_type, event_id, v_r
@@ -162,7 +146,7 @@ ORDER BY user_id, event_type
 """
 
 
-@staged(
+@query(
     "q_dialect_final",
     oracle="""
 SELECT user_id, event_type,
@@ -225,7 +209,7 @@ ORDER BY host, p, k
 """
 
 
-@staged(
+@query(
     "q_dialect_url_funcs",
     oracle="""
 WITH urls AS (
@@ -274,7 +258,7 @@ def q_dialect_url_funcs(spark, sf_dir):
 # the sums to double and accept last-ulp noise.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_spearman_corr",
     oracle="""
 WITH e AS (
@@ -375,7 +359,7 @@ _BUCKET_SQL = ("CASE WHEN value < 50 THEN 0 WHEN value < 100 THEN 1 "
                "WHEN value < 200 THEN 2 ELSE 3 END")
 
 
-@staged(
+@query(
     "q_cramers_v",
     oracle=f"""
 WITH cells AS (
@@ -469,7 +453,7 @@ def q_cramers_v(spark, sf_dir):
 # one shuffle, no self-join.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_interval_union_length",
     oracle="""
 WITH iv AS (
@@ -548,7 +532,7 @@ def q_interval_union_length(spark, sf_dir):
 # count as intersecting (CH's closed-interval behavior).
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_max_intersections",
     oracle="""
 WITH iv AS (
@@ -631,7 +615,7 @@ def q_max_intersections(spark, sf_dir):
 # One shuffle on (user, key) then a map-side-combinable regroup.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_summap_aggregates",
     oracle="""
 WITH g AS (
@@ -686,7 +670,7 @@ def q_summap_aggregates(spark, sf_dir):
 # empty intersections still appear.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_bitmap_ops",
     oracle="""
 WITH d AS (
@@ -760,7 +744,7 @@ def q_bitmap_ops(spark, sf_dir):
 # users whose signup is their last event surface as '(none)'.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_sequence_next_node",
     oracle="""
 WITH o AS (
@@ -825,7 +809,7 @@ _TIMING_BUCKET = """CASE
   ELSE 30000 END"""
 
 
-@staged(
+@query(
     "q_quantile_timing",
     oracle=f"""
 WITH t AS (
@@ -909,7 +893,7 @@ _HAVERSINE = (
 )
 
 
-@staged(
+@query(
     "q_geo_distance",
     oracle=f"""
 WITH pts AS (
@@ -959,7 +943,7 @@ def q_geo_distance(spark, sf_dir):
 # arithmetic directly on the base table.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_lake_branch_merge_conflict",
     oracle="""
 WITH base AS (
@@ -997,7 +981,7 @@ def q_lake_branch_merge_conflict(spark, sf_dir):
         merge_branch,
     )
     from clickbom_spark.queries import dec
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
 
     (orders,) = load(spark, sf_dir, "orders")
     base = orders.where(F.col("o_orderkey") % 3 == 0).select(
@@ -1006,8 +990,8 @@ def q_lake_branch_merge_conflict(spark, sf_dir):
         dec("o_totalprice").alias("p"),
     )
     tag = _uuid.uuid4().hex[:8]
-    path = os.path.join(_TMP, f"merge_conflict_src_{tag}")
-    br_path = os.path.join(_TMP, f"merge_conflict_br_{tag}")
+    path = scratch_path(f"merge_conflict_src_{tag}")
+    br_path = scratch_path(f"merge_conflict_br_{tag}")
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(br_path, ignore_errors=True)
     lake = VersionedLake.create(
@@ -1045,7 +1029,7 @@ def q_lake_branch_merge_conflict(spark, sf_dir):
 # indistinguishable from recomputation.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_lake_stream_matview",
     oracle="""
 SELECT event_type,
@@ -1068,14 +1052,14 @@ def q_lake_stream_matview(spark, sf_dir):
         additive_matview_sink,
     )
     from clickbom_spark.queries import dec
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
     from clickbom_spark.streaming.lake_source import LakeStreamDataSource
 
     (events,) = load(spark, sf_dir, "events")
     base = events.select("event_id", "event_type", "value")
     tag = _uuid.uuid4().hex[:8]
-    src_path = os.path.join(_TMP, f"mv_src_{tag}")
-    mv_path = os.path.join(_TMP, f"mv_dst_{tag}")
+    src_path = scratch_path(f"mv_src_{tag}")
+    mv_path = scratch_path(f"mv_dst_{tag}")
     shutil.rmtree(src_path, ignore_errors=True)
     shutil.rmtree(mv_path, ignore_errors=True)
     src = VersionedLake.create(
@@ -1108,7 +1092,7 @@ def q_lake_stream_matview(spark, sf_dir):
         .load()
         .writeStream.foreachBatch(
             additive_matview_sink(mv, ["event_type"], partial))
-        .option("checkpointLocation", os.path.join(_TMP, f"mv_ck_{tag}"))
+        .option("checkpointLocation", scratch_path(f"mv_ck_{tag}"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1135,7 +1119,7 @@ _WFS_WINDOW_US = 30 * 60 * 1_000_000
 _WFS_NEG = -(10 ** 18)
 
 
-@staged(
+@query(
     "q_window_funnel_strict",
     oracle=f"""
 WITH lev AS (
@@ -1211,7 +1195,7 @@ _SMT_LIMIT_US = 12 * 3600 * 1_000_000
 _SMT_POS = 10 ** 18
 
 
-@staged(
+@query(
     "q_sequence_match_timed",
     oracle=f"""
 WITH lev AS (
@@ -1307,7 +1291,7 @@ def q_sequence_match_timed(spark, sf_dir):
 # variance from exact integer-cent moments, one fixed IEEE expression.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_student_ttest",
     oracle="""
 WITH e AS (
@@ -1402,7 +1386,7 @@ def q_student_ttest(spark, sf_dir):
 # order, one IEEE division scaled to per-hour.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_bounding_ratio",
     oracle="""
 WITH e AS (
@@ -1470,7 +1454,7 @@ def q_bounding_ratio(spark, sf_dir):
 # user-sized while still pinning the window arithmetic.
 # ---------------------------------------------------------------------------
 
-@staged(
+@query(
     "q_group_array_moving_sum",
     oracle="""
 WITH mv AS (
@@ -1556,7 +1540,7 @@ def _geohash_expr(lat_e2: str, lon_e2: str, div: str) -> str:
     return "concat(" + ", ".join(chars) + ")"
 
 
-@staged(
+@query(
     "q_geohash_encode",
     oracle=f"""
 WITH pts AS (
@@ -1606,7 +1590,7 @@ def q_geohash_encode(spark, sf_dir):
 _LTTB_B = 20
 
 
-@staged(
+@query(
     "q_lttb_downsample",
     oracle=f"""
 WITH pts AS (
@@ -1763,7 +1747,7 @@ ORDER BY event_type
 """
 
 
-@staged(
+@query(
     "q_dialect_with_totals",
     oracle="""
 WITH e AS (SELECT * FROM events WHERE value IS NOT NULL)

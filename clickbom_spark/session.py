@@ -12,6 +12,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Local core count: ``SPARK_GRAFT_CPUS`` if set, else the host's."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "clickbom_spark",
     shuffle_partitions: int | None = None,
@@ -36,7 +41,7 @@ def get_spark(
     - ``spark.sql.files.maxPartitionBytes`` default 128m is kept: scan
       parallelism at 100 TB comes from file splits, not from us.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

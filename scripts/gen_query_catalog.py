@@ -39,53 +39,10 @@ means the query is in the bench.py headline set at sf0.1.
                 f"| `{s.name}` | {'✓' if s.oracle else '—'} |"
                 f" {'✓' if s.bench else ''} | {d} |"
             )
-    # Queries staged for a FUTURE round (not yet in REGISTRY) get their
-    # own section; earlier waves are already activated, so only names
-    # absent from the live registry land here.
-    import importlib
-
-    pool: dict = {}
-    # discover every staged wave module dynamically so a new wave (or
-    # a fresh activation) never leaves this catalog stale
-    qdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "clickbom_spark", "queries",
-    )
-    for fname in sorted(os.listdir(qdir)):
-        if not (fname.startswith("staged") and fname.endswith(".py")):
-            continue
-        mod = importlib.import_module(
-            f"clickbom_spark.queries.{fname[:-3]}"
-        )
-        for attr in dir(mod):
-            if attr.startswith("STAGED"):
-                val = getattr(mod, attr)
-                if isinstance(val, dict):
-                    pool.update(val)
-    pending = [s2 for n2, s2 in pool.items() if n2 not in Q.REGISTRY]
-    if pending:
-        out.append(
-            f"\n## staged — next-round registry wave ({len(pending)})\n"
-        )
-        out.append(
-            "Held out of the live registry so the driver budget keeps "
-            "rotating stale greens; already oracle-parity-tested before "
-            "activation. Activation: "
-            "`REGISTRY.update(staged.STAGED)` in queries/__init__.py.\n"
-        )
-        out.append("| query | oracle | what it proves |")
-        out.append("|---|---|---|")
-        for s2 in pending:
-            d = " ".join(s2.description.split())
-            if len(d) > 220:
-                d = d[:217] + "..."
-            out.append(
-                f"| `{s2.name}` | {'✓' if s2.oracle else '—'} | {d} |"
-            )
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(here, "docs", "QUERIES.md"), "w") as f:
         f.write("\n".join(out) + "\n")
-    print(f"wrote docs/QUERIES.md ({n} registry + {len(pending)} staged)")
+    print(f"wrote docs/QUERIES.md ({n} registry entries)")
 
 
 if __name__ == "__main__":

@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from clickbom_spark.queries import load  # noqa: E402
-from clickbom_spark.session import get_spark  # noqa: E402
+from clickbom_spark.session import default_cpus, get_spark  # noqa: E402
 
 
 def run_once(spark, sf_dir, tick):
@@ -29,7 +29,7 @@ def run_once(spark, sf_dir, tick):
         additive_matview_sink,
         route_aggregate,
     )
-    from clickbom_spark.queries.staged import _TMP
+    from clickbom_spark.queries import scratch_path
     from clickbom_spark.streaming.lake_source import LakeStreamDataSource
 
     marks = {}
@@ -49,8 +49,8 @@ def run_once(spark, sf_dir, tick):
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     tag = uuid.uuid4().hex[:8]
-    src_path = os.path.join(_TMP, f"psrv_src_{tag}")
-    mv_path = os.path.join(_TMP, f"psrv_mv_{tag}")
+    src_path = scratch_path(f"psrv_src_{tag}")
+    mv_path = scratch_path(f"psrv_mv_{tag}")
     mark("setup")
     src = VersionedLake.create(
         spark, src_path, base.where(F.col("event_id") % 3 == 0), n_files=2
@@ -88,7 +88,7 @@ def run_once(spark, sf_dir, tick):
         reader.writeStream.foreachBatch(
             additive_matview_sink(mv, ["event_type", "bucket"], partial)
         )
-        .option("checkpointLocation", os.path.join(_TMP, f"psrv_ck_{tag}"))
+        .option("checkpointLocation", scratch_path(f"psrv_ck_{tag}"))
         .trigger(availableNow=True)
         .start()
     )
@@ -108,7 +108,7 @@ def run_once(spark, sf_dir, tick):
         F.col("sum_s").cast("long").alias("cents"),
     ).orderBy("event_type").collect()
     mark("serve")
-    for p in (src_path, mv_path, os.path.join(_TMP, f"psrv_ck_{tag}")):
+    for p in (src_path, mv_path, scratch_path(f"psrv_ck_{tag}")):
         shutil.rmtree(p, ignore_errors=True)
     return marks
 
@@ -116,7 +116,7 @@ def run_once(spark, sf_dir, tick):
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark("profile-lake", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     run_once(spark, sf_dir, 0)  # warm

@@ -18,7 +18,7 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clickbom_spark.queries import REGISTRY  # noqa: E402
-from clickbom_spark.session import get_spark  # noqa: E402
+from clickbom_spark.session import default_cpus, get_spark  # noqa: E402
 
 
 def api(base: str, path: str):
@@ -29,7 +29,7 @@ def api(base: str, path: str):
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark(
         "profile-query",
         shuffle_partitions=cpus,

@@ -8,13 +8,11 @@ host — the point is the sf0.01→sf0.1 growth RATIO under 10× data, so
 contention noise on either side corrupts the story.
 
 Usage:
-    python scripts/scale_audit.py --wave r18            # one staged wave
-    python scripts/scale_audit.py q_hapax_share ...     # specific names
+    python scripts/scale_audit.py q_hapax_share ...     # registry query names
 """
 
 from __future__ import annotations
 
-import importlib
 import os
 import sys
 import time
@@ -25,31 +23,10 @@ SFS = ("/root/testdata/sf0.01", "/root/testdata/sf0.1")
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    names: list[str] = []
-    pool: dict = {}
+    names = sys.argv[1:]
     from clickbom_spark.queries import REGISTRY
 
-    pool.update(REGISTRY)
-    if args and args[0] == "--wave":
-        wave = args[1]
-        m = importlib.import_module(f"clickbom_spark.queries.staged_{wave}")
-        wave_q = getattr(m, f"STAGED_{wave.upper()}")
-        pool.update(wave_q)
-        names = sorted(wave_q)
-    else:
-        for mod in sorted(
-            f[:-3]
-            for f in os.listdir(
-                os.path.join(os.path.dirname(__file__), "..",
-                             "clickbom_spark", "queries")
-            )
-            if f.startswith("staged_r") and f.endswith(".py")
-        ):
-            m = importlib.import_module(f"clickbom_spark.queries.{mod}")
-            pool.update(getattr(m, f"STAGED_{mod.split('_')[1].upper()}"))
-        names = args
-    missing = [n for n in names if n not in pool]
+    missing = [n for n in names if n not in REGISTRY]
     if missing or not names:
         print(f"unknown or no queries: {missing}")
         return 2
@@ -69,7 +46,7 @@ def main() -> int:
         # warm both scales first so codegen/broadcast caches are hot
         for name in names:
             for sf in SFS:
-                pool[name].fn(spark, sf).collect()
+                REGISTRY[name].fn(spark, sf).collect()
         rows = []
         for name in names:
             mins = []
@@ -77,7 +54,7 @@ def main() -> int:
                 best = float("inf")
                 for _ in range(3):
                     t0 = time.monotonic()
-                    pool[name].fn(spark, sf).collect()
+                    REGISTRY[name].fn(spark, sf).collect()
                     best = min(best, time.monotonic() - t0)
                 mins.append(best)
             ratio = mins[1] / mins[0] if mins[0] else float("nan")

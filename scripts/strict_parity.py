@@ -95,44 +95,16 @@ def main() -> int:
     )
     from clickbom_spark.queries import REGISTRY
 
-    # --staged widens the sweep to the next round's pre-registered wave
-    args = [a for a in sys.argv[1:] if a != "--staged"]
+    args = sys.argv[1:]
     # ADVICE r10: an unknown --flag used to fall through into the name
     # filter, matching zero queries and exiting 0 — a vacuously green
     # gate.  Fail loudly instead.
     unknown = [a for a in args if a.startswith("--")]
     if unknown:
-        print(f"unknown flag(s): {' '.join(unknown)} (only --staged is valid)")
+        print(f"unknown flag(s): {' '.join(unknown)} (this script takes "
+              "only query names)")
         return 2
-    queries = dict(REGISTRY)
-    if "--staged" in sys.argv[1:]:
-        # the r6..r12 waves are live in REGISTRY already; --staged
-        # adds pending holdouts not yet activated (r13/r14/r15 were
-        # pre-built during round 11; r16 during round 12)
-        from clickbom_spark.queries.staged_r13 import STAGED_R13
-
-        queries.update(STAGED_R13)
-        for mod, attr in (
-            ("staged_r14", "STAGED_R14"),
-            ("staged_r15", "STAGED_R15"),
-            ("staged_r16", "STAGED_R16"),
-            ("staged_r17", "STAGED_R17"),
-            ("staged_r18", "STAGED_R18"),
-            ("staged_r19", "STAGED_R19"),
-            ("staged_r20", "STAGED_R20"),
-        ):
-            try:
-                m = __import__(
-                    f"clickbom_spark.queries.{mod}", fromlist=[attr]
-                )
-            except ModuleNotFoundError as e:
-                # skip ONLY the not-yet-written wave; a broken import
-                # INSIDE an existing wave must fail the gate, not
-                # silently drop the wave (vacuously-green class)
-                if e.name == f"clickbom_spark.queries.{mod}":
-                    continue
-                raise
-            queries.update(getattr(m, attr))
+    queries = REGISTRY
     only = set(args)
     missing = only - set(queries)
     if missing:

@@ -15,7 +15,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clickbom_spark.queries import REGISTRY  # noqa: E402
-from clickbom_spark.session import get_spark  # noqa: E402
+from clickbom_spark.session import default_cpus, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -26,7 +26,7 @@ def main() -> None:
         runs = int(args[i + 1])
         del args[i:i + 2]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark("time-query", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     for name in args:

@@ -292,7 +292,7 @@ def test_with_ties_empty_body(spark):
 def test_r11_text_stats_empty_text(spark):
     """TTR / Good-Turing / redundancy on documents whose text is NULL
     or has fewer than 3 tokens: no crash, mathematically-right zeros."""
-    from clickbom_spark.queries.staged_r11 import STAGED_R11
+    from clickbom_spark.queries import REGISTRY
 
     tiny = spark.createDataFrame(
         [(1, "srcA", "en", None, 0), (2, "srcA", "en", "one two", 7),
@@ -305,11 +305,11 @@ def test_r11_text_stats_empty_text(spark):
     orig = sess.read_table
     try:
         sess.read_table = lambda sp, d, t: sp.table("documents")
-        red = STAGED_R11["q_ngram_redundancy"].fn(spark, "ignored")
+        red = REGISTRY["q_ngram_redundancy"].fn(spark, "ignored")
         assert red.count() == 0  # no doc reaches 3 tokens -> no shingles
         ttr = {
             r.source: r for r in
-            STAGED_R11["q_ttr_stats"].fn(spark, "ignored").collect()
+            REGISTRY["q_ttr_stats"].fn(spark, "ignored").collect()
         }
         assert ttr["srcA"].tokens == 2 and ttr["srcA"].ttr == 1.0
         assert ttr["srcB"].hapax == 1

@@ -57,21 +57,15 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-# Streaming-replay parity members take 15-25s each (three sequential
-# micro-batch epochs per side); their replay laws are also covered by
-# tests/test_streaming_dedup.py and the driver's own oracle rotation.
-# They run in the slow lane so the fast lane fits the driver's window.
-_SLOW_PARITY = {"q_stream_neardup_filter", "q_stream_scd2_incremental"}
-
-ORACLE_QUERIES = [
-    pytest.param(n, marks=pytest.mark.slow) if n in _SLOW_PARITY else n
-    for n in sorted(n for n, s in REGISTRY.items() if s.oracle)
-]
+ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle)
 ROWS_ONLY_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 
 
-@pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_oracle_parity(spark, name):
+# name -> None (parity held) or the AssertionError the comparison raised.
+_PARITY_VERDICTS: dict[str, AssertionError | None] = {}
+
+
+def _compare_with_oracle(spark, name: str) -> None:
     spec = REGISTRY[name]
     sdf = spec.fn(spark, SF_CORRECT).toPandas()
     odf = run_oracle(spec.oracle, SF_CORRECT)
@@ -92,6 +86,30 @@ def test_oracle_parity(spark, name):
             f"value mismatch in columns {diff_cols}\n"
             f"spark head:\n{s.head(5)}\noracle head:\n{o.head(5)}"
         )
+
+
+def assert_oracle_parity(spark, name: str) -> None:
+    """Assert that query ``name`` matches its DuckDB oracle at SF_CORRECT.
+
+    The comparison runs once per session and its verdict is kept: the
+    per-module files (``tests/test_staged_r*_parity.py``) assert the same
+    parity for their module's queries without running both sides again.
+    """
+    if name not in _PARITY_VERDICTS:
+        try:
+            _compare_with_oracle(spark, name)
+        except AssertionError as exc:
+            _PARITY_VERDICTS[name] = exc
+        else:
+            _PARITY_VERDICTS[name] = None
+    failure = _PARITY_VERDICTS[name]
+    if failure is not None:
+        raise failure
+
+
+@pytest.mark.parametrize("name", ORACLE_QUERIES)
+def test_oracle_parity(spark, name):
+    assert_oracle_parity(spark, name)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)

@@ -12,8 +12,10 @@ from clickbom_spark.queries import REGISTRY
 from tests.conftest import SF_CORRECT
 
 
-def plan_of(spark, name: str) -> str:
+def plan_of(spark, name: str, collect: bool = False) -> str:
     df = REGISTRY[name].fn(spark, SF_CORRECT)
+    if collect:
+        df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -339,11 +341,6 @@ def test_bench_core13_names_are_bench_registry_entries():
     missing = [n for n in bench.CORE13 if n not in bench_set]
     assert not missing, missing
     assert len(bench.CORE13) == 13
-    # ... and likewise for the frozen core16 / core20-r11 expansions.
-    assert len(bench.CORE16) == 16
-    assert not [n for n in bench.CORE16 if n not in bench_set]
-    assert len(bench.CORE20_R11) == 20
-    assert not [n for n in bench.CORE20_R11 if n not in bench_set]
 
 
 def test_gopher_repetition_single_scan_no_join(spark):
@@ -443,22 +440,13 @@ def test_runtime_bloom_filter_join_pruning_available(spark):
             spark.conf.set(k, v)
 
 
-# ---- staged-wave plan shapes (queries/staged.py) ----
-
-
-def staged_plan_of(spark, name: str, collect: bool = False) -> str:
-    from clickbom_spark.queries.staged import STAGED
-
-    df = STAGED[name].fn(spark, SF_CORRECT)
-    if collect:
-        df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
+# ---- plan shapes for queries/staged.py ----
 
 
 def test_triangle_count_no_cartesian_wedge(spark):
     """The wedge-close must be hash equi-joins; the only cross joins
     allowed are the three 1-row count frames at the very top."""
-    plan = staged_plan_of(spark, "q_triangle_count", collect=True)
+    plan = plan_of(spark, "q_triangle_count", collect=True)
     assert "CartesianProduct" not in plan.replace(
         "CartesianProduct", "", 3
     ), plan  # > 3 cross joins means the wedge join degenerated
@@ -506,7 +494,7 @@ def test_sequence_and_funnel_single_aggregate_no_window(spark):
     """The automaton/funnel folds are per-key hash aggregates — no
     window operator, no join, no global sort."""
     for name in ("q_sequence_count", "q_window_funnel"):
-        plan = staged_plan_of(spark, name)
+        plan = plan_of(spark, name)
         body = plan.split("TakeOrderedAndProject")[-1]
         assert "Window" not in body, (name, plan)
         assert "Join" not in body, (name, plan)
@@ -570,10 +558,7 @@ def test_prefix_sum_consumers_have_no_global_data_window(spark, name):
     every running-sum window over data rows must be partitioned by the
     value bucket; the only unpartitioned window is the O(buckets)
     offsets frame."""
-    from clickbom_spark.queries.staged import STAGED
-
-    plan = STAGED[name].fn(spark, SF_CORRECT)._jdf.queryExecution(
-    ).executedPlan().toString()
+    plan = plan_of(spark, name)
     win_lines = [ln for ln in plan.split("\n") if "windowspecdefinition" in ln]
     assert win_lines, plan
     # windows lacking a _bkt partition key may only be the offsets
@@ -630,17 +615,11 @@ def test_weighted_quantiles_by_group_no_per_group_data_window(spark):
     for ln in win_lines:
         assert "_bkt" in ln or "_val" in ln, ln
 
-def _staged_r8_plan(spark, name: str) -> str:
-    from clickbom_spark.queries.staged_r8 import STAGED_R8
-
-    df = STAGED_R8[name].fn(spark, SF_CORRECT)
-    return df._jdf.queryExecution().executedPlan().toString()
-
 
 def test_containment_join_is_posting_equi_join(spark):
     """Candidate generation must be a hash equi-join on the prefix
     token — never a cartesian product over the corpus."""
-    plan = _staged_r8_plan(spark, "q_containment_join")
+    plan = plan_of(spark, "q_containment_join")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert (
@@ -653,7 +632,7 @@ def test_containment_join_is_posting_equi_join(spark):
 def test_ks_test_no_global_data_window(spark):
     """The KS ECDFs must accumulate in bucket-partitioned windows; the
     only unpartitioned window is the O(buckets) offsets frame."""
-    plan = _staged_r8_plan(spark, "q_ks_test")
+    plan = plan_of(spark, "q_ks_test")
     win_lines = [ln for ln in plan.split("\n") if "windowspecdefinition" in ln]
     assert win_lines, plan
     for ln in win_lines:
@@ -663,7 +642,7 @@ def test_ks_test_no_global_data_window(spark):
 def test_link_prediction_no_cartesian(spark):
     """Common-neighbor generation must be the wedge equi-join on the
     shared neighbor; the only tolerated nested loop is none."""
-    plan = _staged_r8_plan(spark, "q_link_prediction")
+    plan = plan_of(spark, "q_link_prediction")
     assert "CartesianProduct" not in plan, plan
 
 
@@ -671,23 +650,16 @@ def test_anova_and_cuped_are_single_aggregate_plans(spark):
     """The statistics queries collapse to hash aggregates — no joins,
     no windows, no shuffle beyond the aggregate exchanges."""
     for name in ("q_anova_f", "q_cuped_ab"):
-        plan = _staged_r8_plan(spark, name)
+        plan = plan_of(spark, name)
         assert "windowspecdefinition" not in plan, (name, plan)
         assert "Join" not in plan, (name, plan)
-
-
-def _staged_r9_plan(spark, name: str) -> str:
-    from clickbom_spark.queries.staged_r9 import STAGED_R9
-
-    df = STAGED_R9[name].fn(spark, SF_CORRECT)
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_spearman_windows_are_group_partitioned(spark):
     """rankCorr's ranks must come from event_type-partitioned windows
     (parallel across groups); no unpartitioned global sort of the fact
     table, and the final reduce is a hash aggregate."""
-    plan = _staged_r9_plan(spark, "q_spearman_corr")
+    plan = plan_of(spark, "q_spearman_corr")
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
     ]
@@ -700,7 +672,7 @@ def test_bitmap_ops_intersection_is_equi_join(spark):
     """groupBitmapAnd candidate generation must be the hash equi-join
     on user_id; the only tolerated nested-loop is the 5x5 totals grid
     (constant-sized)."""
-    plan = _staged_r9_plan(spark, "q_bitmap_ops")
+    plan = plan_of(spark, "q_bitmap_ops")
     assert (
         "SortMergeJoin" in plan
         or "ShuffledHashJoin" in plan
@@ -712,14 +684,14 @@ def test_interval_union_single_user_partitioning(spark):
     """Gaps-and-islands must run entirely inside user_id partitions —
     both windows and the island aggregate reuse one shuffle; no global
     window."""
-    plan = _staged_r9_plan(spark, "q_interval_union_length")
+    plan = plan_of(spark, "q_interval_union_length")
     for ln in plan.split("\n"):
         if "windowspecdefinition" in ln:
             assert "user_id" in ln, ln
 
 
 def test_max_intersections_sweep_is_type_partitioned(spark):
-    plan = _staged_r9_plan(spark, "q_max_intersections")
+    plan = plan_of(spark, "q_max_intersections")
     for ln in plan.split("\n"):
         if "windowspecdefinition" in ln:
             assert "event_type" in ln, ln
@@ -729,7 +701,7 @@ def test_cramers_v_no_fact_table_window(spark):
     """The chi-square marginals run over the CELLS frame (r x c rows),
     never over the fact table: every window partitions by a cell
     coordinate, and the plan carries no per-row window on events."""
-    plan = _staged_r9_plan(spark, "q_cramers_v")
+    plan = plan_of(spark, "q_cramers_v")
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
     ]
@@ -741,7 +713,7 @@ def test_cramers_v_no_fact_table_window(spark):
 def test_geo_distance_is_scan_projection(spark):
     """greatCircleDistance is one narrow projection: no joins, no
     windows, no aggregates — scan-bound at scale."""
-    plan = _staged_r9_plan(spark, "q_geo_distance")
+    plan = plan_of(spark, "q_geo_distance")
     assert "Join" not in plan, plan
     assert "windowspecdefinition" not in plan, plan
 
@@ -749,7 +721,7 @@ def test_geo_distance_is_scan_projection(spark):
 def test_dialect_final_collapses_to_one_aggregate(spark):
     """FROM t FINAL must become ONE keep-latest hash aggregate on the
     engine key — not a window + filter over the whole table."""
-    plan = _staged_r9_plan(spark, "q_dialect_final")
+    plan = plan_of(spark, "q_dialect_final")
     assert "max_by" in plan or "HashAggregate" in plan, plan
     assert "windowspecdefinition" not in plan, plan
 
@@ -758,7 +730,7 @@ def test_with_totals_is_single_pass_expand(spark):
     """The WITH TOTALS lowering must compute per-group rows and the
     totals row in ONE aggregation pass (Expand + HashAggregate), not a
     union of two scans."""
-    plan = _staged_r9_plan(spark, "q_dialect_with_totals")
+    plan = plan_of(spark, "q_dialect_with_totals")
     assert "Expand" in plan, plan
     assert plan.count("Scan parquet") == 1, plan
 
@@ -766,25 +738,15 @@ def test_with_totals_is_single_pass_expand(spark):
 def test_dialect_array_join_pushes_filter_to_scan(spark):
     """The translated ARRAY JOIN query's lang filter must reach the
     parquet scan as a pushed filter, not run post-explode."""
-    from clickbom_spark.queries.staged_r9 import STAGED_R9
-
-    df = STAGED_R9["q_dialect_array_join"].fn(spark, SF_CORRECT)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(spark, "q_dialect_array_join")
     assert "PushedFilters" in plan and "lang" in plan.split(
         "PushedFilters", 1)[1][:200], plan
-
-
-def _staged_r10_plan(spark, name: str) -> str:
-    from clickbom_spark.queries.staged_r10 import STAGED_R10
-
-    df = STAGED_R10[name].fn(spark, SF_CORRECT)
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_dialect_sample_is_filtered_scan(spark):
     """SAMPLE k must compile to a hash-threshold FILTER over one scan —
     no join, no window, no second pass."""
-    plan = _staged_r10_plan(spark, "q_dialect_sample")
+    plan = plan_of(spark, "q_dialect_sample")
     assert "Join" not in plan, plan
     assert "windowspecdefinition" not in plan, plan
     assert plan.count("Scan parquet") == 1, plan
@@ -794,13 +756,13 @@ def test_multi_array_join_is_one_generator(spark):
     """Multi-array ARRAY JOIN (zip) must be ONE Generate over the
     inline(transform(...)) expression — never two explodes joined on
     position, never a cartesian."""
-    plan = _staged_r10_plan(spark, "q_dialect_multi_array_join")
+    plan = plan_of(spark, "q_dialect_multi_array_join")
     assert plan.count("Generate") == 1, plan
     assert "CartesianProduct" not in plan, plan
 
 
 def test_aliasless_array_join_is_one_generator(spark):
-    plan = _staged_r10_plan(spark, "q_dialect_aliasless_array_join")
+    plan = plan_of(spark, "q_dialect_aliasless_array_join")
     assert plan.count("Generate") == 1, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -808,7 +770,7 @@ def test_aliasless_array_join_is_one_generator(spark):
 def test_dialect_combo_window_is_group_partitioned(spark):
     """FINAL collapses via max_by aggregate; the LIMIT n BY window runs
     over the (already collapsed) frame partitioned by event_type."""
-    plan = _staged_r10_plan(spark, "q_dialect_combo")
+    plan = plan_of(spark, "q_dialect_combo")
     assert "max_by" in plan, plan
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
@@ -822,14 +784,14 @@ def test_bh_windows_never_touch_fact_rows(spark):
     """Benjamini-Hochberg's rank/count windows run over the per-nation
     AGGREGATE frame (<= nation-count rows at any SF) — the raw cents
     column must never appear in a window."""
-    plan = _staged_r10_plan(spark, "q_benjamini_hochberg")
+    plan = plan_of(spark, "q_benjamini_hochberg")
     for ln in plan.split("\n"):
         if "windowspecdefinition" in ln:
             assert "cents" not in ln, ln
 
 
 def test_multi_touch_windows_are_user_partitioned(spark):
-    plan = _staged_r10_plan(spark, "q_multi_touch_attribution")
+    plan = plan_of(spark, "q_multi_touch_attribution")
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
     ]
@@ -841,7 +803,7 @@ def test_multi_touch_windows_are_user_partitioned(spark):
 def test_url_canonical_dedup_is_scan_aggregate(spark):
     """URL canonicalization is one scan -> narrow projection -> hash
     aggregate: no joins, no windows, no Python boundary."""
-    plan = _staged_r10_plan(spark, "q_url_canonical_dedup")
+    plan = plan_of(spark, "q_url_canonical_dedup")
     assert "Join" not in plan, plan
     assert "windowspecdefinition" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
@@ -850,7 +812,7 @@ def test_url_canonical_dedup_is_scan_aggregate(spark):
 def test_label_propagation_no_cartesian(spark):
     """LPA rounds are edge equi-joins + hash aggregates; nothing in the
     final frame's plan may be a nested-loop product."""
-    plan = _staged_r10_plan(spark, "q_label_propagation")
+    plan = plan_of(spark, "q_label_propagation")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -859,7 +821,7 @@ def test_asof_join_is_equi_join_with_partitioned_window(spark):
     """The compiled ASOF JOIN must be a keyed join (sort-merge or
     shuffled-hash on user_id), never a nested-loop product; its lead()
     window must be partitioned by the equality key."""
-    plan = _staged_r10_plan(spark, "q_dialect_asof_join")
+    plan = plan_of(spark, "q_dialect_asof_join")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     win_lines = [
@@ -873,7 +835,7 @@ def test_asof_join_is_equi_join_with_partitioned_window(spark):
 def test_dialect_retention_is_single_scan_two_aggregates(spark):
     """retention() compiles to gated max(CASE) aggregates: one scan,
     no joins, no windows."""
-    plan = _staged_r10_plan(spark, "q_dialect_retention")
+    plan = plan_of(spark, "q_dialect_retention")
     assert "Join" not in plan, plan
     assert "windowspecdefinition" not in plan, plan
     assert plan.count("Scan parquet") == 1, plan
@@ -883,7 +845,7 @@ def test_dialect_combinators_single_pass(spark):
     """The -If combinator family is one scan -> one aggregate pass
     (plus the exact-median sort inside percentile): no joins, no
     windows, no second scan."""
-    plan = _staged_r10_plan(spark, "q_dialect_combinators")
+    plan = plan_of(spark, "q_dialect_combinators")
     assert "Join" not in plan, plan
     assert "windowspecdefinition" not in plan, plan
     assert plan.count("Scan parquet") == 1, plan
@@ -892,7 +854,7 @@ def test_dialect_combinators_single_pass(spark):
 def test_kcore_no_cartesian(spark):
     """k-core rounds are degree aggregates + survivor equi-joins;
     nothing in the final frame may be a nested-loop product."""
-    plan = _staged_r10_plan(spark, "q_kcore_decomposition")
+    plan = plan_of(spark, "q_kcore_decomposition")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -903,10 +865,9 @@ def test_kmv_merge_window_sits_on_sketch_not_data(spark):
     the unioned bottom-k sketch (<= k x groups rows by construction),
     i.e. it must sit above a rn <= k filter, never above the raw
     distinct-hash frame."""
-    from clickbom_spark.queries.staged_r10 import _KMV_K, STAGED_R10
+    from clickbom_spark.queries.staged_r10 import _KMV_K
 
-    df = STAGED_R10["q_kmv_distinct"].fn(spark, SF_CORRECT)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(spark, "q_kmv_distinct")
     assert "CartesianProduct" not in plan, plan
     # the merged frame is distinct-of-bottom-k: the plan must contain
     # the rn <= K filter BELOW the global window's exchange
@@ -923,7 +884,7 @@ def test_kmv_merge_window_sits_on_sketch_not_data(spark):
 def test_paragraph_dedup_one_generator_keyed_window(spark):
     """Chunking is ONE Generate (posexplode of the transform array);
     keep-first runs in a window PARTITIONED by the paragraph text."""
-    plan = _staged_r10_plan(spark, "q_paragraph_dedup")
+    plan = plan_of(spark, "q_paragraph_dedup")
     assert plan.count("Generate") == 1, plan
     assert "CartesianProduct" not in plan, plan
     win_lines = [
@@ -935,7 +896,7 @@ def test_paragraph_dedup_one_generator_keyed_window(spark):
 
 
 def test_token_budget_windows_are_source_partitioned(spark):
-    plan = _staged_r10_plan(spark, "q_domain_token_budget")
+    plan = plan_of(spark, "q_domain_token_budget")
     assert "Join" not in plan, plan
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
@@ -949,7 +910,7 @@ def test_eval_metric_windows_are_user_partitioned(spark):
     """MRR and NDCG rank within per-user partitions — a global ranking
     would single-partition the fact table."""
     for name in ("q_mrr_eval", "q_ndcg_eval"):
-        plan = _staged_r10_plan(spark, name)
+        plan = plan_of(spark, name)
         win_lines = [
             ln for ln in plan.split("\n") if "windowspecdefinition" in ln
         ]
@@ -962,7 +923,7 @@ def test_seasonal_window_sits_on_hourly_aggregate(spark):
     """The 25-point moving average runs over the HOURLY aggregate
     frame (calendar-bounded), never over raw event rows: no raw
     `value` column may appear inside a window line."""
-    plan = _staged_r10_plan(spark, "q_seasonal_decompose")
+    plan = plan_of(spark, "q_seasonal_decompose")
     for ln in plan.split("\n"):
         if "windowspecdefinition" in ln:
             assert "value#" not in ln, ln
@@ -972,7 +933,7 @@ def test_seasonal_window_sits_on_hourly_aggregate(spark):
 def test_winsorized_mean_broadcasts_boundaries(spark):
     """Boundary extraction windows are nation-partitioned and the
     clamp join broadcasts the 25-row boundary side."""
-    plan = _staged_r10_plan(spark, "q_winsorized_mean")
+    plan = plan_of(spark, "q_winsorized_mean")
     assert "BroadcastHashJoin" in plan, plan
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
@@ -986,7 +947,7 @@ def test_bootstrap_windows_partitioned_and_single_generator(spark):
     """The Poisson bootstrap explode is ONE Generate feeding partial
     aggregation (B rows per partition cross the shuffle, never B data
     copies); the CI rank window is event_type-partitioned."""
-    plan = _staged_r10_plan(spark, "q_bootstrap_ci")
+    plan = plan_of(spark, "q_bootstrap_ci")
     assert plan.count("Generate") == 1, plan
     assert "CartesianProduct" not in plan, plan
     win_lines = [
@@ -997,20 +958,13 @@ def test_bootstrap_windows_partitioned_and_single_generator(spark):
         assert "event_type" in ln, ln
 
 
-# ---- round-11 staged wave: the plans the 100 TB designs claim ----
-
-
-def _staged_r11_plan(spark, name: str) -> str:
-    from clickbom_spark.queries.staged_r11 import STAGED_R11
-
-    df = STAGED_R11[name].fn(spark, SF_CORRECT)
-    return df._jdf.queryExecution().executedPlan().toString()
+# ---- queries/staged_r11.py: the plans the 100 TB designs claim ----
 
 
 def test_dictget_rt_broadcasts_every_lookup(spark):
     """Each dictGet correlated subquery must come back as a BROADCAST
     join of the dictionary view — never a shuffle of the fact side."""
-    plan = _staged_r11_plan(spark, "q_dialect_dictget")
+    plan = plan_of(spark, "q_dialect_dictget")
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -1019,7 +973,7 @@ def test_dictget_rt_broadcasts_every_lookup(spark):
 def test_with_ties_rt_is_top_k_not_window(spark):
     """Single-key WITH TIES compiles to the distributed cutoff: a
     TakeOrderedAndProject top-k feeding a filter, with NO window."""
-    plan = _staged_r11_plan(spark, "q_dialect_with_ties")
+    plan = plan_of(spark, "q_dialect_with_ties")
     assert "TakeOrderedAndProject" in plan, plan
     assert "windowspecdefinition" not in plan, plan
 
@@ -1029,7 +983,7 @@ def test_with_fill_rt_single_scan_per_leg(spark):
     the generated spine (round-11 rewrite, ADVICE r10): the base is
     read exactly once and NOTHING is persisted — the old persist
     leaked cached partitions for the session lifetime."""
-    plan = _staged_r11_plan(spark, "q_dialect_with_fill_int")
+    plan = plan_of(spark, "q_dialect_with_fill_int")
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) == 1, plan
     assert "InMemoryTableScan" not in plan, plan
@@ -1040,7 +994,7 @@ def test_funnel_pair_modes_are_one_aggregate(spark):
     """The pair-state funnel folds are one hash aggregate per user —
     no window, no join, no per-event shuffle beyond the groupBy."""
     for name in ("q_window_funnel_dedup", "q_window_funnel_increase"):
-        plan = _staged_r11_plan(spark, name)
+        plan = plan_of(spark, name)
         assert "windowspecdefinition" not in plan, plan
         assert "Join" not in plan, plan
         assert plan.count("Exchange") <= 2, plan
@@ -1049,7 +1003,7 @@ def test_funnel_pair_modes_are_one_aggregate(spark):
 def test_keyness_joins_are_broadcast_scalars(spark):
     """chi2 keyness: the focus-source and totals frames are 1-row
     broadcasts; candidate generation never goes cartesian-wide."""
-    plan = _staged_r11_plan(spark, "q_chi2_keyness")
+    plan = plan_of(spark, "q_chi2_keyness")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan, plan  # top-10 is top-k
@@ -1058,13 +1012,13 @@ def test_keyness_joins_are_broadcast_scalars(spark):
 def test_ngram_redundancy_is_postings_not_pairs(spark):
     """Redundancy counts flow through (source, shingle) postings —
     one generator, hash aggregates, never a document-pair join."""
-    plan = _staged_r11_plan(spark, "q_ngram_redundancy")
+    plan = plan_of(spark, "q_ngram_redundancy")
     assert plan.count("Generate") == 1, plan
     assert "Join" not in plan, plan
 
 
 def test_reservoir_window_is_group_partitioned(spark):
-    plan = _staged_r11_plan(spark, "q_reservoir_group_sample")
+    plan = plan_of(spark, "q_reservoir_group_sample")
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
     ]
@@ -1074,7 +1028,7 @@ def test_reservoir_window_is_group_partitioned(spark):
 
 
 def test_stratified_sample_broadcasts_strata_counts(spark):
-    plan = _staged_r11_plan(spark, "q_stratified_equal_alloc")
+    plan = plan_of(spark, "q_stratified_equal_alloc")
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -1085,7 +1039,7 @@ def test_quantiles_by_group_windows_never_partition_by_group_alone(spark):
     heavy group through one task.  The tiny offsets-frame windows
     don't touch the value column, so anchoring on it pins the right
     window."""
-    plan = _staged_r11_plan(spark, "q_quantiles_weighted_by_group")
+    plan = plan_of(spark, "q_quantiles_weighted_by_group")
     data_wins = [
         ln
         for ln in plan.split("\n")
@@ -1097,24 +1051,17 @@ def test_quantiles_by_group_windows_never_partition_by_group_alone(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-13 staged wave: scale-shape guards (same lens as the r11/r12
+# queries/staged_r13.py: scale-shape guards (same lens as the r11/r12
 # guards above — no cartesian candidate generation, windows only over
 # bounded frames, single-scan aggregates where the op allows it).
 # ---------------------------------------------------------------------------
-
-
-def _staged_r13_plan(spark, name: str) -> str:
-    from clickbom_spark.queries.staged_r13 import STAGED_R13
-
-    df = STAGED_R13[name].fn(spark, SF_CORRECT)
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_state_merge_rt_is_pure_aggregation(spark):
     """The -State/-Merge round-trip is two aggregation levels over
     ONE scan — no join, no window; Spark's partial aggregation IS
     the state algebra."""
-    plan = _staged_r13_plan(spark, "q_dialect_state_merge")
+    plan = plan_of(spark, "q_dialect_state_merge")
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) == 1, plan
     assert "Join" not in plan, plan
@@ -1125,7 +1072,7 @@ def test_fill_interpolate_single_scan_carry(spark):
     """INTERPOLATE keeps the round-11 fill shape: ONE base scan into
     a full-outer spine join, nothing persisted, plus exactly one
     window (the last-real-row carry)."""
-    plan = _staged_r13_plan(spark, "q_dialect_fill_interpolate")
+    plan = plan_of(spark, "q_dialect_fill_interpolate")
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) == 1, plan
     assert "FullOuter" in plan, plan
@@ -1137,7 +1084,7 @@ def test_hierarchy_lookups_broadcast(spark):
     """Every hierarchical dictionary traversal must come back as a
     broadcast of the (dictionary-sized) closure views — never a
     shuffle of the fact side, never a cartesian recursion."""
-    plan = _staged_r13_plan(spark, "q_dialect_hierarchy")
+    plan = plan_of(spark, "q_dialect_hierarchy")
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -1146,7 +1093,7 @@ def test_ties_paging_windows_not_cartesian(spark):
     """The comma-offset WITH TIES path is the rank + row_number
     window pair over one scan — no cutoff-subquery join tree and no
     cartesian."""
-    plan = _staged_r13_plan(spark, "q_dialect_ties_paging")
+    plan = plan_of(spark, "q_dialect_ties_paging")
     assert "windowspecdefinition" in plan, plan
     assert "CartesianProduct" not in plan, plan
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
@@ -1157,7 +1104,7 @@ def test_ewma_scatter_bounds_scans(spark):
     """The EWMA scatter form costs TWO passes over the daily
     aggregate (contributions + observed-day join) — a lag-per-tap
     self-join chain would scan events once per tap."""
-    plan = _staged_r13_plan(spark, "q_ewma_daily")
+    plan = plan_of(spark, "q_ewma_daily")
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) <= 2, plan
     assert "windowspecdefinition" not in plan, plan
@@ -1171,7 +1118,7 @@ def test_shingle_novelty_is_postings_join(spark):
     aggregates, and a doc-keyed join of two narrow per-doc frames;
     never a document pair product and never a second explode of the
     posting list."""
-    plan = _staged_r13_plan(spark, "q_shingle_novelty")
+    plan = plan_of(spark, "q_shingle_novelty")
     assert plan.count("Generate") == 1, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -1181,7 +1128,7 @@ def test_token_pmi_candidates_bounded(spark):
     """PMI pair generation joins the top-k word postings on doc_id
     (k is a literal driver-pinned frame): equality join plus at most
     the 1-row N broadcast — no cartesian vocabulary product."""
-    plan = _staged_r13_plan(spark, "q_token_pmi")
+    plan = plan_of(spark, "q_token_pmi")
     assert "CartesianProduct" not in plan, plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
 
@@ -1190,7 +1137,7 @@ def test_pareto_windows_over_distinct_values(spark):
     """The Pareto crossing runs windows over DISTINCT activity
     values — bounded by value cardinality — never a global
     per-user ranking window."""
-    plan = _staged_r13_plan(spark, "q_pareto_coverage")
+    plan = plan_of(spark, "q_pareto_coverage")
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
     ]
@@ -1204,7 +1151,7 @@ def test_markov_window_is_user_partitioned(spark):
     an unpartitioned event ordering would serialize the corpus."""
     import re
 
-    plan = _staged_r13_plan(spark, "q_event_markov_matrix")
+    plan = plan_of(spark, "q_event_markov_matrix")
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
     ]
@@ -1230,28 +1177,21 @@ def test_markov_window_is_user_partitioned(spark):
 def test_embedding_norms_jvm_only_single_scan(spark):
     """The norm quantization is a built-in array fold — no Python
     UDF boundary, one scan of embeddings."""
-    plan = _staged_r13_plan(spark, "q_embedding_norms")
+    plan = plan_of(spark, "q_embedding_norms")
     assert "BatchEvalPython" not in plan, plan
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) == 1, plan
 
 
 # ---------------------------------------------------------------------------
-# Round-14 staged wave: scale-shape guards.
+# queries/staged_r14.py: scale-shape guards.
 # ---------------------------------------------------------------------------
-
-
-def _staged_r14_plan(spark, name: str) -> str:
-    from clickbom_spark.queries.staged_r14 import STAGED_R14
-
-    df = STAGED_R14[name].fn(spark, SF_CORRECT)
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_hier_where_filter_broadcasts(spark):
     """dictIsIn in WHERE must broadcast the chain closure against
     the fact scan — a subtree filter, not a recursive join."""
-    plan = _staged_r14_plan(spark, "q_dialect_hier_where")
+    plan = plan_of(spark, "q_dialect_hier_where")
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -1259,7 +1199,7 @@ def test_hier_where_filter_broadcasts(spark):
 def test_abc_window_over_buckets_not_parts(spark):
     """The ABC cumulative runs over the fixed 1000-bucket grid —
     never a ranking window over individual parts."""
-    plan = _staged_r14_plan(spark, "q_abc_classification")
+    plan = plan_of(spark, "q_abc_classification")
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
     ]
@@ -1272,7 +1212,7 @@ def test_centroid_shift_jvm_only(spark):
     """The centroid statistics are built-in posexplode + hash
     aggregates — no Python UDF boundary; the postings generator
     appears once per consumer (per-label + global), never more."""
-    plan = _staged_r14_plan(spark, "q_embedding_centroid_shift")
+    plan = plan_of(spark, "q_embedding_centroid_shift")
     assert "BatchEvalPython" not in plan, plan
     assert plan.count("Generate") <= 2, plan
     assert "CartesianProduct" not in plan, plan
@@ -1281,7 +1221,7 @@ def test_centroid_shift_jvm_only(spark):
 def test_top_bigrams_window_partitioned_by_source(spark):
     import re
 
-    plan = _staged_r14_plan(spark, "q_top_bigrams")
+    plan = plan_of(spark, "q_top_bigrams")
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
     ]
@@ -1293,7 +1233,7 @@ def test_top_bigrams_window_partitioned_by_source(spark):
 def test_interarrival_window_partitioned_by_user(spark):
     import re
 
-    plan = _staged_r14_plan(spark, "q_interarrival_cv")
+    plan = plan_of(spark, "q_interarrival_cv")
     win_lines = [
         ln for ln in plan.split("\n") if "windowspecdefinition" in ln
     ]
@@ -1305,7 +1245,7 @@ def test_interarrival_window_partitioned_by_user(spark):
 def test_log2_histogram_single_scan_no_libm_udf(spark):
     """The log2 bucketing is string/integer ops over one scan; the
     only nested-loop is the 1-row total broadcast."""
-    plan = _staged_r14_plan(spark, "q_price_log2_histogram")
+    plan = plan_of(spark, "q_price_log2_histogram")
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) <= 2, plan
     assert "BatchEvalPython" not in plan, plan
@@ -1315,7 +1255,7 @@ def test_log2_histogram_single_scan_no_libm_udf(spark):
 def test_quantile_gk_is_single_scan_aggregate(spark):
     """quantileGK compiles to percentile_approx — one hash-aggregate
     pass over ONE fact scan, no joins, no window, no Python."""
-    plan = _staged_r14_plan(spark, "q_dialect_quantile_gk")
+    plan = plan_of(spark, "q_dialect_quantile_gk")
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) == 1, plan
     assert "BatchEvalPython" not in plan, plan
@@ -1326,7 +1266,7 @@ def test_quantile_gk_is_single_scan_aggregate(spark):
 def test_snowflake_ids_is_single_scan_aggregate(spark):
     """The snowflake-ID round-trip is map-local bit arithmetic under
     a plain min/max hash aggregate — one scan, no joins, no Python."""
-    plan = _staged_r14_plan(spark, "q_dialect_snowflake_ids")
+    plan = plan_of(spark, "q_dialect_snowflake_ids")
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) == 1, plan
     assert "BatchEvalPython" not in plan, plan
@@ -1336,334 +1276,23 @@ def test_snowflake_ids_is_single_scan_aggregate(spark):
 def test_neg_substrings_is_single_scan_aggregate(spark):
     """Negative-length left/right + stringCompare fold map-locally
     into one grouped aggregate over the documents scan."""
-    plan = _staged_r14_plan(spark, "q_dialect_neg_substrings")
+    plan = plan_of(spark, "q_dialect_neg_substrings")
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) == 1, plan
     assert "BatchEvalPython" not in plan, plan
     assert "Join" not in plan, plan
 
 
-# ---------------------------------------------------------------------------
-# Round-16 staged wave: scale-shape guards.
-# ---------------------------------------------------------------------------
-
-
-def _staged_r16_plan(spark, name: str) -> str:
-    from clickbom_spark.queries.staged_r16 import STAGED_R16
-
-    df = STAGED_R16[name].fn(spark, SF_CORRECT)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_uniq_state_mv_is_pure_aggregation(spark):
     """The uniqState/uniqMerge MV round-trip is two hash-aggregate
     levels over ONE fact scan — bounded collect_set states, no joins,
-    no Python boundary, no window.  (Query pulled forward into the
-    r13 wave — VERDICT r12 #4.)"""
-    plan = _staged_r13_plan(spark, "q_dialect_uniq_state_mv")
+    no Python boundary, no window."""
+    plan = plan_of(spark, "q_dialect_uniq_state_mv")
     scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
     assert len(scans) == 1, plan
     assert "BatchEvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "windowspecdefinition" not in plan, plan
-
-
-def test_basket_lift_is_order_keyed_equi_join(spark):
-    """Pair generation must be the order-keyed self-EQUI-join over
-    the deduplicated (order, brand) incidences — never a cartesian
-    product; the brand marginals and the 1-row total broadcast."""
-    plan = _staged_r16_plan(spark, "q_market_basket_lift")
-    assert "CartesianProduct" not in plan, plan
-    assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
-        "BroadcastHashJoin" in plan
-    ), plan
-    # the only nested-loop is the 1-row denominator broadcast
-    assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_trade_matrix_broadcasts_dimensions(spark):
-    """The nation trade matrix hard-broadcasts only the BOUNDED
-    nation frames; customer/supplier joins are AQE-sized (broadcast
-    at small SF, shuffle at scale — the repo broadcast policy).  No
-    cartesian product, no Python boundary."""
-    plan = _staged_r16_plan(spark, "q_nation_trade_matrix")
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_gap_bands_window_partitioned_by_user(spark):
-    import re
-
-    plan = _staged_r16_plan(spark, "q_session_gap_bands")
-    win_lines = [
-        ln for ln in plan.split("\n") if "windowspecdefinition" in ln
-    ]
-    assert win_lines, plan
-    for ln in win_lines:
-        assert re.search(r"windowspecdefinition\(user_id#\d+L?,", ln), ln
-
-
-def test_repeat_share_window_partitioned_by_customer(spark):
-    import re
-
-    plan = _staged_r16_plan(spark, "q_repeat_customer_share")
-    win_lines = [
-        ln for ln in plan.split("\n") if "windowspecdefinition" in ln
-    ]
-    assert win_lines, plan
-    for ln in win_lines:
-        assert re.search(r"windowspecdefinition\(o_custkey#\d+L?,", ln), ln
-
-
-def test_gini_windows_over_distinct_frequencies(spark):
-    """The Gini prefix sums run over the distinct-frequency domain —
-    the window must order by the frequency VALUE (c), never rank raw
-    tokens."""
-    plan = _staged_r16_plan(spark, "q_gini_token_concentration")
-    win_lines = [
-        ln for ln in plan.split("\n") if "windowspecdefinition" in ln
-    ]
-    assert win_lines, plan
-    assert all("w#" not in ln for ln in win_lines), plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_inactive_profile_uses_anti_join(spark):
-    """The zero-order customer set must come from a hash LEFT ANTI
-    join, not an exists-subquery turned nested loop."""
-    plan = _staged_r16_plan(spark, "q_inactive_customer_profile")
-    assert "LeftAnti" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_doc_outliers_flags_without_division(spark):
-    """The outlier pass is a broadcast join of the 20-row power-sum
-    frame onto the doc scan — integer comparisons only, no Python, at
-    most the two documented scans."""
-    plan = _staged_r16_plan(spark, "q_doc_length_outliers")
-    scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
-    assert len(scans) <= 2, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_hypercube_density_bounded_windows(spark):
-    """The majority-label window partitions by the 256-orthant code
-    — never an unpartitioned global rank."""
-    import re
-
-    plan = _staged_r16_plan(spark, "q_emb_hypercube_density")
-    win_lines = [
-        ln for ln in plan.split("\n") if "windowspecdefinition" in ln
-    ]
-    assert win_lines, plan
-    for ln in win_lines:
-        assert re.search(r"windowspecdefinition\(code#\d+L?,", ln), ln
-    assert "BatchEvalPython" not in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# Round-17 staged wave: scale-shape guards.
-# ---------------------------------------------------------------------------
-
-
-def _staged_r17_plan(spark, name: str) -> str:
-    from clickbom_spark.queries.staged_r17 import STAGED_R17
-
-    df = STAGED_R17[name].fn(spark, SF_CORRECT)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_source_overlap_is_posting_equi_join(spark):
-    """The 190-pair vocabulary matrix must come from a token-keyed
-    posting equi-join over deduplicated incidences — never a
-    source×source×vocab product."""
-    plan = _staged_r17_plan(spark, "q_source_overlap_matrix")
-    assert "CartesianProduct" not in plan, plan
-    assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
-        "BroadcastHashJoin" in plan
-    ), plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_ltv_bands_have_no_ranking_window(spark):
-    """The whale-curve view is BANDED precisely to avoid a
-    per-customer ranking window — the plan must contain none."""
-    plan = _staged_r17_plan(spark, "q_ltv_log2_bands")
-    assert "windowspecdefinition" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_brand_share_window_partitioned_by_nation(spark):
-    import re
-
-    plan = _staged_r17_plan(spark, "q_brand_share_by_nation")
-    win_lines = [
-        ln for ln in plan.split("\n") if "windowspecdefinition" in ln
-    ]
-    assert win_lines, plan
-    for ln in win_lines:
-        assert re.search(r"windowspecdefinition\(nation#\d+,", ln), ln
-
-
-def test_gap_percentiles_window_partitioned_by_user(spark):
-    import re
-
-    plan = _staged_r17_plan(spark, "q_event_gap_percentiles_by_type")
-    win_lines = [
-        ln for ln in plan.split("\n") if "windowspecdefinition" in ln
-    ]
-    assert win_lines, plan
-    for ln in win_lines:
-        assert re.search(r"windowspecdefinition\(user_id#\d+L?,", ln), ln
-
-
-def test_sign_balance_single_scan_jvm_only(spark):
-    plan = _staged_r17_plan(spark, "q_emb_dim_sign_balance")
-    scans = [ln for ln in plan.split("\n") if "FileScan parquet" in ln]
-    assert len(scans) == 1, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_distinct_on_compiles_to_partitioned_window(spark):
-    """The DISTINCT ON round-trip must be the LIMIT 1 BY row_number
-    window partitioned by the ON key — not a global sort or join."""
-    import re
-
-    plan = _staged_r17_plan(spark, "q_dialect_distinct_on")
-    win_lines = [
-        ln for ln in plan.split("\n") if "windowspecdefinition" in ln
-    ]
-    assert win_lines, plan
-    for ln in win_lines:
-        assert re.search(r"windowspecdefinition\(user_id#\d+L?,", ln), ln
-    assert "CartesianProduct" not in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# Round-18/19/20 staged waves (built during round 12)
-# ---------------------------------------------------------------------------
-
-
-def _staged_plan(spark, wave: str, name: str) -> str:
-    import importlib
-
-    m = importlib.import_module(f"clickbom_spark.queries.staged_{wave}")
-    df = getattr(m, f"STAGED_{wave.upper()}")[name].fn(spark, SF_CORRECT)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_map_agg_single_collect_no_python(spark):
-    """The sumMap compile must be ONE collect_list aggregate feeding
-    array HOFs — no explode, no Python, no pair join; Catalyst dedups
-    the identical zip aggregates across the tuple's two components."""
-    plan = _staged_plan(spark, "r18", "q_dialect_summap_daily")
-    assert "collect_list" in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "Generate explode" not in plan, plan
-
-
-def test_spend_quartiles_rank_is_bucketed(spark):
-    """The user-spend quartile rank must be the ext/ranks value-bucket
-    window (partitioned by the bucket column), never a total-order
-    window over the user population."""
-    import re
-
-    plan = _staged_plan(spark, "r18", "q_user_spend_quartiles")
-    assert re.search(r"windowspecdefinition\(_bkt", plan), plan
-
-
-def test_lorenz_rank_is_bucketed(spark):
-    import re
-
-    plan = _staged_plan(spark, "r18", "q_lorenz_deciles")
-    assert re.search(r"windowspecdefinition\(_bkt", plan), plan
-
-
-def test_median_ci_windows_over_distinct_values(spark):
-    """Order-statistic selection must run on the (event_type, cents)
-    DISTINCT-VALUE cumulative frame: the window partitions by
-    event_type and its input is already an aggregate."""
-    import re
-
-    plan = _staged_plan(spark, "r18", "q_median_ci_orderstat")
-    assert re.search(r"windowspecdefinition\(event_type", plan), plan
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_cooccurrence_is_composite_equi_join(spark):
-    """Type-pair co-occurrence self-joins on the (user_id, d) key —
-    never a cartesian or nested-loop expansion."""
-    plan = _staged_plan(spark, "r18", "q_event_type_cooccurrence")
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def test_sign_concordance_is_vec_keyed_join(spark):
-    plan = _staged_plan(spark, "r18", "q_emb_dim_sign_concordance")
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_streak_windows_user_partitioned(spark):
-    import re
-
-    plan = _staged_plan(spark, "r19", "q_activity_streaks")
-    for ln in plan.split("\n"):
-        if "windowspecdefinition" in ln:
-            assert re.search(r"windowspecdefinition\(user_id", ln), ln
-
-
-def test_retention_joins_are_user_keyed(spark):
-    plan = _staged_plan(spark, "r19", "q_retention_d1_d7")
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def test_centroid_purity_candidates_bounded(spark):
-    """Nearest-centroid purity joins the exploded fact to the
-    label-count-sized centroid frame on the DIMENSION axis and picks
-    the argmax with a per-vector window — no all-pairs product."""
-    import re
-
-    plan = _staged_plan(spark, "r19", "q_emb_centroid_purity")
-    assert "CartesianProduct" not in plan, plan
-    assert re.search(r"windowspecdefinition\(vec_id", plan), plan
-
-
-def test_char_ngrams_topk_window_per_lang(spark):
-    """The LIMIT 5 BY compile must partition its row_number window by
-    lang, running over the bounded trigram-vocabulary aggregate."""
-    import re
-
-    plan = _staged_plan(spark, "r20", "q_dialect_char_ngrams")
-    win = [ln for ln in plan.split("\n") if "windowspecdefinition" in ln]
-    assert win, plan
-    for ln in win:
-        assert re.search(r"windowspecdefinition\(lang", ln), ln
-
-
-def test_intra_inter_dot_is_window_free(spark):
-    """The within/cross-label mean-dot identity is pure aggregation —
-    the plan must contain NO window and NO pair-producing join.  (The
-    single BroadcastNestedLoopJoin is the sanctioned 1-row total-count
-    crossJoin, not a pair product — vec_id never appears in a join
-    key.)"""
-    plan = _staged_plan(spark, "r20", "q_emb_intra_inter_dot")
-    assert "windowspecdefinition" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
-
-
-def test_supplier_deciles_rank_is_bucketed(spark):
-    import re
-
-    plan = _staged_plan(spark, "r20", "q_supplier_balance_deciles")
-    assert re.search(r"windowspecdefinition\(_bkt", plan), plan
 
 
 def test_dialect_scalar_with_is_subquery_broadcast(spark):
@@ -1672,10 +1301,7 @@ def test_dialect_scalar_with_is_subquery_broadcast(spark):
     never a per-row rescan join of orders, and the duplicated
     substitution text must be deduped by ReuseSubquery (one subquery
     scan, not one per alias occurrence)."""
-    from clickbom_spark.queries import REGISTRY
-
-    df = REGISTRY["q_dialect_scalar_with"].fn(spark, SF_CORRECT)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(spark, "q_dialect_scalar_with")
     assert "Subquery" in plan, plan
     # no join of orders against itself — the alias lands as a scalar
     # subquery, not a correlated rescan
@@ -1692,10 +1318,7 @@ def test_dialect_colon_cast_pushes_filter(spark):
     """(l_orderkey % 7) = 0 from the ::-cast query must reach the
     scan as a pushed/partial filter, and the scan must prune to the
     three referenced columns."""
-    from clickbom_spark.queries import REGISTRY
-
-    df = REGISTRY["q_dialect_colon_cast"].fn(spark, SF_CORRECT)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(spark, "q_dialect_colon_cast")
     assert "l_orderkey" in plan
     low = plan.lower()
     assert "filter" in low, plan

@@ -1,47 +1,95 @@
-"""Round-6 staged-wave activation guards.
+"""Registry invariants, plus a per-query check that oracle parity does
+not cover.
 
-Pre-activation this file ran the full DuckDB oracle-parity harness over
-clickbom_spark.queries.staged.STAGED while those queries were held out
-of the live REGISTRY.  Round 6 flipped the switch
-(queries/__init__.py: ``REGISTRY.update(staged.STAGED)``), so the main
-tests/test_parity.py harness now covers every staged query directly —
-re-running the identical comparison here would only double the suite's
-runtime.  What remains are the activation invariants: the wave is live,
-nothing was shadowed, and the rows-only sketch query's self-reported
-error bounds still hold.
+``tests/test_parity.py`` compares every registry query with its DuckDB
+oracle.  This file pins the registry itself (one registration path, its
+size and per-module make-up, an oracle for every query) and holds the
+helpers the per-module files ``tests/test_staged_r*_parity.py`` use.
 """
 
 from __future__ import annotations
 
-from clickbom_spark.queries import REGISTRY
-from clickbom_spark.queries.staged import STAGED
+import collections
+
+import pytest
+
+from clickbom_spark.queries import REGISTRY, QuerySpec, query
 from tests.conftest import SF_CORRECT
 
+# fn.__module__ suffix -> number of registry queries defined there.
+MODULE_COUNTS = {
+    "formats": 5, "olap_ops": 15, "sql_surface": 4, "llm_ops": 6,
+    "relational2": 17, "relational3": 13, "scale_ops": 6, "multimodal": 4,
+    "event_windows": 18, "dedup": 11, "similarity": 10, "text": 9,
+    "sbom_mapped": 5, "analytics": 17, "relational": 9, "curation": 12,
+    "engine_ops": 11, "order_stats": 4, "dialect_r12": 3, "staged": 33,
+    "staged_r7": 14, "staged_r8": 23, "staged_r9": 23, "staged_r10": 23,
+    "staged_r11": 23, "staged_r12": 23, "staged_r13": 23, "staged_r14": 27,
+}
 
-def test_staged_wave_is_live():
-    """Every staged query is registered, with the exact same spec
-    object — activation is REGISTRY.update(STAGED), not a re-wrap."""
-    missing = set(STAGED) - set(REGISTRY)
-    assert not missing, f"staged queries not activated: {missing}"
-    for name, spec in STAGED.items():
-        assert REGISTRY[name] is spec, f"{name} was shadowed on activation"
+
+def wave(module: str) -> dict[str, QuerySpec]:
+    """The registry entries defined in ``clickbom_spark.queries.<module>``."""
+    qual = f"clickbom_spark.queries.{module}"
+    return {n: s for n, s in REGISTRY.items() if s.fn.__module__ == qual}
 
 
-def test_activation_did_not_shadow_live_queries():
-    """STAGED names were disjoint from the organic registry at
-    activation time; the merged registry still satisfies the driver
-    contract (unique names, callable fns, oracle strings or None)."""
-    for name, spec in REGISTRY.items():
+def assert_wave_live(module: str) -> None:
+    """``module``'s queries are registered as one contiguous run, in the
+    order its import defined them, and each meets the entry contract
+    ``__spark_entry__.queries()``/``oracle_sql()`` rely on."""
+    specs = wave(module)
+    assert specs, f"no registry query is defined in {module}"
+    order = list(REGISTRY)
+    first = order.index(next(iter(specs)))
+    assert order[first:first + len(specs)] == list(specs), (
+        f"{module} queries are not one contiguous run of the registry"
+    )
+    for name, spec in specs.items():
         assert callable(spec.fn), name
         assert spec.oracle is None or isinstance(spec.oracle, str), name
         assert spec.name == name
 
 
+def test_staged_wave_is_live():
+    assert_wave_live("staged")
+
+
+def test_activation_did_not_shadow_live_queries(monkeypatch):
+    """A second registration under a live name must raise, not
+    silently replace (shadow) the first definition.  ``query()``
+    registers into a copy of the registry here; monkeypatch restores
+    the original."""
+    import clickbom_spark.queries as Q
+
+    monkeypatch.setattr(Q, "REGISTRY", dict(REGISTRY))
+    name = "q__duplicate_registration_probe"
+    query(name, oracle="SELECT 1 AS x")(lambda spark, sf_dir: None)
+    with pytest.raises(ValueError, match=name):
+        query(name)(lambda spark, sf_dir: None)
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+        query("q1_pricing_summary")(lambda spark, sf_dir: None)
+    assert Q.REGISTRY["q1_pricing_summary"] is REGISTRY["q1_pricing_summary"]
+    assert name in Q.REGISTRY and name not in REGISTRY
+
+
+def test_registry_size_and_module_counts():
+    got = collections.Counter(
+        spec.fn.__module__.rsplit(".", 1)[-1] for spec in REGISTRY.values()
+    )
+    assert dict(got) == MODULE_COUNTS
+    assert len(REGISTRY) == 391
+
+
+def test_every_query_has_oracle():
+    assert not [n for n, s in REGISTRY.items() if s.oracle is None]
+
+
 def test_quantile_sketch_query_reports_tight_bounds(spark):
-    """The sketch query's invariant columns (now oracle-asserted as
+    """The sketch query's invariant columns (oracle-asserted as
     constants) must actually hold: weight conservation and rank error
     within the KLL guarantee band at k=256."""
-    rows = STAGED["q_quantile_sketch"].fn(spark, SF_CORRECT).collect()
+    rows = REGISTRY["q_quantile_sketch"].fn(spark, SF_CORRECT).collect()
     assert len(rows) == 3
     for r in rows:
         assert r["weight_conserved"] is True

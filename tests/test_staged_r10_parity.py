@@ -1,50 +1,28 @@
-"""Oracle parity for the round-10 staged wave (held OUT of REGISTRY
-until round-10 activation — see staged_r10.py module doc).  Mirrors
-the driver's CORRECTNESS gate at sf0.001/sf0.01 via the shared
-canon/run_oracle harness; scripts/strict_parity.py --staged widens the
-sweep to sf0.1."""
+"""Oracle parity and registration checks for the queries defined in
+``clickbom_spark/queries/staged_r10.py``.
+
+The parity verdicts are shared with ``tests/test_parity.py``: each
+query is compared with its oracle once per session.
+"""
 
 from __future__ import annotations
 
 import pytest
 
-from clickbom_spark.queries import REGISTRY
-from clickbom_spark.queries.staged_r10 import STAGED_R10
-from tests.conftest import SF_CORRECT
-from tests.test_parity import canon, run_oracle
+from tests.test_parity import assert_oracle_parity
+from tests.test_staged_parity import assert_wave_live, wave
 
-ORACLE_STAGED = sorted(n for n, s in STAGED_R10.items() if s.oracle)
-ROWS_ONLY_STAGED = sorted(n for n, s in STAGED_R10.items() if s.oracle is None)
+WAVE = wave("staged_r10")
 
 
-@pytest.mark.parametrize("name", ORACLE_STAGED)
+@pytest.mark.parametrize("name", sorted(n for n, s in WAVE.items() if s.oracle))
 def test_staged_r10_oracle_parity(spark, name):
-    import pandas as pd
-
-    spec = STAGED_R10[name]
-    got = canon(spec.fn(spark, SF_CORRECT).toPandas())
-    want = canon(run_oracle(spec.oracle, SF_CORRECT))
-    assert list(got.columns) == list(want.columns), (
-        f"{name} columns: {list(got.columns)} != {list(want.columns)}"
-    )
-    assert len(got) == len(want), f"{name} rows: {len(got)} != {len(want)}"
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
+    assert_oracle_parity(spark, name)
 
 
 def test_staged_r10_activated_into_registry():
-    """Round-10 activation: every staged name is live and IS the staged
-    object — activation was REGISTRY.update(STAGED_R10), not a re-wrap."""
-    missing = set(STAGED_R10) - set(REGISTRY)
-    assert not missing, f"staged r10 names not activated: {missing}"
-    for name, spec in STAGED_R10.items():
-        assert REGISTRY[name] is spec, f"{name} was shadowed on activation"
-        assert callable(spec.fn), name
-        assert spec.oracle is None or isinstance(spec.oracle, str), name
-        assert spec.name == name
+    assert_wave_live("staged_r10")
 
 
 def test_staged_r10_every_query_has_oracle():
-    """Round-7 lesson (VERDICT r7 item 2): deliberately-oracle-less
-    queries burn driver verification slots.  The r10 wave ships fully
-    oracle-backed."""
-    assert not ROWS_ONLY_STAGED
+    assert all(s.oracle for s in WAVE.values())

@@ -1,54 +1,28 @@
-"""Oracle parity for the round-7 staged wave — the exact driver
-comparison (row count, column names, order-insensitive exact values)
-over clickbom_spark.queries.staged_r7.STAGED_R7.  Round 7 flipped the
-activation switch (queries/__init__.py:
-``REGISTRY.update(staged_r7.STAGED_R7)``), so these queries are now
-also covered by tests/test_parity.py; this file keeps the direct
-parity sweep (it predates activation and pins the wave at three scale
-factors via scripts/strict_parity.py) plus the activation
-invariants."""
+"""Oracle parity and registration checks for the queries defined in
+``clickbom_spark/queries/staged_r7.py``.
+
+The parity verdicts are shared with ``tests/test_parity.py``: each
+query is compared with its oracle once per session.
+"""
 
 from __future__ import annotations
 
 import pytest
 
 from clickbom_spark.queries import REGISTRY
-from clickbom_spark.queries.staged_r7 import STAGED_R7
-from tests.conftest import SF_CORRECT
-from tests.test_parity import canon, run_oracle
+from tests.test_parity import assert_oracle_parity
+from tests.test_staged_parity import assert_wave_live, wave
 
-ORACLE_STAGED = sorted(n for n, s in STAGED_R7.items() if s.oracle)
-ROWS_ONLY_STAGED = sorted(n for n, s in STAGED_R7.items() if s.oracle is None)
+WAVE = wave("staged_r7")
 
 
-@pytest.mark.parametrize("name", ORACLE_STAGED)
+@pytest.mark.parametrize("name", sorted(n for n, s in WAVE.items() if s.oracle))
 def test_staged_r7_oracle_parity(spark, name):
-    import pandas as pd
-
-    spec = STAGED_R7[name]
-    got = canon(spec.fn(spark, SF_CORRECT).toPandas())
-    want = canon(run_oracle(spec.oracle, SF_CORRECT))
-    assert list(got.columns) == list(want.columns), (
-        f"{name} columns: {list(got.columns)} != {list(want.columns)}"
-    )
-    assert len(got) == len(want), f"{name} rows: {len(got)} != {len(want)}"
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY_STAGED)
-def test_staged_r7_rows_only(spark, name):
-    df = STAGED_R7[name].fn(spark, SF_CORRECT)
-    assert df.count() >= 0
-    assert df.schema.fieldNames()
+    assert_oracle_parity(spark, name)
 
 
 def test_staged_r7_wave_is_live():
-    """Every r7 staged query is registered with the exact same spec
-    object — activation was REGISTRY.update(STAGED_R7), not a re-wrap."""
-    missing = set(STAGED_R7) - set(REGISTRY)
-    assert not missing, f"r7 staged queries not activated: {missing}"
-    for name, spec in STAGED_R7.items():
-        assert REGISTRY[name] is spec, f"{name} was shadowed on activation"
+    assert_wave_live("staged_r7")
 
 
 def test_registry_satisfies_driver_contract():

@@ -1,62 +1,34 @@
-"""Oracle parity for the round-8 wave.  ACTIVATED in round 8 via the
-activation switch (queries/__init__.py:
-``REGISTRY.update(staged_r8.STAGED_R8)``), so these queries are now
-also covered by tests/test_parity.py; this file keeps the direct
-parity sweep (it predates activation and pins the wave at three scale
-factors via scripts/strict_parity.py) plus the activation
-invariants."""
+"""Oracle parity and registration checks for the queries defined in
+``clickbom_spark/queries/staged_r8.py``.
+
+The parity verdicts are shared with ``tests/test_parity.py``: each
+query is compared with its oracle once per session.
+"""
 
 from __future__ import annotations
 
 import pytest
 
-from clickbom_spark.queries import REGISTRY
-from clickbom_spark.queries.staged_r8 import STAGED_R8
 from tests.conftest import SF_CORRECT
-from tests.test_parity import canon, run_oracle
+from tests.test_parity import assert_oracle_parity, canon, run_oracle
+from tests.test_staged_parity import assert_wave_live, wave
 
-ORACLE_STAGED = sorted(n for n, s in STAGED_R8.items() if s.oracle)
-ROWS_ONLY_STAGED = sorted(n for n, s in STAGED_R8.items() if s.oracle is None)
+WAVE = wave("staged_r8")
 
 
-@pytest.mark.parametrize("name", ORACLE_STAGED)
+@pytest.mark.parametrize("name", sorted(n for n, s in WAVE.items() if s.oracle))
 def test_staged_r8_oracle_parity(spark, name):
-    import pandas as pd
-
-    spec = STAGED_R8[name]
-    got = canon(spec.fn(spark, SF_CORRECT).toPandas())
-    want = canon(run_oracle(spec.oracle, SF_CORRECT))
-    assert list(got.columns) == list(want.columns), (
-        f"{name} columns: {list(got.columns)} != {list(want.columns)}"
-    )
-    assert len(got) == len(want), f"{name} rows: {len(got)} != {len(want)}"
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY_STAGED)
-def test_staged_r8_rows_only(spark, name):
-    df = STAGED_R8[name].fn(spark, SF_CORRECT)
-    assert df.count() >= 0
-    assert df.schema.fieldNames()
+    assert_oracle_parity(spark, name)
 
 
 def test_staged_r8_activated_identically():
-    """Every staged r8 spec is in the live registry as the SAME
-    object — activation was REGISTRY.update(STAGED_R8), not a re-wrap."""
-    missing = set(STAGED_R8) - set(REGISTRY)
-    assert not missing, f"r8 staged queries not activated: {missing}"
-    for name, spec in STAGED_R8.items():
-        assert REGISTRY[name] is spec, f"{name} was shadowed on activation"
-    for name, spec in REGISTRY.items():
-        assert callable(spec.fn), name
-        assert spec.oracle is None or isinstance(spec.oracle, str), name
-        assert spec.name == name
+    assert_wave_live("staged_r8")
 
 
 def test_bfs_diameter_stays_below_oracle_recursion_bound(spark):
     """The oracle's recursive CTE carries hop < 40 as a safety bound;
     exactness requires the actual BFS to converge well under it."""
-    rows = STAGED_R8["q_bfs_distances"].fn(spark, SF_CORRECT).collect()
+    rows = WAVE["q_bfs_distances"].fn(spark, SF_CORRECT).collect()
     assert rows and max(r["hop"] for r in rows) < 39
 
 
@@ -64,12 +36,10 @@ def test_sliding_median_null_values_match_oracle(spark, tmp_path):
     """A user whose window frame holds only NULL values: collect_list
     drops NULLs so the frame is EMPTY — the query must return NULL
     (like DuckDB's windowed median), not crash on element_at(_, 0).
-    Latent in the driver corpora (zero NULL values there)."""
+    Latent in the test corpora (zero NULL values there)."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from clickbom_spark.queries.staged_r8 import STAGED_R8
 
     rows = {
         "event_id": [1, 2, 3, 4, 5, 6],
@@ -82,7 +52,7 @@ def test_sliding_median_null_values_match_oracle(spark, tmp_path):
         "props": ["{}"] * 6,
     }
     pq.write_table(pa.table(rows), str(tmp_path / "events.parquet"))
-    spec = STAGED_R8["q_sliding_median"]
+    spec = WAVE["q_sliding_median"]
     got = canon(spec.fn(spark, str(tmp_path)).toPandas())
     want = canon(run_oracle(spec.oracle, str(tmp_path)))
     pd.testing.assert_frame_equal(got, want, check_dtype=False,
