@@ -359,6 +359,67 @@ def test_lake_schema_evolution_merge(spark, tmp_path):
     assert set(merged.columns) == {"name", "version", "license", "source"}
 
 
+def _lake_rows(n_sources: int, rows_per_source, seed: int) -> list[tuple]:
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for s in range(n_sources):
+        for _ in range(rows_per_source(s)):
+            rows.append(
+                (
+                    f"pkg-{rng.randrange(60)}",
+                    f"{rng.randrange(4)}.0",
+                    rng.choice(["MIT", "ISC", "unknown"]),
+                    f"src-{s:02d}",
+                    rng.choice([None, "pkg:npm/x"]),
+                )
+            )
+    rng.shuffle(rows)
+    return rows
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        _lake_rows(40, lambda s: 12, seed=1),  # many sources
+        _lake_rows(6, lambda s: 400 if s == 0 else 5, seed=2),  # one source holds most rows
+    ],
+    ids=["many_sources", "skewed"],
+)
+def test_components_lake_one_sorted_file_per_source(spark, tmp_path, rows):
+    """The lake has exactly one directory and one parquet file per
+    source, each file sorted by the MergeTree key, and reads back as the
+    input rows — however the input is partitioned."""
+    import collections
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from clickbom_spark.io.sinks import write_components_lake
+
+    comps = spark.createDataFrame(
+        rows, "name string, version string, license string, source string, purl string"
+    ).repartition(5)
+    lake = str(tmp_path / "lake")
+    write_components_lake(comps, lake)
+
+    sources = {r[3] for r in rows}
+    dirs = glob.glob(os.path.join(lake, "source=*"))
+    assert sorted(os.path.basename(d) for d in dirs) == sorted(f"source={s}" for s in sources)
+    got = []
+    for d in dirs:
+        files = glob.glob(os.path.join(d, "*.parquet"))
+        assert len(files) == 1, f"{d}: {len(files)} files"
+        table = pq.read_table(files[0]).to_pylist()
+        keys = [(r["name"], r["version"], r["license"]) for r in table]
+        assert keys == sorted(keys), f"{files[0]}: rows not sorted by (name, version, license)"
+        source = os.path.basename(d).split("=", 1)[1]
+        got += [(r["name"], r["version"], r["license"], source, r["purl"]) for r in table]
+    assert collections.Counter(got) == collections.Counter(rows)
+
+
 def test_clickhouse_insert_dedup_token_scopes(spark):
     """The dedup token must separate THREE cases correctly: (a) two
     partitions of one job that serialize byte-identical content are

@@ -411,3 +411,46 @@ def test_license_mapping_dictionary_scale(spark, tmp_path):
         expected.add((f"not-in-dict-{i}", s))
     expected.add(("@scope-0/pkg-0", "BSD-2-Clause"))
     assert out == expected
+    # The dimension must be a LocalRelation, not a Python RDD: a LogicalRDD
+    # here means every plan that broadcasts it runs a Python-worker job.
+    # A caller may pass in a session with Arrow off, so check both.
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    saved = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            plan = load_license_mappings(spark, str(path))._jdf.queryExecution().optimizedPlan()
+            assert plan.nodeName() == "LocalRelation", (arrow, plan.toString())
+    finally:
+        spark.conf.set(key, saved)
+
+
+@pytest.mark.parametrize(
+    "content, bad",
+    [
+        ('["numpy", "BSD-3-Clause"]', "list"),  # top level is not an object
+        ('{"numpy": "BSD-3-Clause", "left-pad": ["a"], "x": 1}', "'left-pad'"),
+        ('{"numpy": null}', "'numpy'"),
+    ],
+    ids=["top_level_list", "list_value", "null_value"],
+)
+def test_license_mappings_rejects_malformed_file(spark, tmp_path, content, bad):
+    path = tmp_path / "license-mappings.json"
+    path.write_text(content)
+    with pytest.raises(ValueError) as e:
+        C.load_license_mappings(spark, str(path))
+    assert str(path) in str(e.value) and bad in str(e.value)
+
+
+def test_license_mappings_empty_file_patches_nothing(spark, tmp_path):
+    path = tmp_path / "license-mappings.json"
+    path.write_text("{}")
+    dim = C.load_license_mappings(spark, str(path))
+    assert dim.count() == 0
+    assert dim.columns == ["name", "license"]
+    rows = [("numpy", "1.0", s, "src", None) for s in ("unknown", "", "null", "MIT")]
+    comps = spark.createDataFrame(
+        rows, "name string, version string, license string, source string, purl string"
+    )
+    out = sorted(tuple(r) for r in C.map_unknown_licenses(comps, dim).collect())
+    assert out == sorted(rows)
