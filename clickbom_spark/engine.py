@@ -17,7 +17,7 @@ paths that these plans read.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +43,6 @@ class PipelineConfig:
     include_patterns: str = ""
     exclude_patterns: str = ""
     license_mappings_path: str | None = None
-    extra: dict = field(default_factory=dict)
 
 
 def default_source_value(cfg: PipelineConfig) -> str:

@@ -31,6 +31,11 @@ from pyspark.sql import functions as F
 # distinguish word-final from word-internal occurrences.
 EOW = "</w>"
 
+# Merge iterations between lineage-truncating checkpoints in
+# bpe_train: each merge adds one higher-order fold to the plan, so a
+# few stay cheap to analyze while every checkpoint costs a job.
+_CHECKPOINT_EVERY = 4
+
 
 def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, n) weighted vocabulary from one corpus scan.
@@ -103,7 +108,6 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 16,
     text_col: str = "text",
-    checkpoint_every: int = 4,
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merge rules from the corpus.
 
@@ -159,7 +163,7 @@ def bpe_train(
                 _merge_expr(F.col("symbols"), left, right).alias("symbols"),
                 "n",
             )
-            if rank % checkpoint_every == 0 and rank < n_merges:
+            if rank % _CHECKPOINT_EVERY == 0 and rank < n_merges:
                 # (skip on the final iteration — nothing reads it)
                 nxt = nxt.localCheckpoint(eager=True)
                 _release(ckpt_id)  # superseded checkpoint's blocks

@@ -36,7 +36,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from clickbom_spark.ext.manifest import VersionedLake
+from clickbom_spark.ext.manifest import VersionedLake, _mdir
 
 
 def _table_name(path: str) -> str:
@@ -70,7 +70,7 @@ def create_bucketed(
         for f in sorted(os.listdir(path))
         if f.startswith("part-") and os.path.isfile(os.path.join(path, f))
     ]
-    os.makedirs(os.path.join(path, "_manifests"), exist_ok=True)
+    os.makedirs(_mdir(path), exist_ok=True)
     lake = VersionedLake(spark, path)
     lake._commit(files, df.count(), "create-bucketed")
     # Pin the exact bucketed file set in the spec: the co-located fast

@@ -67,6 +67,35 @@ def _mdir(path: str) -> str:
     return os.path.join(path, _MANIFEST_DIR)
 
 
+def current_version(path: str) -> int:
+    """The live snapshot of the lake at ``path``: the highest
+    ``v{N}.json`` in its manifest directory, or -1 when there is none.
+    The manifest files themselves are the source of truth:
+    exclusive-create makes each version single-assignment, so
+    resolution never depends on the ``CURRENT`` pointer (which is still
+    written, as a debuggability hint) and a stale pointer can never roll
+    the table back under a concurrent writer."""
+    best = -1
+    try:
+        names = os.listdir(_mdir(path))
+    except FileNotFoundError:
+        return -1
+    for name in names:
+        if name.startswith("v") and name.endswith(".json"):
+            try:
+                best = max(best, int(name[1:-5]))
+            except ValueError:
+                continue
+    return best
+
+
+def read_manifest(path: str, version: int) -> dict:
+    """Snapshot ``version``'s manifest; ``FileNotFoundError`` when that
+    version was never committed or has been vacuumed."""
+    with open(os.path.join(_mdir(path), f"v{version}.json")) as f:
+        return json.load(f)
+
+
 def _parquet_num_rows(path: str) -> int:
     """Exact row count of one parquet file from its footer — metadata
     only, no data pages read.  Commit-time n_rows accounting reads the
@@ -166,32 +195,15 @@ class VersionedLake:
     # ---- snapshot bookkeeping ----
 
     def current_version(self) -> int:
-        """Resolve the live snapshot by scanning for the highest
-        ``v{N}.json``.  The manifest files themselves are the source of
-        truth: exclusive-create makes each version single-assignment,
-        so resolution never depends on the ``CURRENT`` pointer (which
-        is still written, as a debuggability hint) and a stale pointer
-        can never roll the table back under a concurrent writer."""
-        best = -1
-        try:
-            names = os.listdir(_mdir(self.path))
-        except FileNotFoundError:
-            return -1
-        for name in names:
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    best = max(best, int(name[1:-5]))
-                except ValueError:
-                    continue
-        return best
+        """The live snapshot (module :func:`current_version`)."""
+        return current_version(self.path)
 
     def _manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
-        p = os.path.join(_mdir(self.path), f"v{v}.json")
-        if not os.path.exists(p):
-            raise ValueError(f"no snapshot v{v} at {self.path}")
-        with open(p) as f:
-            return json.load(f)
+        try:
+            return read_manifest(self.path, v)
+        except FileNotFoundError:
+            raise ValueError(f"no snapshot v{v} at {self.path}") from None
 
     def _files(self, version: int | None = None) -> list[str]:
         return [
@@ -511,12 +523,11 @@ class VersionedLake:
     def history(self) -> list[dict]:
         out = []
         for v in range(self.current_version() + 1):
-            p = os.path.join(_mdir(self.path), f"v{v}.json")
-            if os.path.exists(p):
-                m = json.load(open(p))
-                out.append(
-                    {k: m[k] for k in ("version", "n_rows", "message")}
-                )
+            try:
+                m = read_manifest(self.path, v)
+            except FileNotFoundError:  # vacuumed
+                continue
+            out.append({k: m[k] for k in ("version", "n_rows", "message")})
         return out
 
     def row_count(self, version: int | None = None) -> int:

@@ -103,25 +103,13 @@ def synth_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def _fake_decode_features(content: bytes) -> list[float]:
-    """Deterministic decode stand-in: 16-bin byte histogram, normalized.
-    Replace this body with a real codec (PIL/av) when available."""
-    if not content:
-        return [0.0] * FEATURE_DIM
-    counts = [0] * FEATURE_DIM
-    for byte in content:
-        counts[byte >> 4] += 1
-    n = float(len(content))
-    return [c / n for c in counts]
-
-
 def decode_media(media: DataFrame) -> DataFrame:
     """Decode/feature-extract each media row (Arrow-batched mapInPandas).
 
     Real plumbing: batches arrive as pandas DataFrames per partition,
     features are computed vectorized per batch, output schema is fixed
-    (FEATURES_SCHEMA).  The decode kernel is the stub above unless a
-    codec library is importable (_HAS_PIL).
+    (FEATURES_SCHEMA).  The features are a deterministic codec-free
+    stand-in for a real decode: a 16-bin byte histogram, normalized.
     """
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

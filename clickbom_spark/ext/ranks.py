@@ -6,10 +6,11 @@ the textbook killer at 100 TB.  This module computes the same exact
 1-indexed global rank with a two-pass range-bucket plan that stays
 partition-parallel end to end:
 
-1. a cheap boundary pass derives ~``num_buckets`` value cut points for
-   the leading order column via ``approxQuantile``.  The approximation
-   only moves rows between buckets (load balance), it can never change
-   a row's rank, because
+1. a cheap boundary pass derives value cut points for the leading
+   order column via ``approxQuantile`` — one bucket per ~32 MB of the
+   input's plan-size estimate (:func:`_default_buckets`).  The
+   approximation only moves rows between buckets (load balance), it can
+   never change a row's rank, because
 2. rows are assigned a bucket BY VALUE (a deterministic expression, so
    re-executing the plan is safe — no reliance on physical partition
    ids), per-bucket counts roll into cumulative offsets (a tiny frame,
@@ -21,7 +22,7 @@ tie-break columns in ``order_cols`` are resolved entirely inside the
 partition-local window — the composite order is exact.
 
 The only single-partition work is the window over the per-bucket count
-frame (≤ ``num_buckets`` rows) — O(buckets), not O(rows).
+frame (≤ ``_MAX_BUCKETS`` rows) — O(buckets), not O(rows).
 
 Requirements: the leading order column must be numeric and non-null.
 """
@@ -33,18 +34,20 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from clickbom_spark.ext.scale import plan_size_bytes
+
 # Hard cap on the bucket count.  Bucket assignment evaluates one
 # array-membership scan of the boundary list per row, so the per-row
-# cost is O(num_buckets); 256 buckets is plenty of parallelism for the
+# cost is O(buckets); 256 buckets is plenty of parallelism for the
 # rank pass (each bucket still splits across tasks for everything
 # except the partition-local window) while keeping the expression tiny
 # and codegen-safe.  The cap affects load BALANCE only, never the rank
 # values — ties and ordering are exact regardless of bucketing.
 _MAX_BUCKETS = 256
 
-#: Target input bytes per value bucket when the caller does not pin a
-#: count.  One bucket per ~32 MB keeps per-bucket window state small;
-#: the 256-bucket cap saturates at ~8 GB of input.
+#: Target input bytes per value bucket.  One bucket per ~32 MB keeps
+#: per-bucket window state small; the 256-bucket cap saturates at ~8 GB
+#: of input.
 _BUCKET_TARGET_BYTES = 32 * 1024 * 1024
 
 #: Floor on the derived count: small inputs keep a handful of REAL
@@ -66,11 +69,8 @@ def _default_buckets(df: DataFrame) -> int:
     on a big cluster it under-bucketed relative to data volume.  Bucket
     count is a balance knob only — results are exact at any value.
     """
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
+    size = plan_size_bytes(df)
+    if size is None:
         return min(df.sparkSession.sparkContext.defaultParallelism,
                    _MAX_BUCKETS)
     return max(
@@ -140,7 +140,6 @@ def _bucket_expr(lead_d, bounds: Sequence[float]):
 def _bucketed_with_offsets(
     df: DataFrame,
     order_cols: Sequence[str],
-    num_buckets: int | None,
     per_bucket_agg,
     include_total: bool,
 ):
@@ -154,13 +153,10 @@ def _bucketed_with_offsets(
     prefix) and drop the temp columns.
     """
     lead = order_cols[0]
-    if num_buckets is None:
-        num_buckets = _default_buckets(df)
-    num_buckets = max(1, min(num_buckets, _MAX_BUCKETS))
     c_bkt, c_val, c_off, c_total = _temp_names(
         df, ["_bkt", "_val", "_off", "_total"]
     )
-    bounds = _bucket_boundaries(df, lead, num_buckets)
+    bounds = _bucket_boundaries(df, lead, _default_buckets(df))
     lead_d = F.col(lead).cast("double")
     bucketed = df.withColumn(c_bkt, _bucket_expr(lead_d, bounds))
 
@@ -185,7 +181,6 @@ def with_global_rank(
     order_cols: Sequence[str],
     rank_col: str = "_rank",
     total_col: str | None = None,
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Add an exact 1-indexed global rank over ``order_cols`` (ascending)
     without a single-partition sort.
@@ -195,14 +190,9 @@ def with_global_rank(
     input is unpersisted it is scanned three times — the boundary pass,
     the per-bucket count pass, and the rank probe pass — so persist
     upstream frames that are expensive to recompute.
-
-    ``num_buckets`` is clamped to 256 (see ``_MAX_BUCKETS``): more
-    buckets would only improve balance of the partition-local windows,
-    never the rank values, and the per-row assignment cost is linear in
-    the bucket count.
     """
     joined, c_bkt, c_off, c_total = _bucketed_with_offsets(
-        df, order_cols, num_buckets, F.count(F.lit(1)), include_total=True
+        df, order_cols, F.count(F.lit(1)), include_total=True
     )
     w_loc = Window.partitionBy(c_bkt).orderBy(*[F.col(c) for c in order_cols])
     out = joined.withColumn(
@@ -234,7 +224,6 @@ def with_global_prefix_sum(
     order_cols: Sequence[str],
     value_col: str,
     prefix_col: str = "_prefix",
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Add the exact inclusive global prefix sum of ``value_col`` in
     ``order_cols`` order (ascending) — same value-bucketed shape as
@@ -255,7 +244,6 @@ def with_global_prefix_sum(
     joined, c_bkt, c_off, _ = _bucketed_with_offsets(
         df,
         order_cols,
-        num_buckets,
         F.sum(F.col(value_col)).cast("long"),
         include_total=False,
     )
@@ -277,7 +265,6 @@ def shard_by_budget(
     value_col: str,
     budget: int,
     shard_col: str = "shard",
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Token-balanced shard assignment: rows (whole, never split) go to
     shard floor((prefix - 1) / budget) of their inclusive global prefix
@@ -291,9 +278,7 @@ def shard_by_budget(
     clamp).
     """
     pc = _temp_names(df, ["_prefix"])[0]
-    out = with_global_prefix_sum(
-        df, order_cols, value_col, prefix_col=pc, num_buckets=num_buckets
-    )
+    out = with_global_prefix_sum(df, order_cols, value_col, prefix_col=pc)
     shard = F.floor(
         F.greatest(F.col(pc) - 1, F.lit(0)) / F.lit(budget)
     ).cast("long")
@@ -305,7 +290,6 @@ def exact_weighted_quantiles(
     value_col: str,
     weight_col: str,
     probs: Sequence[float],
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Exact weighted quantiles (ClickHouse ``quantileExactWeighted``)
     with NO global sort: the smallest value whose cumulative weight
@@ -339,13 +323,10 @@ def exact_weighted_quantiles(
     src = df.where(
         F.col(value_col).isNotNull() & w.isNotNull() & (w > 0)
     ).select(F.col(value_col), w.alias("_w"))
-    if num_buckets is None:
-        num_buckets = _default_buckets(src)
-    num_buckets = max(1, min(num_buckets, _MAX_BUCKETS))
     c_bkt, c_val, c_off, c_total = _temp_names(
         src, ["_bkt", "_val", "_off", "_total"]
     )
-    bounds = _bucket_boundaries(src, value_col, num_buckets)
+    bounds = _bucket_boundaries(src, value_col, _default_buckets(src))
     bucketed = src.withColumn(
         c_bkt, _bucket_expr(F.col(value_col).cast("double"), bounds)
     )
@@ -384,7 +365,6 @@ def ks_2sample(
     df: DataFrame,
     value_col: str,
     flag: "F.Column",
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic, distributed-exact:
     ``D = max_v |F_a(v) - F_b(v)|`` where ``flag`` (boolean Column)
@@ -409,11 +389,8 @@ def ks_2sample(
         F.when(flag, 1).otherwise(0).alias("_a"),
         F.when(flag, 0).otherwise(1).alias("_b"),
     )
-    if num_buckets is None:
-        num_buckets = _default_buckets(src)
-    num_buckets = max(1, min(num_buckets, _MAX_BUCKETS))
     c_bkt, c_offa, c_offb = _temp_names(src, ["_bkt", "_offa", "_offb"])
-    bounds = _bucket_boundaries(src, "_v", num_buckets)
+    bounds = _bucket_boundaries(src, "_v", _default_buckets(src))
     # distinct-value collapse in the SAME lineage as the prefix window
     # (bucket first, then (bucket, value) hash aggregate with map-side
     # combine): the offsets branch reuses the aggregate's shuffle stage
@@ -465,7 +442,6 @@ def mann_whitney_u(
     df: DataFrame,
     value_col: str,
     flag: "F.Column",
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Mann–Whitney U with exact midrank tie handling, distributed —
     the ClickHouse ``mannWhitneyUTest`` rank computation without a
@@ -491,11 +467,8 @@ def mann_whitney_u(
         F.when(flag, 1).otherwise(0).alias("_a"),
         F.when(flag, 0).otherwise(1).alias("_b"),
     )
-    if num_buckets is None:
-        num_buckets = _default_buckets(src)
-    num_buckets = max(1, min(num_buckets, _MAX_BUCKETS))
     c_bkt, c_off = _temp_names(src, ["_bkt", "_off"])
-    bounds = _bucket_boundaries(src, "_v", num_buckets)
+    bounds = _bucket_boundaries(src, "_v", _default_buckets(src))
     # same single-lineage collapse as ks_2sample (AQE stage reuse
     # replaces the checkpoint)
     bucketed = (
@@ -552,7 +525,6 @@ def exact_weighted_quantiles_by_group(
     value_col: str,
     weight_col: str,
     probs: Sequence[float],
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Per-group exact weighted quantiles (ClickHouse
     ``quantileExactWeighted … GROUP BY``) with NO per-group
@@ -592,13 +564,10 @@ def exact_weighted_quantiles_by_group(
         & w.isNotNull()
         & (w > 0)
     ).select(F.col(group_col), F.col(value_col), w.alias("_w"))
-    if num_buckets is None:
-        num_buckets = _default_buckets(src)
-    num_buckets = max(1, min(num_buckets, _MAX_BUCKETS))
     c_bkt, c_val, c_off, c_total = _temp_names(
         src, ["_bkt", "_val", "_off", "_total"]
     )
-    bounds = _bucket_boundaries(src, value_col, num_buckets)
+    bounds = _bucket_boundaries(src, value_col, _default_buckets(src))
     bucketed = src.withColumn(
         c_bkt, _bucket_expr(F.col(value_col).cast("double"), bounds)
     )

@@ -1,4 +1,9 @@
-"""Scale utilities: skew mitigation and shuffle avoidance.
+"""Scale utilities: plan-size estimates, skew mitigation and shuffle
+avoidance.
+
+- ``plan_size_bytes``: the one place build-time choices (bucket
+  counts, broadcast gates) read the optimizer's size estimate, so no
+  operator runs a job just to size itself.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew at
 runtime; these helpers are the explicit variants for the cases AQE
@@ -19,8 +24,22 @@ tests/test_scale.py and by the DuckDB oracle on q_salted_agg_events).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes — plan
+    statistics only, no Spark job — or ``None`` when the plan has no
+    estimate.  It is an upper bound (filters and joins are estimated
+    pessimistically), so build-time choices made from it only err
+    toward the scale-safe side."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (AttributeError, Py4JError):
+        # no JVM plan behind the frame, or the plan cannot be sized
+        return None
 
 
 def _salt(n: int):

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns.
 
-- ``cosine`` / ``brute_force_topk``: exact cosine top-k — the baseline
+- ``brute_force_topk``: exact cosine top-k — the baseline
   and the oracle for approximate paths.  Query set × corpus via
   broadcast join (queries are small by construction); per-query top-k
   by window rank.  At 100 TB-scale corpora the corpus side stays
@@ -47,10 +47,6 @@ def _safe_div(num: Column, den: Column) -> Column:
     return F.when(den != 0, num / den)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _safe_div(dot(a, b), norm(a) * norm(b))
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -70,12 +66,10 @@ def brute_force_topk(
     from clickbom_spark.ext.dedup import guard_oracle_size
 
     queries = guard_oracle_size(queries, "brute_force_topk(queries)", "rp_lsh_topk")
-    # Norms are hoisted to per-ROW columns before the pair join:
-    # cosine() inline would re-fold both vectors' self-dot-products for
-    # every (query, corpus) pair — ~3× the O(d) array work of the pair
-    # stage, the hot loop of this operator.  sqrt(dot(v,v)) here is the
-    # exact expression cosine() evaluates, so cos values are
-    # bit-identical; only where the norm is computed moves.
+    # Norms are hoisted to per-ROW columns before the pair join: an
+    # inline dot/(norm·norm) would re-fold both vectors' self-dot-products
+    # for every (query, corpus) pair — ~3× the O(d) array work of the
+    # pair stage, the hot loop of this operator.
     q = queries.select(
         F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
     ).withColumn("qn", norm(F.col("qv")))

@@ -26,9 +26,9 @@ key cardinality).  Total cost: two corpus scans (sketch + recount).
 The sketch output is collected to the driver — like k-means centers or
 the BPE argmax, the summary IS the model — but only after intermediate
 merge rounds (mergeable summaries, Agarwal et al. 2012) fold the
-per-partition summaries down to ≤ fanin partitions, so the collect is
-bounded at (k+1)·fanin rows regardless of how many tasks scanned the
-input: partition-count-proof at 100k-task scale.
+per-partition summaries down to ≤ fanin (``_MG_FANIN``) partitions, so
+the collect is bounded at (k+1)·fanin rows regardless of how many tasks
+scanned the input: partition-count-proof at 100k-task scale.
 """
 
 from __future__ import annotations
@@ -159,9 +159,7 @@ def _mg_sketch_frame(src: DataFrame, kernel, merge_kernel, schema, fanin: int):
     return sk
 
 
-def heavy_hitters(
-    df: DataFrame, col: str, k: int = 16, fanin: int = _MG_FANIN
-) -> DataFrame:
+def heavy_hitters(df: DataFrame, col: str, k: int = 16) -> DataFrame:
     """Exact items with frequency > N/k (N = non-null row count).
 
     Returns (``col``, cnt, n_total) — identical to the full
@@ -186,7 +184,7 @@ def heavy_hitters(
          StructField(_CNT, LongType(), False),
          StructField(_PN, LongType(), False)]
     )
-    # The final sketch frame is bounded at ≤(k+1)·fanin rows — merge
+    # The final sketch frame is bounded at ≤(k+1)·_MG_FANIN rows — merge
     # rounds fold high partition counts first — so the collect is one
     # small job, like the BPE argmax: no persist/unpersist lifecycle
     # leaks into the caller's session, and N becomes a plan literal.
@@ -195,7 +193,7 @@ def heavy_hitters(
     # a CANDIDATE row can only mean NaN — true nulls were filtered
     # upstream — and is mapped back here).
     rows = _mg_sketch_frame(
-        src, _mg_partition(k, col), _mg_merge(k, col), schema, fanin
+        src, _mg_partition(k, col), _mg_merge(k, col), schema, _MG_FANIN
     ).collect()
     n_total = sum(r[_PN] for r in rows)
     spark = df.sparkSession
@@ -243,8 +241,7 @@ def _mg_weighted_partition(k: int, col: str, weight_col: str):
 
 
 def heavy_hitters_weighted(
-    df: DataFrame, col: str, weight_col: str, k: int = 16,
-    fanin: int = _MG_FANIN,
+    df: DataFrame, col: str, weight_col: str, k: int = 16
 ) -> DataFrame:
     """Exact weighted heavy hitters — ClickHouse ``topKWeighted``: the
     values whose total weight exceeds W/k (W = total weight), exactly.
@@ -272,14 +269,14 @@ def heavy_hitters_weighted(
          StructField(_PN, LongType(), False)]
     )
     # same bounded-collect scheme as heavy_hitters: merge rounds keep
-    # the driver's view at ≤(k+1)·fanin rows (the merge kernel ingests
+    # the driver's view at ≤(k+1)·_MG_FANIN rows (the merge kernel ingests
     # residual WEIGHTS, so the pigeonhole-on-weights superset holds)
     rows = _mg_sketch_frame(
         src,
         _mg_weighted_partition(k, col, weight_col),
         _mg_merge(k, col),
         schema,
-        fanin,
+        _MG_FANIN,
     ).collect()
     w_total = sum(r[_PN] for r in rows)
     spark = df.sparkSession
@@ -717,13 +714,12 @@ def approx_quantiles_from_sketch(
 
 
 def heavy_hitters_from_parts(
-    dfs: Sequence[DataFrame], col: str, k: int = 16,
-    fanin: int = _MG_FANIN,
+    dfs: Sequence[DataFrame], col: str, k: int = 16
 ) -> DataFrame:
     """Exact heavy hitters over the UNION of several ingest parts,
     computed by sketching each part independently and merging the
     summaries — the ClickHouse ``topKState``/``-Merge`` workflow: each
-    site ships only its ≤(k+1)·fanin-row summary, the merge round
+    site ships only its ≤(k+1)·_MG_FANIN-row summary, the merge round
     combines them (mergeable MG, Agarwal et al. 2012), and one recount
     over the unioned corpus restores exact counts at the > N/k cutoff.
     Identical output to :func:`heavy_hitters` on the pre-unioned data
@@ -746,7 +742,7 @@ def heavy_hitters_from_parts(
     )
     sketches = [
         _mg_sketch_frame(s, _mg_partition(k, col), _mg_merge(k, col),
-                         schema, fanin)
+                         schema, _MG_FANIN)
         for s in srcs
     ]
     merged = sketches[0]

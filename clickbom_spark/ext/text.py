@@ -68,13 +68,6 @@ def stopword_hits(text: Column, stopwords: list[str]) -> Column:
     )
 
 
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords or LANG_STOPWORDS["en"]
-    return stopword_hits(text, sw).cast("double") / F.greatest(
-        token_count(text), F.lit(1)
-    ).cast("double")
-
-
 def mean_word_length(text: Column) -> Column:
     t = tokens(text)
     total = F.aggregate(

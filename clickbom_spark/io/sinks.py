@@ -17,8 +17,6 @@ Two shapes:
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 
 
@@ -73,10 +71,3 @@ def write_sbom_document(doc_df: DataFrame, path: str, mode: str = "overwrite") -
     single-row output of assemble_merged_doc.
     """
     doc_df.coalesce(1).write.mode(mode).json(path)
-
-
-def sbom_document_to_json(doc_df: DataFrame) -> str:
-    """Render the merged document as a canonical JSON string (driver-side;
-    single row by construction)."""
-    row = doc_df.collect()[0]
-    return json.dumps(row.asDict(recursive=True), indent=2)

@@ -174,10 +174,6 @@ def source_reference_expr(fallback: Column | None = None) -> Column:
     )
 
 
-def with_source_reference(df: DataFrame) -> DataFrame:
-    return df.withColumn("source_ref", source_reference_expr())
-
-
 def map_unknown_licenses(
     components: DataFrame, mappings: DataFrame
 ) -> DataFrame:

@@ -6,19 +6,12 @@ inputs are scalars, not rows, so no DataFrame machinery is involved
 (SURVEY §2.4 F11 note).  Rules mirror lib/sanitize.sh semantically:
 strip-then-validate, with validation failure raising
 :class:`SanitizationError` (the engine's ``exit 1``).
-
-A Column-expression variant of the generic string sanitizer is provided
-for row-level cleaning at scale (sanitize_string_col), since the same
-rules applied to millions of rows must stay JVM-side.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 class SanitizationError(ValueError):
@@ -40,13 +33,6 @@ def sanitize_string(value: str, max_length: int = 1000) -> str:
     s = "".join(ch for ch in s if ch not in _CONTROL)
     s = s[:max_length]
     return "".join(ch for ch in s if ch not in _DANGEROUS)
-
-
-def sanitize_string_col(col: Column, max_length: int = 1000) -> Column:
-    """Column-expression twin of F1 for row-scale cleaning (JVM-side)."""
-    c = F.regexp_replace(col, r"[\x00-\x1f\x7f-\xff]", "")
-    c = F.substring(c, 1, max_length)
-    return F.regexp_replace(c, r"[\]\$\(\)\{\}\|;&<>@\[`]", "")
 
 
 # ---- F2: repository ----

@@ -138,26 +138,9 @@ LIMIT 20
     bench=True,
 )
 def q_pagerank_parts(spark, sf_dir):
-    import os
-
     from clickbom_spark.ext.graph import pagerank
 
     (li,) = load(spark, sf_dir, "lineitem")
-    # Node-count hint for pagerank's broadcast gate: the graph's nodes
-    # are a subset of part ∪ supplier, whose exact table sizes sit in
-    # the parquet footers — two metadata reads replace the count() job
-    # the "auto" gate would otherwise run before iteration 1.  An
-    # upper bound only ever disables a viable broadcast (load balance),
-    # never changes rank values.
-    try:
-        import pyarrow.parquet as pq
-
-        approx = sum(
-            pq.read_metadata(os.path.join(sf_dir, f"{t}.parquet")).num_rows
-            for t in ("part", "supplier")
-        )
-    except (OSError, ImportError):
-        approx = None
     # Iterate on LONG node keys (part k → 2k, supplier k → 2k+1) and
     # decode to the labeled form only at output: every per-iteration
     # shuffle, broadcast, and hash compares 8-byte longs instead of
@@ -175,8 +158,7 @@ def q_pagerank_parts(spark, sf_dir):
     d = li.select(p.alias("src"), s.alias("dst")).distinct()
     edges = d.union(d.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     ranks = pagerank(
-        edges, iterations=_PR_ITERS, damping=_PR_D, approx_nodes=approx,
-        assume_distinct=True,
+        edges, iterations=_PR_ITERS, damping=_PR_D, assume_distinct=True
     )
     node = (
         F.when(

@@ -36,7 +36,6 @@ interfaces involved.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator
 
@@ -46,33 +45,13 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_MANIFEST_DIR = "_manifests"
-
-
-def _mdir(path: str) -> str:
-    return os.path.join(path, _MANIFEST_DIR)
-
-
-def _current_version(path: str) -> int:
-    best = -1
-    try:
-        names = os.listdir(_mdir(path))
-    except FileNotFoundError:
-        return -1
-    for name in names:
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                best = max(best, int(name[1:-5]))
-            except ValueError:
-                continue
-    return best
+from clickbom_spark.ext.manifest import _mdir, current_version, read_manifest
 
 
 def _manifest(path: str, v: int) -> dict | None:
     """Manifest ``v``, or None when that version has been vacuumed."""
     try:
-        with open(os.path.join(_mdir(path), f"v{v}.json")) as f:
-            return json.load(f)
+        return read_manifest(path, v)
     except FileNotFoundError:
         return None
 
@@ -182,7 +161,7 @@ class LakeStreamReader(DataSourceStreamReader):
         return self._initial
 
     def latestOffset(self) -> dict:
-        return {"version": max(_current_version(self.path),
+        return {"version": max(current_version(self.path),
                                self._initial["version"])}
 
     def _added_files(self, v_from: int, v_to: int) -> list[str]:
@@ -314,7 +293,7 @@ def _logical_schema(path: str):
     evaluated outside Spark and are refused up front."""
     import pyarrow.parquet as pq
 
-    v = _current_version(path)
+    v = current_version(path)
     if v < 0:
         raise ValueError(f"no lake at {path}")
     m = _manifest(path, v)

@@ -106,7 +106,7 @@ def test_bpe_segment_reduces_piece_count(spark):
     assert again == merged
 
 
-def test_bpe_train_releases_checkpoint_blocks(spark):
+def test_bpe_train_releases_checkpoint_blocks(spark, monkeypatch):
     """Training localCheckpoints every few merges; superseded
     checkpoint blocks must be released at the RDD level (a
     DataFrame.unpersist is a no-op for them), so repeated training
@@ -116,6 +116,7 @@ def test_bpe_train_releases_checkpoint_blocks(spark):
     docs = spark.createDataFrame(
         list(enumerate(TEXTS * 3)), "doc_id long, text string"
     )
-    bpe.bpe_train(docs, n_merges=8, checkpoint_every=2)
+    monkeypatch.setattr(bpe, "_CHECKPOINT_EVERY", 2)
+    bpe.bpe_train(docs, n_merges=8)
     after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     assert after - before == set()

@@ -350,7 +350,7 @@ def test_shingles_short_text(spark):
 
 # ---------------------------------------------------------------- ranks
 
-def test_with_global_rank_matches_total_order_window(spark):
+def test_with_global_rank_matches_total_order_window(spark, monkeypatch):
     """The distributed bucketed rank must equal the single-partition
     Window.orderBy row_number it replaces — exactly, including ties on
     the leading column resolved by the tie-break column."""
@@ -358,15 +358,17 @@ def test_with_global_rank_matches_total_order_window(spark):
 
     from pyspark.sql import Window
 
+    from clickbom_spark.ext import ranks
     from clickbom_spark.ext.ranks import with_global_rank
 
+    monkeypatch.setattr(ranks, "_default_buckets", lambda df: 16)
     rng = random.Random(7)
     # heavy ties on v to exercise cross-bucket tie handling
     rows = [(i, float(rng.randint(0, 40))) for i in range(2000)]
     df = spark.createDataFrame(rows, "id long, v double")
     got = {
         r["id"]: r["rk"]
-        for r in with_global_rank(df, ["v", "id"], rank_col="rk", num_buckets=16)
+        for r in with_global_rank(df, ["v", "id"], rank_col="rk")
         .select("id", "rk")
         .collect()
     }
@@ -397,17 +399,19 @@ def test_ntile_expr_matches_sql_ntile(spark):
         assert not bad, (n, k, bad[:5])
 
 
-def test_with_global_rank_null_leads_rank_first_not_dropped(spark):
+def test_with_global_rank_null_leads_rank_first_not_dropped(spark, monkeypatch):
     """NULL lead values must land in bucket 0 and rank FIRST (Spark's
     ascending default) — a NULL bucket would silently drop rows at the
     offset equi-join."""
     from pyspark.sql import Window
 
+    from clickbom_spark.ext import ranks
     from clickbom_spark.ext.ranks import with_global_rank
 
+    monkeypatch.setattr(ranks, "_default_buckets", lambda df: 4)
     rows = [(1, None), (2, 5.0), (3, None), (4, 1.0), (5, 3.0)]
     df = spark.createDataFrame(rows, "id long, v double")
-    out = with_global_rank(df, ["v", "id"], rank_col="rk", num_buckets=4)
+    out = with_global_rank(df, ["v", "id"], rank_col="rk")
     got = {r["id"]: r["rk"] for r in out.collect()}
     assert len(got) == 5  # nothing dropped
     w = Window.orderBy(F.col("v").asc_nulls_first(), "id")
@@ -418,19 +422,23 @@ def test_with_global_rank_null_leads_rank_first_not_dropped(spark):
     assert got == want
 
 
-def test_with_global_rank_huge_bucket_count_capped_and_exact(spark):
-    """num_buckets is clamped to _MAX_BUCKETS: a pathological request
-    (5000 buckets) must neither bloat the bucket expression nor change
-    a single rank value."""
+def test_with_global_rank_huge_bucket_count_capped_and_exact(
+    spark, monkeypatch
+):
+    """The derived bucket count is clamped to _MAX_BUCKETS: a huge plan
+    estimate (1 PB → 2^25 buckets unclamped) must neither bloat the
+    bucket expression nor change a single rank value."""
     from pyspark.sql import Window
 
     from clickbom_spark.ext import ranks
     from clickbom_spark.ext.ranks import with_global_rank
 
+    monkeypatch.setattr(ranks, "plan_size_bytes", lambda df: 1 << 50)
     df = spark.createDataFrame(
         [(i, float(i % 37)) for i in range(500)], "id long, v double"
     )
-    out = with_global_rank(df, ["v", "id"], rank_col="rk", num_buckets=5000)
+    assert ranks._default_buckets(df) == ranks._MAX_BUCKETS
+    out = with_global_rank(df, ["v", "id"], rank_col="rk")
     got = {r["id"]: r["rk"] for r in out.select("id", "rk").collect()}
     w = Window.orderBy("v", "id")
     want = {
@@ -441,16 +449,18 @@ def test_with_global_rank_huge_bucket_count_capped_and_exact(spark):
     assert ranks._MAX_BUCKETS == 256  # documented cap
 
 
-def test_with_global_rank_preserves_colliding_column_names(spark):
+def test_with_global_rank_preserves_colliding_column_names(spark, monkeypatch):
     """An input that already has _bkt/_off/_total columns must come out
     with those columns intact (unique temp names, no clobber)."""
+    from clickbom_spark.ext import ranks
     from clickbom_spark.ext.ranks import with_global_rank
 
+    monkeypatch.setattr(ranks, "_default_buckets", lambda df: 4)
     rows = [(1, 2.0, "x", 10, 99), (2, 1.0, "y", 20, 98)]
     df = spark.createDataFrame(
         rows, "id long, v double, _bkt string, _off long, _total long"
     )
-    out = with_global_rank(df, ["v", "id"], rank_col="rk", num_buckets=4)
+    out = with_global_rank(df, ["v", "id"], rank_col="rk")
     assert {"_bkt", "_off", "_total", "rk"} <= set(out.columns)
     got = {r["id"]: (r["_bkt"], r["_off"], r["_total"], r["rk"])
            for r in out.collect()}
@@ -746,7 +756,7 @@ def test_duplicate_token_spans_random_corpus_vs_bruteforce(spark):
         assert cover == expected_cover[d], d
 
 
-def test_with_global_prefix_sum_matches_total_order_window(spark):
+def test_with_global_prefix_sum_matches_total_order_window(spark, monkeypatch):
     """Bucketed distributed prefix sum == the single-partition
     running-sum window, under heavy lead-value ties and any input
     partitioning."""
@@ -754,8 +764,10 @@ def test_with_global_prefix_sum_matches_total_order_window(spark):
 
     from pyspark.sql import Window as W
 
+    from clickbom_spark.ext import ranks
     from clickbom_spark.ext.ranks import with_global_prefix_sum
 
+    monkeypatch.setattr(ranks, "_default_buckets", lambda df: 16)
     rng = random.Random(7)
     rows = [(i, rng.randint(0, 9), rng.randint(0, 50)) for i in range(500)]
     df = spark.createDataFrame(rows, "id long, v long, tok long").repartition(13)
@@ -767,7 +779,7 @@ def test_with_global_prefix_sum_matches_total_order_window(spark):
     got = {
         r["id"]: r["pfx"]
         for r in with_global_prefix_sum(
-            df, ["v", "id"], "tok", prefix_col="pfx", num_buckets=16
+            df, ["v", "id"], "tok", prefix_col="pfx"
         ).collect()
     }
     assert got == expected

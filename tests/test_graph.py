@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from clickbom_spark.ext.graph import pagerank
+from tests.conftest import SF_SMOKE
 
 EDGES = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
 
@@ -76,10 +78,11 @@ def test_reachable_hop_bound_respected(spark):
 
 
 def test_pagerank_exotic_broadcast_threshold_conf_does_not_crash(spark):
-    """'auto' mode must survive any conf string Spark itself accepts:
-    the full unit set ('1t', '1p') parses instead of raising at plan
-    build, and -1 (broadcast disabled) gates the hint off."""
-    edges = spark.createDataFrame(EDGES, "src string, dst string")
+    """The gate must survive any conf string Spark itself accepts: it
+    reads Spark's own parse of the threshold, so the full unit set
+    ('1t', '1p') works at plan build, and -1 (broadcast disabled) gates
+    the hint off."""
+    edges = _values_edges(spark)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         for conf in ["1t", "1p", "100k", "-1"]:
@@ -90,23 +93,109 @@ def test_pagerank_exotic_broadcast_threshold_conf_does_not_crash(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_pagerank_approx_nodes_hint_skips_count_job(spark, monkeypatch):
-    """With approx_nodes supplied, 'auto' mode must not run ANY count()
-    job before iteration 1 — callers who know their node count pay zero
-    extra jobs at plan build."""
+def _values_edges(spark):
+    """EDGES as a VALUES relation: unlike ``createDataFrame`` over a
+    Python list (a LogicalRDD, estimated at Long.MaxValue bytes), it
+    carries a real size estimate, so pagerank's broadcast gate opens."""
+    rows = ", ".join(f"('{s}', '{d}')" for s, d in EDGES)
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(src, dst)")
+
+
+def sql_plans(spark, run):
+    """``run()``'s result and the final physical-plan descriptions of
+    the SQL executions it started, read from the SQL status store (no
+    extra job).  The store keeps only the newest
+    ``spark.sql.ui.retainedExecutions`` entries, ordered by id, so new
+    executions are found by id, not by position."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def newest(n):
+        bus.waitUntilEmpty()
+        count = store.executionsCount()
+        execs = store.executionsList(int(max(count - n, 0)), int(n))
+        return [execs.apply(i) for i in range(execs.size())]
+
+    last = newest(1)
+    first_new = last[0].executionId() + 1 if last else 0
+    out = run()
+    plans = [
+        e.physicalPlanDescription()
+        for e in newest(64)
+        if e.executionId() >= first_new
+    ]
+    return out, plans
+
+
+def test_pagerank_runs_no_job_before_first_iteration(spark, monkeypatch):
+    """The broadcast gate reads plan statistics: no count() job runs
+    at plan build, on a graph whose gate is open."""
     from pyspark.sql import DataFrame
 
-    edges = spark.createDataFrame(EDGES, "src string, dst string")
+    edges = _values_edges(spark)
 
     def _boom(self):
-        raise AssertionError("count() job ran despite approx_nodes hint")
+        raise AssertionError("count() job ran before iteration 1")
 
     monkeypatch.setattr(DataFrame, "count", _boom)
-    plan = pagerank(edges, iterations=1, materialize=False, approx_nodes=4)
-    monkeypatch.undo()
-    got = {r.node: r.rank for r in plan.collect()}
+    got = {r.node: r.rank for r in pagerank(edges, iterations=1).collect()}
     assert len(got) == 4
-    plan.unpersist_pagerank_blocks()
+
+
+def test_pagerank_broadcast_gate_follows_threshold(spark):
+    """A small graph broadcasts its rank vector; a threshold below the
+    plan estimate, or -1, leaves no broadcast in the plan (AQE cannot
+    convert under that threshold either) and gives identical ranks."""
+    edges = _values_edges(spark)
+    ranks, plans = sql_plans(spark, lambda: pagerank(edges, iterations=3))
+    assert len(plans) == 1 and "BroadcastHashJoin" in plans[0], plans
+    want = {r.node: r.rank for r in ranks.collect()}
+    for n, v in _expected(3).items():
+        assert abs(want[n] - v) < 1e-9, (n, want[n], v)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for conf in ["10b", "-1"]:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", conf)
+            got, plans = sql_plans(spark, lambda: pagerank(edges, iterations=3))
+            assert plans and not any("BroadcastHashJoin" in p for p in plans), conf
+            assert {r.node: r.rank for r in got.collect()} == want, conf
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_pagerank_leaves_only_its_checkpoint(spark):
+    """Each call releases its loop invariants: the one new persistent
+    RDD is the returned checkpoint."""
+    jsc = spark.sparkContext._jsc
+    edges = _values_edges(spark)
+    for _ in range(2):
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        ranks = pagerank(edges, iterations=2)
+        after = set(jsc.getPersistentRDDs().keySet().toArray())
+        assert after - before == {ranks._jdf.queryExecution().analyzed().rdd().id()}
+
+
+# Spark jobs each graph builder launches before returning its plan, on
+# the smoke tables: upper bounds pinned from measurement (pagerank ran
+# 23 jobs, once 24; triangles 7), so a new eager job fails here.
+_BUILDER_JOB_BUDGET = {"q_pagerank_parts": 24, "q_triangle_count": 7}
+
+
+@pytest.mark.parametrize("name", sorted(_BUILDER_JOB_BUDGET))
+def test_graph_builder_job_budget(spark, name):
+    from clickbom_spark.queries import REGISTRY
+
+    sc = spark.sparkContext
+    group = f"builder-budget-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        REGISTRY[name].fn(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= _BUILDER_JOB_BUDGET[name], jobs
 
 
 def test_triangle_count_matches_bruteforce(spark):

@@ -14,10 +14,16 @@ walk every Python file in the repo and assert no module defines the
 same top-level (or class-level) name twice.  Decorator-stacked
 overloads and ``if TYPE_CHECKING`` twins don't occur in this repo,
 so an exact-name collision is always a bug here.
+
+The same walk also guards against dead definitions: a top-level
+``def``/``class`` in the library that nothing names — not the library,
+the tests, the scripts, the benchmark, nor the entry points — is code
+that only costs reading.
 """
 
 import ast
 import collections
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -26,8 +32,8 @@ SCAN_DIRS = ("clickbom_spark", "tests", "scripts")
 TOP_FILES = ("__spark_entry__.py", "bench.py")
 
 
-def _py_files():
-    for d in SCAN_DIRS:
+def _py_files(dirs=SCAN_DIRS):
+    for d in dirs:
         yield from sorted((REPO / d).rglob("*.py"))
     for f in TOP_FILES:
         p = REPO / f
@@ -60,3 +66,43 @@ def test_no_module_shadows_a_definition():
         "duplicate top-level names silently shadow the earlier "
         f"definition: {offenders}"
     )
+
+
+_IDENT = re.compile(r"[A-Za-z_]\w*")
+
+
+def _referenced_names(tree):
+    """Every name a module mentions: loads and stores, attribute names,
+    import aliases, and identifier-shaped string constants (registry
+    keys, ``getattr`` targets, ``__all__`` entries)."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield from node.name.split(".")
+            if node.asname:
+                yield node.asname
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if _IDENT.fullmatch(node.value):
+                yield node.value
+
+
+def test_no_library_definition_is_dead():
+    referenced = set()
+    defined = []
+    for path in _py_files(SCAN_DIRS + ("perfbench",)):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        referenced.update(_referenced_names(tree))
+        rel = path.relative_to(REPO)
+        if rel.parts[0] != "clickbom_spark":
+            continue
+        defined += [
+            f"{rel}::{node.name}"
+            for node in tree.body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and not node.decorator_list
+        ]
+    dead = [d for d in defined if d.rsplit("::", 1)[1] not in referenced]
+    assert dead == [], f"top-level definitions nothing references: {dead}"

@@ -253,12 +253,15 @@ def test_packing_slims_before_python(spark):
 
 
 def test_pagerank_broadcasts_rank_vector(spark):
-    # the registry query materializes (localCheckpoint truncates the
-    # plan), so inspect the operator's own un-truncated plan
+    # pagerank returns its checkpoint (a truncated plan), so read the
+    # plan its materializing execution ran from the SQL status store;
+    # the gate-off side (threshold -1 or below the estimate) is pinned
+    # in tests/test_graph.py
     from pyspark.sql import functions as F
 
     from clickbom_spark.ext.graph import pagerank
     from clickbom_spark.session import read_table
+    from tests.test_graph import sql_plans
 
     li = read_table(spark, SF_CORRECT, "lineitem")
     p = F.concat(F.lit("p"), F.col("l_partkey").cast("string"))
@@ -266,22 +269,10 @@ def test_pagerank_broadcasts_rank_vector(spark):
     edges = li.select(p.alias("src"), s.alias("dst")).union(
         li.select(s.alias("src"), p.alias("dst"))
     )
-    ranks = pagerank(edges, iterations=2, materialize=False)
-    plan = ranks._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    ranks.unpersist_pagerank_blocks()
-
-    # billion-node escape hatch: with the hint forced OFF the
-    # per-iteration rank join must NOT carry a hard broadcast hint in
-    # the analyzed plan (AQE may still pick BHJ at runtime at test
-    # scale — the point is that nothing FORCES it at 100 TB)
-    shuffled = pagerank(
-        edges, iterations=2, materialize=False, broadcast_ranks=False
-    )
-    logical = shuffled._jdf.queryExecution().optimizedPlan().toString()
-    assert "hint" not in logical.lower(), logical
-    shuffled.unpersist_pagerank_blocks()
+    _, plans = sql_plans(spark, lambda: pagerank(edges, iterations=2))
+    assert len(plans) == 1, plans
+    assert "BroadcastHashJoin" in plans[0]
+    assert "CartesianProduct" not in plans[0]
 
 
 def test_dpp_subquery_on_partitioned_scan(spark):

@@ -302,11 +302,12 @@ def test_weighted_heavy_hitters_exact_across_partitionings(spark):
     assert run(11) == exact
 
 
-def test_heavy_hitters_merge_tree_bounds_driver_rows(spark):
+def test_heavy_hitters_merge_tree_bounds_driver_rows(spark, monkeypatch):
     """Partition-count-proofing: with more input partitions than the
     merge fan-in, intermediate merge rounds must fold the summaries so
     the frame the driver collects never exceeds (k+1)·fanin rows —
     while the final answer stays exactly the groupBy ground truth."""
+    from clickbom_spark.ext import sketches
     from clickbom_spark.ext.sketches import (
         _CNT,
         _PN,
@@ -332,17 +333,19 @@ def test_heavy_hitters_merge_tree_bounds_driver_rows(spark):
     # weight conservation through every merge level: sentinels sum to N
     assert sum(r[_PN] for r in rows) == src.count()
     # and the public operator built on the same path stays exact
+    monkeypatch.setattr(sketches, "_MG_FANIN", fanin)
     got = {
         (r["v"], r["cnt"])
-        for r in heavy_hitters(df.repartition(37), "v", k=k, fanin=fanin).collect()
+        for r in heavy_hitters(df.repartition(37), "v", k=k).collect()
     }
     assert got == _exact(df, "v", k=k)
 
 
-def test_weighted_heavy_hitters_merge_tree_exact(spark):
+def test_weighted_heavy_hitters_merge_tree_exact(spark, monkeypatch):
     """The weighted twin through forced merge rounds: residual WEIGHTS
     ride the merge, so the pigeonhole-on-weights superset (and hence
     the exact recount answer) survives the tree."""
+    from clickbom_spark.ext import sketches
     from clickbom_spark.ext.sketches import heavy_hitters_weighted
 
     rows = [(i, "hot" if i % 3 else "cold", (i % 7) + 1) for i in range(3000)]
@@ -353,11 +356,10 @@ def test_weighted_heavy_hitters_merge_tree_exact(spark):
             df.coalesce(1), "v", "w", k=4
         ).collect()
     }
+    monkeypatch.setattr(sketches, "_MG_FANIN", 3)
     got = {
         (r["v"], r["total_w"])
-        for r in heavy_hitters_weighted(
-            df.repartition(29), "v", "w", k=4, fanin=3
-        ).collect()
+        for r in heavy_hitters_weighted(df.repartition(29), "v", "w", k=4).collect()
     }
     assert got == exact and got
 
