@@ -104,7 +104,6 @@ def merge_pipeline(
     bucket_path: str,
     cfg: PipelineConfig,
     output_key: str = "",
-    deterministic: bool = True,
 ) -> DataFrame:
     """EP2: directory/bucket of SBOMs → deduped, source-tracked tuples.
 
@@ -120,7 +119,7 @@ def merge_pipeline(
     docs = M.cyclonedx_gate(docs)
     docs = docs.withColumn("source_ref", C.source_reference_expr())
     comps = C.cdx_components(docs, F.col("source_ref"))
-    comps = M.dedup_components(comps, deterministic=deterministic)
+    comps = M.dedup_components(comps, deterministic=True)
     if cfg.license_mappings_path:
         mappings = C.load_license_mappings(spark, cfg.license_mappings_path)
         comps = C.map_unknown_licenses(comps, mappings)

@@ -1,7 +1,6 @@
-"""A minimal manifest-based commit protocol over the copy-on-write
-lake (ext/mutations.py) — the piece a table format adds on top of the
-data path: atomic multi-file publish, snapshot isolation, time travel,
-and vacuum.
+"""A minimal manifest-based commit protocol over a copy-on-write
+parquet lake — the piece a table format adds on top of the data path:
+atomic multi-file publish, snapshot isolation, time travel, and vacuum.
 
 Layout: ``<path>/_manifests/v{N}.json`` lists the data files of
 snapshot N (names relative to the table root, plus row count and a
@@ -28,9 +27,11 @@ conflicts serialize instead of silently losing one writer's changes.
 The reference itself is single-writer (entrypoint.sh one-shot batch);
 this layer is strictly stronger.
 
-The mutation data paths are reused verbatim from ext/mutations.py
-semantics but rewritten against an explicit file list instead of the
-live directory: probe → affected subset → rewrite only that subset.
+Every row mutation (update, delete, upsert, merge_cdc, TTL delete and
+TTL rollup) runs the same data path,
+:meth:`VersionedLake._rewrite_matching`: probe the snapshot's explicit
+file list for matching rows → rewrite only the affected subset →
+commit against the snapshot read.
 """
 
 from __future__ import annotations
@@ -50,16 +51,11 @@ def _debug_validate_assumptions(spark: SparkSession) -> bool:
     invariants (``keys_unique`` & co.) with real validation jobs.
 
     Off by default — the assertions exist so tests/CI can set
-    ``spark.clickbom.debug.validateAssumptions=true`` (or the
-    ``CLICKBOM_DEBUG_ASSUMPTIONS`` env var) and turn a silently-
-    corrupting broken assumption into a loud failure at the call site.
+    ``spark.clickbom.debug.validateAssumptions=true`` and turn a
+    silently-corrupting broken assumption into a loud failure at the
+    call site.
     """
-    try:
-        v = spark.conf.get("spark.clickbom.debug.validateAssumptions")
-    except Exception:
-        v = None
-    if v is None:
-        v = os.environ.get("CLICKBOM_DEBUG_ASSUMPTIONS", "false")
+    v = spark.conf.get("spark.clickbom.debug.validateAssumptions", "false")
     return str(v).lower() == "true"
 
 
@@ -177,6 +173,22 @@ def _publish_exclusive(target: str, payload: dict, store=None) -> bool:
     client doing a conditional PUT) plugs in."""
     data = json.dumps(payload, indent=1, sort_keys=True).encode()
     return (store or _DEFAULT_STORE).put_if_absent(target, data)
+
+
+def _replace_keys(sub, key_frame, key_cols, incoming, cols) -> DataFrame:
+    """The rewrite of the key mutations (upsert, merge_cdc): the
+    affected rows ``sub`` minus every key in ``key_frame``, plus all
+    ``incoming`` rows.  An incoming row either replaces a row that
+    lived in an affected file (no other file can hold its key) or is a
+    pure insert; with nothing affected it is all inserts."""
+    out = incoming.select(*cols)
+    if sub is None:
+        return out
+    return (
+        sub.join(F.broadcast(key_frame), key_cols, "left_anti")
+        .select(*cols)
+        .unionByName(out)
+    )
 
 
 class VersionedLake:
@@ -538,12 +550,6 @@ class VersionedLake:
 
     # ---- mutations (probe → affected subset → rewrite → commit) ----
 
-    def _split_affected(self, probe_rows) -> list[str]:
-        return [
-            r["_f"].replace("file://", "").replace("file:", "")
-            for r in probe_rows
-        ]
-
     def _check_constraints(self, df: DataFrame, constraints: dict) -> None:
         """Refuse rows that FAIL a table CHECK constraint (SQL CHECK
         semantics: NULL passes, only FALSE violates — same as Delta).
@@ -617,46 +623,95 @@ class VersionedLake:
             f"commits: {last}"
         )
 
+    def _rewrite_matching(
+        self,
+        match,
+        rewrite,
+        message: str,
+        epoch: int | None = None,
+        expect_version: int | None = None,
+    ) -> int:
+        """The copy-on-write cycle of every row mutation; returns the
+        new version.
+
+        Reads the live snapshot and probes it: ``match`` maps the
+        snapshot (tagged with each row's file in ``_f``) to its
+        matching rows, and the files those rows live in are the
+        affected set (an empty snapshot skips the probe job).  Only the
+        affected files are re-read: ``rewrite(sub, cols)`` gets them as
+        ``sub`` (``None`` when nothing matched) plus the snapshot's
+        logical columns, and returns the rows that replace them, or
+        ``None`` to write nothing.  The new rows are checked against the
+        snapshot's CHECK constraints, and untouched + new files commit
+        against the snapshot read, so a concurrent commit re-runs the
+        whole cycle.  ``expect_version`` pins the cycle to one base
+        snapshot instead (see :meth:`merge_cdc`)."""
+
+        def attempt() -> int:
+            base = self._manifest()
+            if (
+                expect_version is not None
+                and base["version"] != expect_version
+            ):
+                raise CommitConflict(
+                    f"merge_cdc pinned to v{expect_version} but the "
+                    f"table is at v{base['version']} — re-validate "
+                    "against the current snapshot and retry"
+                )
+            files = [os.path.normpath(os.path.join(self.path, f))
+                     for f in base["files"]]
+            df = self._read_files(files, version=base["version"])
+            affected = set()
+            if base.get("n_rows") != 0:
+                probe = (
+                    match(df.withColumn("_f", F.input_file_name()))
+                    .select("_f")
+                    .distinct()
+                    .collect()
+                )
+                affected = {
+                    r["_f"].replace("file://", "").replace("file:", "")
+                    for r in probe
+                }
+            sub = (
+                self._read_files(sorted(affected), version=base["version"])
+                if affected
+                else None
+            )
+            out = rewrite(sub, df.columns)
+            constraints = base.get("constraints", {})
+            new_files = (
+                [] if out is None
+                else self._write_new(out, enforce=constraints)
+            )
+            return self._commit(
+                [f for f in files if f not in affected] + new_files,
+                None,
+                message,
+                based_on=base["files"],
+                epoch=epoch,
+                based_on_constraints=constraints,
+            )
+
+        return self._retry_mutation(attempt)
+
     def update(
         self, predicate: Column, assignments: dict[str, Column]
     ) -> int:
         """UPDATE … WHERE …; returns the new version."""
 
-        def attempt() -> int:
-            base = self._manifest()
-            files = [os.path.normpath(os.path.join(self.path, f))
-                     for f in base["files"]]
-            df = self._read_files(files, version=base["version"])
-            probe = (
-                df.withColumn("_f", F.input_file_name())
-                .where(predicate)
-                .select("_f")
-                .distinct()
-                .collect()
-            )
-            affected = set(self._split_affected(probe))
-            untouched = [f for f in files if f not in affected]
-            new_files = []
-            if affected:
-                sub = self._read_files(
-                    sorted(affected), version=base["version"]
+        def rewrite(sub, cols):
+            if sub is None:
+                return None
+            for col, expr in assignments.items():
+                sub = sub.withColumn(
+                    col, F.when(predicate, expr).otherwise(F.col(col))
                 )
-                out = sub
-                for col, expr in assignments.items():
-                    out = out.withColumn(
-                        col, F.when(predicate, expr).otherwise(F.col(col))
-                    )
-                new_files = self._write_new(
-                    out, enforce=base.get("constraints", {})
-                )
-            live = untouched + new_files
-            return self._commit(
-                live, None, "update",
-                based_on=base["files"],
-                based_on_constraints=base.get("constraints", {}),
-            )
+            return sub
 
-        return self._retry_mutation(attempt)
+        return self._rewrite_matching(
+            lambda df: df.where(predicate), rewrite, "update"
+        )
 
     def delete(self, predicate: Column) -> int:
         """DELETE … WHERE …; returns the new version.
@@ -667,38 +722,17 @@ class VersionedLake:
         ``NOT coalesce(pred, false)`` rows so a NULL-predicate row
         survives whether or not its file also held a true match.
         """
+        return self._delete_where(predicate, "delete")
 
-        def attempt() -> int:
-            base = self._manifest()
-            files = [os.path.normpath(os.path.join(self.path, f))
-                     for f in base["files"]]
-            df = self._read_files(files, version=base["version"])
-            probe = (
-                df.withColumn("_f", F.input_file_name())
-                .where(predicate)
-                .select("_f")
-                .distinct()
-                .collect()
-            )
-            affected = set(self._split_affected(probe))
-            untouched = [f for f in files if f not in affected]
-            new_files = []
-            if affected:
-                sub = self._read_files(
-                    sorted(affected), version=base["version"]
-                )
-                new_files = self._write_new(
-                    sub.where(~F.coalesce(predicate, F.lit(False))),
-                    enforce=base.get("constraints", {}),
-                )
-            live = untouched + new_files
-            return self._commit(
-                live, None, "delete",
-                based_on=base["files"],
-                based_on_constraints=base.get("constraints", {}),
-            )
-
-        return self._retry_mutation(attempt)
+    def _delete_where(self, predicate: Column, message: str) -> int:
+        """:meth:`delete` committed under ``message`` (``apply_ttl``
+        commits the same rewrite as ``ttl``)."""
+        keep = ~F.coalesce(predicate, F.lit(False))
+        return self._rewrite_matching(
+            lambda df: df.where(predicate),
+            lambda sub, cols: None if sub is None else sub.where(keep),
+            message,
+        )
 
     def upsert(
         self,
@@ -764,38 +798,8 @@ class VersionedLake:
                 raise ValueError("upsert: duplicate keys in change set")
             key_frame = keys.drop("_n")
 
-        def attempt() -> int:
-            base = self._manifest()
-            files = [os.path.normpath(os.path.join(self.path, f))
-                     for f in base["files"]]
-            lake = self._read_files(files, version=base["version"])
-            if base.get("n_rows") == 0:
-                # metadata shortcut: an empty snapshot cannot hold a
-                # matching key, so the COW probe job is skipped (the
-                # matview-bootstrap epoch hits this every time)
-                probe = []
-            else:
-                probe = (
-                    lake.withColumn("_f", F.input_file_name())
-                    .join(F.broadcast(key_frame), key_cols, "left_semi")
-                    .select("_f")
-                    .distinct()
-                    .collect()
-                )
-            affected = set(self._split_affected(probe))
-            untouched = [f for f in files if f not in affected]
-            cols = lake.columns
-            if affected:
-                sub = self._read_files(
-                    sorted(affected), version=base["version"]
-                )
-                out = (
-                    sub.join(F.broadcast(key_frame), key_cols, "left_anti")
-                    .select(*cols)
-                    .unionByName(changes.select(*cols))
-                )
-            else:
-                out = changes.select(*cols)
+        def rewrite(sub, cols):
+            out = _replace_keys(sub, key_frame, key_cols, changes, cols)
             if cluster_by:
                 # RANGE partitioning with an EXPLICIT count: hash can
                 # collide distinct values into one partition, and an
@@ -805,21 +809,17 @@ class VersionedLake:
                 out = out.repartitionByRange(
                     cluster_partitions, *cluster_by
                 )
-            new_files = self._write_new(
-                out, enforce=base.get("constraints", {})
-            )
-            live = untouched + new_files
-            return self._commit(
-                live,
-                None,
-                message,
-                based_on=base["files"],
-                epoch=epoch,
-                based_on_constraints=base.get("constraints", {}),
-            )
+            return out
 
         try:
-            return self._retry_mutation(attempt)
+            return self._rewrite_matching(
+                lambda df: df.join(
+                    F.broadcast(key_frame), key_cols, "left_semi"
+                ),
+                rewrite,
+                message,
+                epoch=epoch,
+            )
         finally:
             if keys is not None:
                 keys.unpersist()
@@ -894,63 +894,19 @@ class VersionedLake:
                 "last op per key first"
             )
         key_frame = keys.select(*key_cols)
-
-        def attempt() -> int:
-            base = self._manifest()
-            if (
-                expect_version is not None
-                and base["version"] != expect_version
-            ):
-                raise CommitConflict(
-                    f"merge_cdc pinned to v{expect_version} but the "
-                    f"table is at v{base['version']} — re-validate "
-                    "against the current snapshot and retry"
-                )
-            files = [os.path.normpath(os.path.join(self.path, f))
-                     for f in base["files"]]
-            lake = self._read_files(files, version=base["version"])
-            cols = lake.columns
-            if base.get("n_rows") == 0:
-                # same metadata shortcut as upsert: empty snapshot ->
-                # nothing to probe
-                probe = []
-            else:
-                probe = (
-                    lake.withColumn("_f", F.input_file_name())
-                    .join(F.broadcast(key_frame), key_cols, "left_semi")
-                    .select("_f")
-                    .distinct()
-                    .collect()
-                )
-            affected = set(self._split_affected(probe))
-            untouched = [f for f in files if f not in affected]
-            upserts = batch.where(F.col(op_col) != "D").select(*cols)
-            if affected:
-                sub = self._read_files(
-                    sorted(affected), version=base["version"]
-                )
-                out = (
-                    sub.join(F.broadcast(key_frame), key_cols, "left_anti")
-                    .select(*cols)
-                    .unionByName(upserts)
-                )
-            else:
-                out = upserts
-            new_files = self._write_new(
-                out, enforce=base.get("constraints", {})
-            )
-            live = untouched + new_files
-            return self._commit(
-                live,
-                None,
-                message,
-                based_on=base["files"],
-                epoch=epoch,
-                based_on_constraints=base.get("constraints", {}),
-            )
-
+        upserts = batch.where(F.col(op_col) != "D")
         try:
-            return self._retry_mutation(attempt)
+            return self._rewrite_matching(
+                lambda df: df.join(
+                    F.broadcast(key_frame), key_cols, "left_semi"
+                ),
+                lambda sub, cols: _replace_keys(
+                    sub, key_frame, key_cols, upserts, cols
+                ),
+                message,
+                epoch=epoch,
+                expect_version=expect_version,
+            )
         finally:
             keys.unpersist()
 
@@ -2457,39 +2413,7 @@ def apply_ttl(lake: VersionedLake, predicate: Column) -> int:
     probe).  Pass the cutoff explicitly (e.g. ``col("ts") <
     lit("2024-01-03")``) — retention policy evaluation belongs to the
     caller's scheduler, not hidden wall-clock reads."""
-
-    def attempt() -> int:
-        base = lake._manifest()
-        files = [os.path.normpath(os.path.join(lake.path, f)) for f in base["files"]]
-        df = lake._read_files(files, version=base["version"])
-        probe = (
-            df.withColumn("_f", F.input_file_name())
-            .where(predicate)
-            .select("_f")
-            .distinct()
-            .collect()
-        )
-        affected = set(lake._split_affected(probe))
-        untouched = [f for f in files if f not in affected]
-        new_files = []
-        if affected:
-            sub = lake._read_files(sorted(affected), version=base["version"])
-            # NULL-predicate rows are retained (SQL DELETE / ClickHouse
-            # TTL semantics) — and retained regardless of whether their
-            # file also held a truly-expired row, so the result is
-            # layout-independent.
-            new_files = lake._write_new(
-                sub.where(~F.coalesce(predicate, F.lit(False))),
-                enforce=base.get("constraints", {}),
-            )
-        live = untouched + new_files
-        return lake._commit(
-            live, None, "ttl",
-            based_on=base["files"],
-            based_on_constraints=base.get("constraints", {}),
-        )
-
-    return lake._retry_mutation(attempt)
+    return lake._delete_where(predicate, "ttl")
 
 
 def apply_ttl_rollup(
@@ -2524,50 +2448,25 @@ def apply_ttl_rollup(
             f"aggregated: {sorted(overlap)}"
         )
 
-    def attempt() -> int:
-        base = lake._manifest()
-        files = [
-            os.path.normpath(os.path.join(lake.path, f))
-            for f in base["files"]
-        ]
-        df = lake._read_files(files, version=base["version"])
-        missing = set(df.columns) - set(group_cols) - set(aggs)
+    expired = F.coalesce(predicate, F.lit(False))
+
+    def rewrite(sub, cols):
+        missing = set(cols) - set(group_cols) - set(aggs)
         if missing:
             raise ValueError(
                 "apply_ttl_rollup: columns need a group or an "
                 f"aggregate: {sorted(missing)}"
             )
-        probe = (
-            df.withColumn("_f", F.input_file_name())
-            .where(predicate)
-            .select("_f")
-            .distinct()
-            .collect()
+        if sub is None:
+            return None
+        rolled = (
+            sub.where(expired)
+            .groupBy(*group_cols)
+            .agg(*[_AGGS[a](F.col(c)).alias(c) for c, a in aggs.items()])
+            .select(*sub.columns)
         )
-        affected = set(lake._split_affected(probe))
-        untouched = [f for f in files if f not in affected]
-        new_files = []
-        if affected:
-            sub = lake._read_files(sorted(affected), version=base["version"])
-            expired_pred = F.coalesce(predicate, F.lit(False))
-            fresh = sub.where(~expired_pred)
-            rolled = (
-                sub.where(expired_pred)
-                .groupBy(*group_cols)
-                .agg(
-                    *[_AGGS[a](F.col(c)).alias(c) for c, a in aggs.items()]
-                )
-                .select(*sub.columns)
-            )
-            new_files = lake._write_new(
-                fresh.unionByName(rolled),
-                enforce=base.get("constraints", {}),
-            )
-        live = untouched + new_files
-        return lake._commit(
-            live, None, "ttl-rollup",
-            based_on=base["files"],
-            based_on_constraints=base.get("constraints", {}),
-        )
+        return sub.where(~expired).unionByName(rolled)
 
-    return lake._retry_mutation(attempt)
+    return lake._rewrite_matching(
+        lambda df: df.where(predicate), rewrite, "ttl-rollup"
+    )

@@ -29,17 +29,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# What Spark reports for a plan it cannot size, e.g. a LogicalRDD
+# (``createDataFrame`` over a Python list): Long.MaxValue.
+_NO_ESTIMATE = 2**63 - 1
+
+
 def plan_size_bytes(df: DataFrame) -> int | None:
     """The optimizer's size estimate of ``df`` in bytes — plan
     statistics only, no Spark job — or ``None`` when the plan has no
-    estimate.  It is an upper bound (filters and joins are estimated
-    pessimistically), so build-time choices made from it only err
-    toward the scale-safe side."""
+    estimate (including Spark's Long.MaxValue placeholder).  It is an
+    upper bound (filters and joins are estimated pessimistically), so
+    build-time choices made from it only err toward the scale-safe
+    side."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        size = int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
     except (AttributeError, Py4JError):
         # no JVM plan behind the frame, or the plan cannot be sized
         return None
+    return None if size >= _NO_ESTIMATE else size
 
 
 def _salt(n: int):

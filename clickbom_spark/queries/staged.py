@@ -1530,10 +1530,10 @@ def q_retention(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Copy-on-write UPDATE over a parquet lake: probe with a predicate-
-# pushed scan, rewrite ONLY the affected files, leave the rest
-# byte-identical (pinned by tests/test_mutations.py).  The final table
-# state equals the oracle's CASE-mutated view of the source.
+# Copy-on-write UPDATE / MERGE over the versioned lake: probe the
+# snapshot's files, rewrite ONLY the affected ones, leave the rest
+# byte-identical (pinned by tests/test_manifest.py).  The final table
+# state equals the oracle's mutated view of the source.
 # ---------------------------------------------------------------------------
 
 @query(
@@ -1546,30 +1546,25 @@ FROM documents
 GROUP BY CASE WHEN source = 'src3' THEN 'en' ELSE lang END
 ORDER BY lang
 """,
-    description="Copy-on-write UPDATE on a parquet lake "
-    "(ext/mutations.py cow_update — the Delta/Iceberg data-path "
-    "mechanics without the manifest): a predicate-pushed probe finds "
-    "affected files via input_file_name, only those files are re-read "
-    "and rewritten, untouched files stay byte-identical (file-pruning "
-    "law in tests); the post-mutation table equals the oracle's "
+    description="Copy-on-write UPDATE on the versioned lake "
+    "(ext/manifest.py VersionedLake.update): a predicate probe over the "
+    "snapshot's file list finds affected files via input_file_name, only "
+    "those files are re-read and rewritten, untouched files stay "
+    "byte-identical (file-pruning law in tests), and one manifest commit "
+    "publishes the result; the post-mutation table equals the oracle's "
     "CASE-mutated view of the source.",
 )
 def q_cow_update(spark, sf_dir):
-    from clickbom_spark.ext.mutations import cow_update
+    from clickbom_spark.ext.manifest import VersionedLake
 
     (docs,) = load(spark, sf_dir, "documents")
     path = scratch_path("docs_cow_lake")
     shutil.rmtree(path, ignore_errors=True)
-    docs.repartitionByRange(4, "doc_id").write.parquet(path)
-    cow_update(
-        spark,
-        path,
-        F.col("source") == "src3",
-        {"lang": F.lit("en")},
-    )
-    back = spark.read.parquet(path)
+    lake = VersionedLake.create(spark, path, docs, n_files=4)
+    lake.update(F.col("source") == "src3", {"lang": F.lit("en")})
     return (
-        back.groupBy("lang")
+        lake.read()
+        .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").cast("long").alias("total_chars"),
@@ -1591,21 +1586,22 @@ WITH merged AS (
 SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars
 FROM merged GROUP BY source ORDER BY source
 """,
-    description="MERGE INTO (upsert) on the parquet lake "
-    "(ext/mutations.py cow_upsert): change keys broadcast-semi-join "
-    "the lake to find affected files, only those are rewritten (minus "
-    "matched rows, plus all change rows), pure inserts append a fresh "
-    "part file, untouched files stay byte-identical; duplicate change "
-    "keys are rejected (Delta's MERGE determinism constraint). The "
-    "post-merge aggregate equals the oracle's CASE+UNION view.",
+    description="MERGE INTO (upsert) on the versioned lake "
+    "(ext/manifest.py VersionedLake.upsert): change keys "
+    "broadcast-semi-join the snapshot to find affected files, only those "
+    "are rewritten (minus matched rows, plus all change rows), pure "
+    "inserts land in a fresh file, untouched files stay byte-identical; "
+    "duplicate change keys are rejected (Delta's MERGE determinism "
+    "constraint). The post-merge aggregate equals the oracle's "
+    "CASE+UNION view.",
 )
 def q_cow_upsert(spark, sf_dir):
-    from clickbom_spark.ext.mutations import cow_upsert
+    from clickbom_spark.ext.manifest import VersionedLake
 
     (docs,) = load(spark, sf_dir, "documents")
     path = scratch_path("docs_merge_lake")
     shutil.rmtree(path, ignore_errors=True)
-    docs.repartitionByRange(4, "doc_id").write.parquet(path)
+    lake = VersionedLake.create(spark, path, docs, n_files=4)
     updates = docs.where(F.col("doc_id") % 50 == 0).withColumn(
         "source", F.lit("curated")
     )
@@ -1616,15 +1612,10 @@ def q_cow_upsert(spark, sf_dir):
         F.lit("curated").alias("source"),
         F.lit(7).cast("long").alias("n_chars"),
     )
-    cow_upsert(
-        spark,
-        path,
-        updates.select(*docs.columns).unionByName(inserts),
-        ["doc_id"],
-    )
-    back = spark.read.parquet(path)
+    lake.upsert(updates.select(*docs.columns).unionByName(inserts), ["doc_id"])
     return (
-        back.groupBy("source")
+        lake.read()
+        .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").cast("long").alias("total_chars"),

@@ -6,12 +6,17 @@ import os
 import sys
 from collections import OrderedDict
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import clickbom_spark.queries as Q  # noqa: E402
 
 
-def main() -> None:
+CATALOG = os.path.join(ROOT, "docs", "QUERIES.md")
+
+
+def render() -> str:
+    """The text of docs/QUERIES.md for the current registry."""
     by_mod: OrderedDict[str, list] = OrderedDict()
     for name, spec in Q.REGISTRY.items():
         mod = spec.fn.__module__.split(".")[-1]
@@ -39,10 +44,13 @@ means the query is in the bench.py headline set at sf0.1.
                 f"| `{s.name}` | {'✓' if s.oracle else '—'} |"
                 f" {'✓' if s.bench else ''} | {d} |"
             )
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(here, "docs", "QUERIES.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"wrote docs/QUERIES.md ({n} registry entries)")
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
+    with open(CATALOG, "w") as f:
+        f.write(render())
+    print(f"wrote docs/QUERIES.md ({len(Q.REGISTRY)} registry entries)")
 
 
 if __name__ == "__main__":

@@ -449,6 +449,35 @@ def test_with_global_rank_huge_bucket_count_capped_and_exact(
     assert ranks._MAX_BUCKETS == 256  # documented cap
 
 
+def test_with_global_rank_list_built_frame_has_no_size_estimate(spark):
+    """A frame built with createDataFrame over a Python list is a
+    LogicalRDD, which Spark sizes at Long.MaxValue.  That placeholder is
+    no estimate: the bucket count is the no-estimate default, not the
+    256-bucket maximum, and every rank stays exact."""
+    from pyspark.sql import Window
+
+    from clickbom_spark.ext import ranks
+    from clickbom_spark.ext.ranks import with_global_rank
+    from clickbom_spark.ext.scale import plan_size_bytes
+
+    df = spark.createDataFrame(
+        [(i, float(i % 3)) for i in range(10)], "id long, v double"
+    )
+    assert plan_size_bytes(df) is None
+    assert plan_size_bytes(spark.range(10)) > 0
+    assert ranks._default_buckets(df) == min(
+        spark.sparkContext.defaultParallelism, ranks._MAX_BUCKETS
+    )
+    out = with_global_rank(df, ["v", "id"], rank_col="rk")
+    got = {r["id"]: r["rk"] for r in out.select("id", "rk").collect()}
+    w = Window.orderBy("v", "id")
+    want = {
+        r["id"]: r["rk"]
+        for r in df.select("id", F.row_number().over(w).alias("rk")).collect()
+    }
+    assert got == want
+
+
 def test_with_global_rank_preserves_colliding_column_names(spark, monkeypatch):
     """An input that already has _bkt/_off/_total columns must come out
     with those columns intact (unique temp names, no clobber)."""

@@ -1255,6 +1255,14 @@ def test_delete_and_ttl_retain_null_predicate_rows(spark, tmp_path):
     assert {r["id"] for r in lake.read().collect()} == {1, 2, 4, 5}
     apply_ttl(lake, F.col("val") < 5.0)
     assert {r["id"] for r in lake.read().collect()} == {1, 2, 4}
+    # a TTL rollup keeps them verbatim too, on the same one-file layout
+    from clickbom_spark.ext.manifest import apply_ttl_rollup
+
+    rolled = VersionedLake.create(spark, str(tmp_path / "nr"), df, n_files=1)
+    apply_ttl_rollup(rolled, F.col("val") > 5.0, [], {"id": "min", "val": "sum"})
+    assert sorted(
+        (r["id"], r["val"]) for r in rolled.read().collect()
+    ) == [(1, 109.0), (2, None), (4, None), (5, 1.0)]
 
 class _FakeObjectStore:
     """A store offering ONLY conditional PUT (the S3 ``If-None-Match:

@@ -525,7 +525,9 @@ def test_train_quality_lr_gradient_is_partial_aggregated(spark):
 def test_cow_probe_pushes_predicate_to_scan(spark, tmp_path):
     """The mutation probe's scan must push the predicate into the
     parquet reader (zone maps then skip non-matching row groups) —
-    the property that makes COW cost scale with the mutation."""
+    the property that makes COW cost scale with the mutation.  The
+    probe has the shape of VersionedLake._rewrite_matching's: tag each
+    row with its file, then filter."""
     from pyspark.sql import functions as F
 
     path = str(tmp_path / "probe_lake")
@@ -534,9 +536,10 @@ def test_cow_probe_pushes_predicate_to_scan(spark, tmp_path):
     ).repartitionByRange(4, "id").write.parquet(path)
     probe = (
         spark.read.parquet(path)
+        .withColumn("_f", F.input_file_name())
         .where(F.col("id") < 50)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.count(F.lit(1)).alias("n"))
+        .select("_f")
+        .distinct()
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     pushed = [ln for ln in plan.split("\n") if "PushedFilters" in ln]

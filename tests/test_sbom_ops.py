@@ -231,7 +231,7 @@ def test_merge_pipeline_end_to_end(spark):
         license_mappings_path=fx("license-mappings-sample.json"),
     )
     out = merge_pipeline(
-        spark, FIXTURES, cfg, output_key="merged-output.json", deterministic=True
+        spark, FIXTURES, cfg, output_key="merged-output.json"
     )
     rows = out.collect()
     by_key = {(r["name"], r["version"], r["source"]): r for r in rows}
@@ -258,7 +258,7 @@ def test_merge_idempotence(spark):
     """merge(merge(x)) == merge(x) — SURVEY §5 property."""
     cfg = PipelineConfig(merge=True)
     once = merge_pipeline(
-        spark, FIXTURES, cfg, output_key="merged-output.json", deterministic=True
+        spark, FIXTURES, cfg, output_key="merged-output.json"
     )
     again = M.dedup_components(once, deterministic=True)
     a = sorted(map(tuple, once.collect()))
@@ -269,7 +269,7 @@ def test_merge_idempotence(spark):
 def test_assemble_merged_doc_golden(spark):
     cfg = PipelineConfig(merge=True)
     comps = merge_pipeline(
-        spark, FIXTURES, cfg, output_key="merged-output.json", deterministic=True
+        spark, FIXTURES, cfg, output_key="merged-output.json"
     )
     doc = M.assemble_merged_doc(
         comps,

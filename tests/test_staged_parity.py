@@ -85,6 +85,27 @@ def test_every_query_has_oracle():
     assert not [n for n, s in REGISTRY.items() if s.oracle is None]
 
 
+def test_query_catalog_is_in_sync():
+    """docs/QUERIES.md is what scripts/gen_query_catalog.py renders from
+    the registry: a changed description must come with a regenerated
+    catalog."""
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "gen_query_catalog",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "scripts",
+            "gen_query_catalog.py",
+        ),
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    with open(gen.CATALOG) as f:
+        assert f.read() == gen.render()
+
+
 def test_quantile_sketch_query_reports_tight_bounds(spark):
     """The sketch query's invariant columns (oracle-asserted as
     constants) must actually hold: weight conservation and rank error
