@@ -10128,6 +10128,8 @@ def _materialize_hier_views(spark, d: dict, frame) -> None:
     reference data by contract (ClickHouse holds it resident too), so
     this collect is bounded by the dictionary's own size, same as the
     broadcast the flat lookups rely on."""
+    from clickbom_spark.session import local_frame
+
     kcol, pcol = d["key"][0], d["hier"]
     parent = {}
     for r in frame.select(kcol, pcol).collect():
@@ -10160,14 +10162,13 @@ def _materialize_hier_views(spark, d: dict, frame) -> None:
     pairs = [
         (anc, k) for k, chain in chains for anc in chain[1:]
     ]
-    # createDataFrame carries no stats, so Catalyst alone won't pick
-    # broadcast for the correlated-lookup joins — hint it explicitly
-    # (safe: the closure is dictionary-sized by contract)
-    spark.createDataFrame(
-        chains, schema="__ck BIGINT, __chain ARRAY<BIGINT>"
+    # the closure is dictionary-sized by contract: broadcast it to the
+    # correlated-lookup joins even past the auto-broadcast threshold
+    local_frame(
+        spark, chains, "__ck BIGINT, __chain ARRAY<BIGINT>"
     ).hint("broadcast").createOrReplaceTempView(d["view"] + "__chains")
-    spark.createDataFrame(
-        pairs, schema="__anc BIGINT, __ck BIGINT"
+    local_frame(
+        spark, pairs, "__anc BIGINT, __ck BIGINT"
     ).hint("broadcast").createOrReplaceTempView(
         d["view"] + "__hier_pairs"
     )

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from clickbom_spark.ext.text import fan_out, let
+from clickbom_spark.session import local_frame
 
 
 def _to_double(v: Column) -> Column:
@@ -224,11 +225,10 @@ def train_centroids_kmeans(
         array_to_vector(_to_double(F.col(vec_col))).alias("features")
     )
     model = KMeans(k=n_lists, seed=seed, maxIter=max_iter).fit(feats)
-    spark = corpus.sparkSession
     centers = [
         (i + 1, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    cents = spark.createDataFrame(centers, "list_id int, cv array<double>")
+    cents = local_frame(corpus.sparkSession, centers, "list_id int, cv array<double>")
     return cents.withColumn("cnrm", norm(F.col("cv")))
 
 

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from clickbom_spark.session import local_frame
+
 # Internal columns: the per-partition total sentinel and the residual
 # MG counter (the weight a candidate survived with — carried so
 # summaries stay MERGEABLE across tree levels); the value column may
@@ -159,6 +161,25 @@ def _mg_sketch_frame(src: DataFrame, kernel, merge_kernel, schema, fanin: int):
     return sk
 
 
+def _candidates(spark, rows, val_field: StructField) -> DataFrame:
+    """The distinct candidate values of a collected MG sketch frame.
+
+    Sentinels have _PN > 0, or _CNT = 0 for an empty partition (a value
+    above the cutoff keeps a positive counter).  NOT a null value: the
+    Arrow return conversion folds float NaN into null, so a null in a
+    candidate row is a NaN (true nulls were filtered upstream)."""
+    col = val_field.name
+    return local_frame(
+        spark,
+        [
+            (r[col] if r[col] is not None else float("nan"),)
+            for r in rows
+            if r[_PN] == 0 and r[_CNT] > 0
+        ],
+        StructType([StructField(col, val_field.dataType, True)]),
+    ).distinct()
+
+
 def heavy_hitters(df: DataFrame, col: str, k: int = 16) -> DataFrame:
     """Exact items with frequency > N/k (N = non-null row count).
 
@@ -188,23 +209,11 @@ def heavy_hitters(df: DataFrame, col: str, k: int = 16) -> DataFrame:
     # rounds fold high partition counts first — so the collect is one
     # small job, like the BPE argmax: no persist/unpersist lifecycle
     # leaks into the caller's session, and N becomes a plan literal.
-    # Sentinel rows are marked by _PN > 0 (NOT by a null value: the
-    # Arrow return conversion folds float NaN into null, so a null in
-    # a CANDIDATE row can only mean NaN — true nulls were filtered
-    # upstream — and is mapped back here).
     rows = _mg_sketch_frame(
         src, _mg_partition(k, col), _mg_merge(k, col), schema, _MG_FANIN
     ).collect()
     n_total = sum(r[_PN] for r in rows)
-    spark = df.sparkSession
-    cands = spark.createDataFrame(
-        [
-            (r[col] if r[col] is not None else float("nan"),)
-            for r in rows
-            if r[_PN] == 0
-        ],
-        StructType([StructField(val_field.name, val_field.dataType, True)]),
-    ).distinct()
+    cands = _candidates(df.sparkSession, rows, val_field)
     counted = (
         src.join(F.broadcast(cands), col, "left_semi")
         .groupBy(col)
@@ -279,15 +288,7 @@ def heavy_hitters_weighted(
         _MG_FANIN,
     ).collect()
     w_total = sum(r[_PN] for r in rows)
-    spark = df.sparkSession
-    cands = spark.createDataFrame(
-        [
-            (r[col] if r[col] is not None else float("nan"),)
-            for r in rows
-            if r[_PN] == 0
-        ],
-        StructType([StructField(val_field.name, val_field.dataType, True)]),
-    ).distinct()
+    cands = _candidates(df.sparkSession, rows, val_field)
     counted = (
         src.join(F.broadcast(cands), col, "left_semi")
         .groupBy(col)
@@ -758,15 +759,7 @@ def heavy_hitters_from_parts(
     union_src = srcs[0]
     for s in srcs[1:]:
         union_src = union_src.unionByName(s)
-    spark = union_src.sparkSession
-    cands = spark.createDataFrame(
-        [
-            (r[col] if r[col] is not None else float("nan"),)
-            for r in rows
-            if r[_PN] == 0
-        ],
-        StructType([StructField(val_field.name, val_field.dataType, True)]),
-    ).distinct()
+    cands = _candidates(union_src.sparkSession, rows, val_field)
     counted = (
         union_src.join(F.broadcast(cands), col, "left_semi")
         .groupBy(col)

@@ -25,6 +25,9 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from clickbom_spark.io.formats import tsv_escape
 
 Transport = Callable[[str, bytes | None], tuple[int, bytes]]
 
@@ -120,7 +123,8 @@ class ClickHouseSink:
 
         Rows are pre-sorted within partitions on the MergeTree key; each
         partition posts one INSERT (entrypoint.sh:405-408 semantics,
-        partition-parallel).
+        partition-parallel).  Each row's TSV line is built in Catalyst
+        (``io.formats.tsv_escape``: NULL is ClickHouse's ``\\N``).
 
         Each INSERT carries an ``insert_deduplication_token`` derived
         from (table, per-job run id, partition id, TSV payload): a
@@ -142,30 +146,16 @@ class ClickHouseSink:
         target = f"{self.database}.{self.table}"
         transport = self.transport
         run_id = uuid.uuid4().hex  # one per insert_components job
-        df = components.select("name", "version", "license", "source").sortWithinPartitions(
-            "name", "version", "license"
-        )
+        cols = ["name", "version", "license", "source"]
+        line = F.concat_ws("\t", *[tsv_escape(F.col(c).cast("string")) for c in cols])
+        tsv = components.sortWithinPartitions(*cols[:3]).select(line.alias("line"))
 
         def send_partition(rows):
             import hashlib
 
             from pyspark import TaskContext
 
-            def esc(v):
-                if v is None:
-                    return ""
-                return (
-                    str(v)
-                    .replace("\\", "\\\\")
-                    .replace("\t", "\\t")
-                    .replace("\n", "\\n")
-                    .replace("\r", "\\r")
-                )
-
-            lines = [
-                "\t".join(esc(v) for v in (r["name"], r["version"], r["license"], r["source"]))
-                for r in rows
-            ]
+            lines = [r["line"] for r in rows]
             if not lines:
                 return
             payload = ("\n".join(lines) + "\n").encode()
@@ -187,4 +177,4 @@ class ClickHouseSink:
             if status != 200:
                 raise ClickHouseError(f"ClickHouse INSERT failed with HTTP {status}")
 
-        df.foreachPartition(send_partition)
+        tsv.foreachPartition(send_partition)

@@ -103,7 +103,8 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 _TSV_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
-def _tsv_escape(c):
+def tsv_escape(c):
+    """One ClickHouse TSV field: backslash, tab, LF, CR escaped; NULL as ``\\N``."""
     from pyspark.sql import functions as F
 
     s = F.replace(c, F.lit("\\"), F.lit("\\\\"))
@@ -139,7 +140,7 @@ def _to_text(df: DataFrame):
             c = F.date_format(c, _TSV_TS_FMT)
         else:
             c = c.cast("string")
-        cols.append(_tsv_escape(c))
+        cols.append(tsv_escape(c))
     return df.select(F.concat_ws("\t", *cols).alias("value"))
 
 

@@ -112,9 +112,14 @@ def fetch_github_sboms_distributed(
     from pyspark.sql import functions as F
 
     from clickbom_spark.schemas import sbom_schema
+    from clickbom_spark.session import local_frame
 
-    repos_df = spark.createDataFrame(
-        [(r,) for r in repositories], "repository string"
+    if not repositories:
+        # nothing to download (and repartition(0) would raise): the
+        # empty frame of the same columns, which collects without a job
+        return local_frame(spark, [], f"repository string, {sbom_schema().toDDL()}")
+    repos_df = local_frame(
+        spark, [(r,) for r in repositories], "repository string"
     ).repartition(min(len(repositories), 64))
 
     def fetch_partition(iterator):

@@ -16,10 +16,7 @@ chain wraps each strategy in ``nullif(x, '')``.
 
 Scale: explode is narrow (no shuffle); the license join broadcasts a
 ~1k-row dimension (the reference's awk in-memory hash join, J1) so the
-fact side never shuffles.  The dimension is built from an Arrow table,
-which Spark plans as a ``LocalRelation``: built from a Python list it
-would be a Python RDD, and every plan that broadcasts it would first run
-a Python-worker job to collect it.
+fact side never shuffles.
 """
 
 from __future__ import annotations
@@ -205,22 +202,16 @@ def load_license_mappings(spark, path: str) -> DataFrame:
 
     The reference's license-mappings.json is a single flat object; a
     driver-side parse into a small DataFrame is the right shape for a
-    broadcast dimension (948 entries — license-mappings.json:1-949).
-
-    The DataFrame is built from a ``pyarrow.Table``, so its plan is a
-    ``LocalRelation`` and the broadcast is collected on the JVM.  Built
-    from a Python list it is a Python RDD, and each plan that broadcasts
-    it pays a Python-worker job first (~0.3 s per sink execution, on the
-    same cores as the corpus scan).
+    broadcast dimension (948 entries — license-mappings.json:1-949),
+    built by ``session.local_frame``.
 
     Raises ``ValueError`` naming the file when the top level is not an
     object, or naming the first key whose value is not a string.
     """
     import json
 
-    import pyarrow as pa
-
     from clickbom_spark.schemas import license_mapping_schema
+    from clickbom_spark.session import local_frame
 
     with open(path) as f:
         d = json.load(f)
@@ -234,10 +225,4 @@ def load_license_mappings(spark, path: str) -> DataFrame:
             raise ValueError(
                 f"{path}: license for {k!r} must be a string, not {type(v).__name__}"
             )
-    table = pa.table(
-        {
-            "name": pa.array(list(d), pa.string()),
-            "license": pa.array(list(d.values()), pa.string()),
-        }
-    )
-    return spark.createDataFrame(table, license_mapping_schema())
+    return local_frame(spark, d.items(), license_mapping_schema())

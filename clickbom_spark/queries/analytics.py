@@ -21,9 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from clickbom_spark.queries import dec, dsum, epoch_us, load, query
+from clickbom_spark.session import local_frame
 
 
 @query(
@@ -432,20 +432,15 @@ ORDER BY v.band_name
 )
 def q_band_range_join(spark, sf_dir):
     (orders,) = load(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("p0_low", 0.0, 150000.0),
             ("p1_mid", 150000.0, 300000.0),
             ("p2_high", 300000.0, 450000.0),
             ("p3_top", 450000.0, 1000000.0),
         ],
-        T.StructType(
-            [
-                T.StructField("band_name", T.StringType()),
-                T.StructField("lo", T.DoubleType()),
-                T.StructField("hi", T.DoubleType()),
-            ]
-        ),
+        "band_name string, lo double, hi double",
     )
     return (
         orders.join(

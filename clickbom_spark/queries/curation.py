@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from clickbom_spark.ext import text as X
 from clickbom_spark.queries import load, query
+from clickbom_spark.session import local_frame
 
 # DuckDB twin of ext.text.tokens() — whitespace split, empties dropped.
 _TOKENS = "list_filter(string_split_regex(text, '\\s+'), x -> x <> '')"
@@ -446,7 +447,8 @@ ORDER BY raw
 )
 def q_fuzzy_match_nations(spark, sf_dir):
     (nation,) = load(spark, sf_dir, "nation")
-    dirty = spark.createDataFrame(
+    dirty = local_frame(
+        spark,
         [("NATION-3",), ("nation_5",), ("NATIN_12",), ("NATION_77X",),
          ("NTION_9",), ("COMPLETELY_DIFFERENT",)],
         "raw string",

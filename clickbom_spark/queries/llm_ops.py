@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from clickbom_spark.ext import text as X
 from clickbom_spark.queries import load, query
+from clickbom_spark.session import local_frame
 
 _NORM = (
     "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),"
@@ -441,7 +442,6 @@ def q_bpe_train(spark, sf_dir):
 
     (docs,) = load(spark, sf_dir, "documents")
     rules = bpe_train(docs, n_merges=_BPE_MERGES)
-    return spark.createDataFrame(
-        [(r, lf, rt, c) for (r, lf, rt, c) in rules],
-        "rank bigint, lft string, rgt string, cnt bigint",
+    return local_frame(
+        spark, rules, "rank bigint, lft string, rgt string, cnt bigint"
     )

@@ -15,6 +15,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from clickbom_spark.queries import load, query, scratch_path
+from clickbom_spark.session import local_frame
 
 
 
@@ -372,8 +373,8 @@ def q_quantile_sketch(spark, sf_dir):
                 bool(abs(rank / n - p) <= 0.02),
             )
         )
-    return spark.createDataFrame(
-        out,
+    return local_frame(
+        spark, out,
         "prob double, n bigint, weight_conserved boolean, "
         "rank_within_bound boolean",
     )
@@ -1008,8 +1009,8 @@ def q_train_quality_lr(spark, sf_dir):
         stats = logreg_stats(features, _LR_FEATS, "y", w).collect()[0]
     finally:
         features.unpersist()
-    return spark.createDataFrame(
-        [(w[0], w[1], w[2], w[3], stats["n"], stats["n_correct"])],
+    return local_frame(
+        spark, [(w[0], w[1], w[2], w[3], stats["n"], stats["n_correct"])],
         "w0 double, w1 double, w2 double, w3 double, n bigint, "
         "n_correct bigint",
     )
@@ -1732,8 +1733,8 @@ def q_change_feed(spark, sf_dir):
         both.groupBy(F.col("_change_type").alias("change_type"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    spine = spark.createDataFrame(
-        [("insert",), ("delete",), ("update_pre",), ("update_post",)],
+    spine = local_frame(
+        spark, [("insert",), ("delete",), ("update_pre",), ("update_post",)],
         "change_type string",
     )
     return (

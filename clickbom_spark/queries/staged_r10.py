@@ -38,6 +38,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from clickbom_spark.queries import load, query
+from clickbom_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -491,8 +492,8 @@ def q_stream_scd2_incremental(spark, sf_dir):
     dim = VersionedLake.create(
         spark,
         os.path.join(base, "dim"),
-        spark.createDataFrame(
-            [],
+        local_frame(
+            spark, [],
             "user_id long, seg string, score long, valid_from long, "
             "valid_to long, is_current boolean",
         ),

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from clickbom_spark.dialect import _UNIQ_STATE_SCALE
 from clickbom_spark.queries import load, query
+from clickbom_spark.session import local_frame
 
 
 _CENTS = "toInt64(round(value * 100))"
@@ -1015,9 +1016,7 @@ def q_token_pmi(spark, sf_dir):
     top_rows = (
         wf.orderBy(F.col("df").desc(), "w").limit(_PMI_TOP_WORDS).collect()
     )
-    top = spark.createDataFrame(
-        [(r.w, r.df) for r in top_rows], "w string, df long"
-    )
+    top = local_frame(spark, [(r.w, r.df) for r in top_rows], "w string, df long")
     top_lit = F.array(*[F.lit(r.w) for r in top_rows])
     pairs = (
         words.select(

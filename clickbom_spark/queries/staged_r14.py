@@ -46,6 +46,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from clickbom_spark.queries import load, query
+from clickbom_spark.session import local_frame
 
 
 _CENTS = "toInt64(round(value * 100))"
@@ -321,8 +322,8 @@ def q_lake_time_travel_diff(spark, sf_dir):
         rows = out.collect()
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "event_type string, n_v1 bigint, n_v2 bigint, "
         "added_rows bigint, added_cents bigint",
     ).orderBy("event_type")
@@ -1417,8 +1418,8 @@ def q_ddl_alter_migration(spark, sf_dir):
         rows = out.collect()  # materialize before cleanup
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "source string, n bigint, cents bigint"
+    return local_frame(
+        spark, rows, "source string, n bigint, cents bigint"
     ).orderBy("source")
 
 

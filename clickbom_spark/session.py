@@ -81,6 +81,31 @@ def get_spark(
     return spark
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """Driver-side ``rows`` (tuples in ``schema`` order; ``schema`` a
+    DDL string or ``StructType``) as a plan leaf — the one way library
+    code turns Python values into a DataFrame.
+
+    The rows become a ``pyarrow.Table``, which Spark plans as a
+    ``LocalRelation``: exact size statistics (the optimizer can
+    broadcast it and size operators from it), read on the JVM.  Built
+    from a Python list the frame would be a Python-RDD ``LogicalRDD``
+    sized at Long.MaxValue bytes, and every execution of a plan over it
+    would first run Python-worker tasks to read it.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
+
+
 # (session id, sf_dir, table) → DataFrame.  A DataFrame is just an
 # analyzed plan — caching it skips the per-call parquet footer read and
 # conf RPC when a harness runs many registry queries over the same

@@ -234,6 +234,23 @@ def test_github_distributed_fanout(spark):
     assert names == ["dep-of-app1", "dep-of-app2", "dep-of-app3"]
 
 
+def test_github_distributed_fanout_empty_repo_list(spark):
+    """No repositories: the empty frame with the fan-out's columns, a
+    LocalRelation that collects without a job."""
+    from clickbom_spark.io.sources import fetch_github_sboms_distributed
+
+    docs = fetch_github_sboms_distributed(
+        spark, [], transport=_picklable_github_transport
+    )
+    one = fetch_github_sboms_distributed(
+        spark, ["o/app1"], transport=_picklable_github_transport
+    )
+    assert docs.schema == one.schema
+    plan = docs._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert docs.collect() == []
+
+
 # ---- K2-K4 ClickHouse ----
 
 
@@ -319,15 +336,24 @@ def test_clickhouse_insert_tsv_end_to_end(spark, tmp_path):
             "t",
         )
         df = spark.createDataFrame(
-            [("lodash", "4.17.21", "MIT", "repo-a"), ("a\tb", "1", "L\n2", "s")],
+            [
+                ("lodash", "4.17.21", "MIT", "repo-a"),
+                ("a\tb", "1", "L\n2", "s"),
+                ("c\\d", None, "x\ry", "naïve-源"),
+            ],
             "name string, version string, license string, source string",
         ).repartition(2)
         sink.insert_components(df)
         inserts = [b for q, b in received if q.startswith("INSERT INTO db.t")]
         assert inserts, f"no INSERTs received: {received}"
         body = b"".join(inserts).decode()
-        assert "lodash\t4.17.21\tMIT\trepo-a" in body
-        assert "a\\tb" in body and "L\\n2" in body  # TSV escaping
+        # backslash, tab, LF and CR are escaped; NULL is ClickHouse's \N
+        assert sorted(body.split("\n")) == [
+            "",
+            "a\\tb\t1\tL\\n2\ts",
+            "c\\\\d\t\\N\tx\\ry\tnaïve-源",
+            "lodash\t4.17.21\tMIT\trepo-a",
+        ]
     finally:
         srv.shutdown()
 

@@ -106,3 +106,34 @@ def test_no_library_definition_is_dead():
         ]
     dead = [d for d in defined if d.rsplit("::", 1)[1] not in referenced]
     assert dead == [], f"top-level definitions nothing references: {dead}"
+
+
+def test_only_local_frame_builds_frames_from_driver_rows():
+    """Driver-side rows enter a plan one way: ``session.local_frame``
+    builds an Arrow ``LocalRelation``.  A ``createDataFrame`` call
+    anywhere else in the library is a second way — a list-built
+    Python-RDD leaf with no size estimate, read by Python workers on
+    every execution."""
+    offenders = []
+    for path in _py_files(("clickbom_spark",)):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = str(path.relative_to(REPO))
+        allowed = set()
+        if rel == "clickbom_spark/session.py":
+            allowed = {
+                id(n)
+                for fn in tree.body
+                if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame"
+                for n in ast.walk(fn)
+            }
+        offenders += [
+            f"{rel}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+            and id(node) not in allowed
+        ]
+    assert offenders == [], (
+        f"createDataFrame outside session.local_frame: {offenders}"
+    )

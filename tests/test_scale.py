@@ -194,3 +194,36 @@ def test_compact_files_binpacks_and_preserves_rows(spark, tmp_path):
     assert back.count() == events.count()
     assert back.exceptAll(events).count() == 0
     assert events.exceptAll(back).count() == 0
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([(1,), (2**40,), (None,)], "v long"),
+        ([(1,), (-7,)], "v int"),
+        ([("a",), ("\té",), (None,)], "v string"),
+        ([(True,), (False,), (None,)], "v boolean"),
+        ([(1.5,), (float("nan"),), (None,)], "v double"),
+        ([(1, [0.5, float("nan")]), (2, [])], "id int, cv array<double>"),
+        ([], "id long, name string"),
+    ],
+    ids=["long", "int", "string", "boolean", "double_nan", "array_double", "empty"],
+)
+def test_local_frame_is_a_sized_local_relation(spark, rows, schema):
+    """Driver rows become a LocalRelation with a finite size estimate,
+    and read back exactly (NaN included)."""
+    import math
+
+    from clickbom_spark.ext.scale import plan_size_bytes
+    from clickbom_spark.session import local_frame
+
+    def norm(v):
+        if isinstance(v, float) and math.isnan(v):
+            return "NaN"
+        return [norm(x) for x in v] if isinstance(v, (list, tuple)) else v
+
+    df = local_frame(spark, rows, schema)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert plan_size_bytes(df) is not None
+    assert [norm(r) for r in df.collect()] == [norm(r) for r in rows]

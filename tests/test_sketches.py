@@ -341,6 +341,36 @@ def test_heavy_hitters_merge_tree_bounds_driver_rows(spark, monkeypatch):
     assert got == _exact(df, "v", k=k)
 
 
+def test_heavy_hitters_long_column_through_empty_merge_partition(
+    spark, monkeypatch
+):
+    """A merge round can leave a partition empty, and its summary is a
+    lone (NULL, 0, 0) sentinel.  It is not a candidate: mapped to the
+    NaN stand-in it could not enter a long value column."""
+    from clickbom_spark.ext import sketches
+    from clickbom_spark.ext.sketches import (
+        _CNT,
+        _PN,
+        _mg_merge,
+        _mg_partition,
+        _mg_sketch_frame,
+    )
+
+    codes = {v: i for i, v in enumerate(sorted({v for _, v in _skewed_rows() if v}))}
+    df = spark.createDataFrame(
+        [(i, codes.get(v)) for i, v in _skewed_rows()], "id long, v long"
+    ).repartition(37)
+    src = df.select("v").where(F.col("v").isNotNull())
+    schema = f"v long, {_CNT} long, {_PN} long"
+    rows = _mg_sketch_frame(
+        src, _mg_partition(8, "v"), _mg_merge(8, "v"), schema, 4
+    ).collect()
+    assert (None, 0, 0) in [tuple(r) for r in rows]  # the empty partition
+    monkeypatch.setattr(sketches, "_MG_FANIN", 4)
+    got = {(r["v"], r["cnt"]) for r in heavy_hitters(df, "v", k=8).collect()}
+    assert got == _exact(df, "v", k=8)
+
+
 def test_weighted_heavy_hitters_merge_tree_exact(spark, monkeypatch):
     """The weighted twin through forced merge rounds: residual WEIGHTS
     ride the merge, so the pigeonhole-on-weights superset (and hence
